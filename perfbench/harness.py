@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import gc
 import json
-import math
 import os
 import sys
 import threading
@@ -17,6 +16,8 @@ import time
 import traceback
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
+
+import numpy as np
 
 #: py4j's garbage-collection detach command (``MEMORY_COMMAND_NAME`` +
 #: ``MEMORY_DEL_SUBCOMMAND_NAME``).  The Python GC sends one whenever a
@@ -26,17 +27,11 @@ GC_DETACH_PREFIX = "m\nd\n"
 
 
 def percentile(values: list[float], q: float) -> float:
-    """Linear-interpolated percentile (numpy's default method), ``q`` in
-    [0, 100].  Raises on an empty sample instead of inventing a value."""
+    """numpy's linear-interpolated percentile, ``q`` in [0, 100].  Raises
+    on an empty sample instead of inventing a value."""
     if not values:
         raise ValueError("percentile of an empty sample")
-    if not 0.0 <= q <= 100.0:
-        raise ValueError(f"percentile q out of range: {q}")
-    xs = sorted(values)
-    pos = (len(xs) - 1) * q / 100.0
-    lo = math.floor(pos)
-    hi = min(lo + 1, len(xs) - 1)
-    return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
+    return float(np.percentile(values, q))
 
 
 def median(values: list[float]) -> float:
@@ -46,17 +41,17 @@ def median(values: list[float]) -> float:
 def hd_median(values: list[float]) -> float:
     """Harrell-Davis estimate of the median: every order statistic
     weighted by the Beta((n+1)/2, (n+1)/2) mass over its slot
-    [(i-1)/n, i/n] (midpoint rule, 100 points per slot).  With few
-    samples of mixed operations the plain middle value jumps whenever
-    two neighbouring operations swap rank; this estimate moves smoothly."""
+    [(i-1)/n, i/n] (midpoint rule, 100 points per slot).  With 7 or 11
+    mixed operations per run the plain middle value is one operation's
+    latency; this estimate leans on its neighbours too."""
     if not values:
         raise ValueError("median of an empty sample")
     xs = sorted(values)
     n, per = len(xs), 100
     a = (n + 1) / 2.0
-    dens = [(t * (1.0 - t)) ** (a - 1.0) for t in ((k + 0.5) / (n * per) for k in range(n * per))]
-    total = sum(dens)
-    return sum(x * sum(dens[i * per:(i + 1) * per]) for i, x in enumerate(xs)) / total
+    t = (np.arange(n * per) + 0.5) / (n * per)
+    w = ((t * (1.0 - t)) ** (a - 1.0)).reshape(n, per).sum(axis=1)
+    return float(np.dot(xs, w) / w.sum())
 
 
 class Py4jCounter:
@@ -217,14 +212,18 @@ class SparkProbe:
         return {int(i) for i in ids}
 
     def collect(self, first_job: int, last_job: int, op_start: float, op_end: float) -> OpStats:
-        st = OpStats()
+        """Statistics of jobs ``[first_job, last_job)``.  The status store
+        is filled asynchronously from the listener bus, so the bus is
+        drained first: otherwise a job whose start event, or a stage whose
+        last task-end events, are still queued would be read short."""
+        self._jsc_sc.listenerBus().waitUntilEmpty()
+        st = OpStats(jobs=last_job - first_job)
         seen_stages: set[int] = set()
         for jid in range(first_job, last_job):
             try:
                 job = self.store.job(jid)
-            except Exception:  # noqa: BLE001 - evicted or never registered
+            except Exception:  # noqa: BLE001 - evicted from the store
                 continue
-            st.jobs += 1
             sub, done = job.submissionTime(), job.completionTime()
             if sub.isDefined():
                 lo = sub.get().getTime() / 1000.0

@@ -38,9 +38,6 @@ import harness as H  # noqa: E402
 import metrics as M  # noqa: E402
 import workloads as W  # noqa: E402
 
-#: Repeats of the input generation inside set-up; set-up time reports
-#: their median (the session start cannot repeat inside one process).
-INPUT_REPEATS = 3
 DRIVER_MEMORY = "2g"
 
 
@@ -127,11 +124,9 @@ def run_one(args) -> dict:
         from f1_data_engineering_spark.session import get_spark
 
         sf_dir = os.path.join(tmp, "sf0.1")
-        gen_times = []
-        for _ in range(INPUT_REPEATS):
-            t = time.time()
-            W.datagen.write_tables(sf_dir)
-            gen_times.append(time.time() - t)
+        t = time.time()
+        W.datagen.write_tables(sf_dir)
+        gen_s = time.time() - t
         t = time.time()
         spark = get_spark(
             app_name=f"perfbench-{args.workload}",
@@ -153,7 +148,7 @@ def run_one(args) -> dict:
         warmup_s = time.time() - t
         setup = {
             "session.start_s": start_s,
-            "input.gen_s": H.median(gen_times),
+            "input.gen_s": gen_s,
             "session.warmup_s": warmup_s,
             "process_s": time.time() - T_PROCESS,
         }

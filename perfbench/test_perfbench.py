@@ -28,20 +28,14 @@ UNIT = r"^[A-Za-z0-9_/%.-]{1,16}$"
 # -- percentile math -------------------------------------------------------
 
 
-def test_percentile_matches_numpy_linear():
-    np = pytest.importorskip("numpy")
-    rng = np.random.default_rng(3)
-    for n in (1, 2, 7, 20, 101):
-        xs = list(rng.exponential(1.0, n))
-        for q in (0, 10, 50, 90, 100):
-            assert H.percentile(xs, q) == pytest.approx(float(np.percentile(xs, q)))
-
-
 def test_percentile_small_samples_and_errors():
     assert H.median([3.0, 1.0, 2.0]) == 2.0
     assert H.median([1.0, 2.0]) == 1.5
     assert H.percentile([5.0], 90) == 5.0
     assert H.percentile([1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0], 90) == pytest.approx(9.1)
+    # seven operations, as in one iterative cycle: p90 interpolates
+    # between the two slowest
+    assert H.percentile([7.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0], 90) == pytest.approx(6.4)
     with pytest.raises(ValueError):
         H.percentile([], 50)
     with pytest.raises(ValueError):
@@ -93,6 +87,7 @@ def test_failure_counting_and_sample_count(capsys):
     assert m["setup_s"]["value"] == 8.0
     assert m["op_p50_s"]["value"] == pytest.approx(H.hd_median([1.0, 2.0, 3.0, 0.5]))
     assert 1.0 < m["op_p50_s"]["value"] < 2.0
+    assert m["op_p90_s"]["value"] == pytest.approx(2.7)
     assert m["ops_per_s"]["value"] == pytest.approx(4 / 6.5)
     assert "n=4 ops" in capsys.readouterr().err
 
