@@ -185,6 +185,7 @@ def build_result(args, runner, ctx, lake, setup, failed_kinds, run_wall, cores, 
     else:
         values, units = end_to_end(runner, setup, mem), END_TO_END
     ctx.summary["memory_mb"] = {k: round(v, 1) for k, v in mem.get("parts", {}).items()}
+    ctx.summary["memory_gc_rounds"] = mem.get("gc_rounds")
     _summarize(args, runner, ctx, setup, values, units, run_wall, failed)
     return {
         "correct": failed == 0,

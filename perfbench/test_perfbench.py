@@ -33,8 +33,7 @@ def test_percentile_small_samples_and_errors():
     assert H.median([1.0, 2.0]) == 1.5
     assert H.percentile([5.0], 90) == 5.0
     assert H.percentile([1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0], 90) == pytest.approx(9.1)
-    # seven operations, as in one iterative cycle: p90 interpolates
-    # between the two slowest
+    # seven operations: p90 interpolates between the two slowest
     assert H.percentile([7.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0], 90) == pytest.approx(6.4)
     with pytest.raises(ValueError):
         H.percentile([], 50)
