@@ -28,42 +28,37 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from f1_data_engineering_spark.operators import relational as R
-from f1_data_engineering_spark.operators import textops as TX
-from f1_data_engineering_spark.operators import dedup as DD
-from f1_data_engineering_spark.operators import similarity as SIM
-from f1_data_engineering_spark.operators import timeops as TO
-from f1_data_engineering_spark.operators import multimodal as MM
-from f1_data_engineering_spark.operators import pandas_ops as PD
-from f1_data_engineering_spark.operators import profiling as PF
-from f1_data_engineering_spark.operators import tpch_shapes as TS
-from f1_data_engineering_spark.operators import tpch_shapes2 as T2
-from f1_data_engineering_spark.operators import trainprep as TP
-from f1_data_engineering_spark.operators import decontam as DC
-from f1_data_engineering_spark.operators import merge as MG
-from f1_data_engineering_spark.operators import layout as LY
-from f1_data_engineering_spark.operators import integrity as IG
-from f1_data_engineering_spark.operators import udtf_ops as UT
-from f1_data_engineering_spark.operators import analytics as AN
-from f1_data_engineering_spark.operators import analytics2 as A2
-from f1_data_engineering_spark.operators import analytics3 as A3
-from f1_data_engineering_spark.operators import analytics4 as A4
-from f1_data_engineering_spark.operators import f1_fixture_queries as FX
-from f1_data_engineering_spark.operators import graphops as GR
-from f1_data_engineering_spark.operators import curation as CU
-from f1_data_engineering_spark.operators import analytics5 as A5
-from f1_data_engineering_spark.operators import analytics6 as A6
-from f1_data_engineering_spark.operators import curation_incremental as CI
-from f1_data_engineering_spark.operators import analytics7 as A7
-from f1_data_engineering_spark.operators import lakedml as LD
-from f1_data_engineering_spark.operators import lakeperf as LP
-from f1_data_engineering_spark.operators import lakemgmt as LM
-from f1_data_engineering_spark.streaming import join_stream as JS
+from f1_data_engineering_spark.operators import (
+    analytics, analytics2, analytics3, analytics4, analytics5, analytics6,
+    analytics7, curation, curation_incremental, decontam, dedup,
+    f1_fixture_queries, graphops, integrity, lakedml, lakemgmt, lakeperf,
+    layout, merge, multimodal, pandas_ops, profiling, relational, similarity,
+    textops, timeops, tpch_shapes, tpch_shapes2, trainprep, udtf_ops,
+)
+from f1_data_engineering_spark.streaming import join_stream
+
+#: Modules that own registered queries, in registration order.  Each
+#: ends with a ``QUERIES`` table mapping a query function to its DuckDB
+#: oracle; the query is served under the function's ``__name__``.
+QUERY_MODULES = (
+    f1_fixture_queries, relational, analytics, tpch_shapes, tpch_shapes2,
+    analytics2, timeops, textops, dedup, similarity, multimodal, pandas_ops,
+    udtf_ops, integrity, trainprep, layout, decontam, merge, lakedml,
+    lakeperf, profiling, analytics3, graphops, curation, analytics4,
+    analytics5, join_stream, analytics6, curation_incremental, analytics7,
+    lakemgmt,
+)
+
+#: The one query served under another function's name: the registered
+#: 500-query shape of ``ann_topk_vectorized``.
+_RENAMED = {
+    similarity.ann_topk_vectorized_500: similarity.ann_topk_vectorized.__name__
+}
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-shaped pricing summary) on sf0.001."""
-    return R.q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    return relational.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
 def _driver_green_rounds() -> dict[str, int]:
@@ -143,12 +138,12 @@ CHANGED_ORACLES = CHANGED
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator family from SURVEY.md §2.
+    """Every registered query (see ``QUERY_MODULES``), in gate order.
 
     Window rotation invariants (the driver gate truncates at ~50
     entries per round):
 
-    1. never-driver-green names first (oracle-backed before rows-only);
+    1. never-driver-green names first;
     2. then queries whose ORACLE TEXT changed this round (self-declared
        list below) — green-under-old-text is not green;
     3. then the age cap: any green row older than
@@ -160,531 +155,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     base = _base_queries()
     latest = _driver_green_rounds()
     this_round = max(latest.values(), default=0) + 1
-    changed_this_round = CHANGED_ORACLES
-    rows_only = set(base) - set(oracle_sql())
 
     def rank(name: str) -> tuple[int, int, str]:
         if name not in latest:
-            return ((1, 0, name) if name in rows_only else (0, 0, name))
-        if name in changed_this_round:
+            return (0, 0, name)
+        if name in CHANGED:
             return (2, 0, name)
         age = this_round - latest[name]
         if age > MAX_GREEN_AGE_ROUNDS:
             return (3, latest[name], name)  # oldest green rounds first
-        return (4, 0, "")  # stable registration order
+        return (4, 0, "")  # stable sort keeps registration order
 
-    names = list(base)
+    return {k: base[k] for k in sorted(base, key=rank)}
+
+
+def _registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
     return {
-        k: base[k]
-        for k in sorted(names, key=lambda n: (rank(n), names.index(n)))
+        _RENAMED.get(fn, fn.__name__): (fn, sql)
+        for mod in QUERY_MODULES
+        for fn, sql in mod.QUERIES.items()
     }
 
 
 def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # F1-native surface (reference's own workload; fixture-backed —
-        # see operators/f1_fixture_queries.py; sf_dir ignored)
-        "f1_lap_times": FX.f1_lap_times,
-        "f1_tyre_stints": FX.f1_tyre_stints,
-        "f1_stint_pivot": FX.f1_stint_pivot,
-        "f1_weather_trends": FX.f1_weather_trends,
-        "f1_lap_telemetry_summary": FX.f1_lap_telemetry_summary,
-        "f1_stint_chart_rows": FX.f1_stint_chart_rows,
-        "f1_telemetry_compare": FX.f1_telemetry_compare,
-        # §2.4 aggregation
-        "q1_pricing_summary": R.q1_pricing_summary,
-        "stint_summary": R.stint_summary,
-        "agg_stats": R.agg_stats,
-        "pivot_returnflag": R.pivot_returnflag,
-        "rollup_order_priority": R.rollup_order_priority,
-        "q6_forecast_revenue": R.q6_forecast_revenue,
-        "q17_small_quantity_revenue": R.q17_small_quantity_revenue,
-        "q18_large_orders": R.q18_large_orders,
-        "cube_status_priority": R.cube_status_priority,
-        "grouping_sets_revenue": AN.grouping_sets_revenue,
-        "modal_quantity_per_flag": AN.modal_quantity_per_flag,
-        "q3_shipping_priority": TS.q3_shipping_priority,
-        "q4_late_shipment_orders": TS.q4_late_shipment_orders,
-        "q12_priority_by_month": TS.q12_priority_by_month,
-        "q14_promo_revenue": TS.q14_promo_revenue,
-        "q16_supplier_variety": TS.q16_supplier_variety,
-        "q19_disjunctive_revenue": TS.q19_disjunctive_revenue,
-        "q22_idle_customers": TS.q22_idle_customers,
-        "q2_min_cost_supplier": T2.q2_min_cost_supplier,
-        "q5_local_supplier_volume": T2.q5_local_supplier_volume,
-        "q7_nation_trade_flows": T2.q7_nation_trade_flows,
-        "q8_market_share": T2.q8_market_share,
-        "q9_product_profit": T2.q9_product_profit,
-        "q10_returned_items": T2.q10_returned_items,
-        "q11_important_parts": T2.q11_important_parts,
-        "q15_top_supplier": T2.q15_top_supplier,
-        "q20_heavy_shippers": T2.q20_heavy_shippers,
-        "q21_waiting_suppliers": T2.q21_waiting_suppliers,
-        # §2.2 projection / filter
-        "filter_project": R.filter_project,
-        # §2.3 joins
-        "join_customer_nation_region": R.join_customer_nation_region,
-        "revenue_by_nation": R.revenue_by_nation,
-        "semi_anti_join": R.semi_anti_join,
-        "outer_join_order_counts": R.outer_join_order_counts,
-        "range_join_events_orders": R.range_join_events_orders,
-        "null_safe_event_join": AN.null_safe_event_join,
-        # §2.5 windows
-        "window_value_changes": R.window_value_changes,
-        "running_total": R.running_total,
-        "rank_orders_per_customer": R.rank_orders_per_customer,
-        "orderkey_islands": AN.orderkey_islands,
-        "window_rank_suite": AN.window_rank_suite,
-        "daily_order_spine": AN.daily_order_spine,
-        "event_type_map_stats": AN.event_type_map_stats,
-        # funnel / sketch / weighted-sample / recursive-CTE wave
-        "event_funnel": A2.event_funnel,
-        "countmin_sketch": A2.countmin_sketch,
-        "priority_sample_orders": A2.priority_sample_orders,
-        "decayed_value_recursive": A2.decayed_value_recursive,
-        "fuzzy_name_pairs": A2.fuzzy_name_pairs,
-        "frequent_event_types": A2.frequent_event_types,
-        # §2.6 sort / limit / top-k
-        "top_orders": R.top_orders,
-        "distinct_sorted_types": R.distinct_sorted_types,
-        "stride_downsample": R.stride_downsample,
-        # §2.7 set ops
-        "set_ops_keys": R.set_ops_keys,
-        "unpivot_measures": R.unpivot_measures,
-        # JSON scalar surface
-        "json_props_extract": R.json_props_extract,
-        "variant_props_rollup": R.variant_props_rollup,
-        # §2.8 time-format expression library (F2/F4/F9 round-trip, F5/F6/F8)
-        "time_format_roundtrip": TO.time_format_roundtrip,
-        "wallclock_formats": TO.wallclock_formats,
-        "boolean_normalize": TO.boolean_normalize,
-        "hourly_event_rollup": TO.hourly_event_rollup,
-        "retention_cohorts": TO.retention_cohorts,
-        "sessionize_events": TO.sessionize_events,
-        "asof_join_purchase": TO.asof_join_purchase,
-        "latest_event_state": TO.latest_event_state,
-        "moving_hour_sum": TO.moving_hour_sum,
-        "value_percentiles": TO.value_percentiles,
-        "value_histogram": TO.value_histogram,
-        "salted_user_counts": TO.salted_user_counts,
-        # text analysis (beyond-reference, documents table)
-        "text_stats": TX.text_stats,
-        "language_id_confusion": TX.language_id_confusion,
-        "quality_scores": TX.quality_scores,
-        "doc_fingerprints": TX.doc_fingerprints,
-        "top_ngrams": TX.top_ngrams,
-        "corpus_quality_gate": TX.corpus_quality_gate,
-        "repetition_stats": TX.repetition_stats,
-        "pii_scrub_stats": TX.pii_scrub_stats,
-        "tfidf_top_terms": TX.tfidf_top_terms,
-        "bm25_rank": TX.bm25_rank,
-        "lm_perplexity": TX.lm_perplexity,
-        "dataset_card": TX.dataset_card,
-        "tfidf_cosine_pairs": TX.tfidf_cosine_pairs,
-        "stop_shingle_stats": TX.stop_shingle_stats,
-        "inverted_index": TX.inverted_index,
-        "zipf_fit": TX.zipf_fit,
-        "source_overlap_matrix": TX.source_overlap_matrix,
-        "gopher_rules": TX.gopher_rules,
-        "value_quartiles": TO.value_quartiles,
-        # deduplication (beyond-reference)
-        "dedup_exact": DD.dedup_exact,
-        "ngram_jaccard_pairs": DD.ngram_jaccard_pairs,
-        "prefix_filter_jaccard": DD.prefix_filter_jaccard,
-        "minhash_signatures": DD.minhash_signatures,
-        "minhash_lsh_pairs": DD.minhash_lsh_pairs,
-        "simhash_64": DD.simhash_64,
-        "simhash_near_dup_pairs": DD.simhash_near_dup_pairs,
-        "dedup_clusters": DD.dedup_clusters,  # iterative; recursive-CTE oracle
-        "dedup_keep_first": DD.dedup_keep_first,
-        "dedup_keep_canonical": DD.dedup_keep_canonical,
-        "segment_dedup_stats": DD.segment_dedup_stats,
-        "segment_dedup_clean": DD.segment_dedup_clean,
-        "cross_doc_ngram_dup": DD.cross_doc_ngram_dup,
-        # similarity search (beyond-reference, embeddings table)
-        "ann_bruteforce_topk": SIM.ann_bruteforce_topk,
-        # Arrow fast path: BLAS prune + exact expression rescore, so
-        # since round 7 it is bit-identical to ann_bruteforce_topk and
-        # shares its DuckDB oracle (judge r6 item 1)
-        "ann_topk_vectorized": SIM.ann_topk_vectorized_500,
-        "lsh_bucket_histogram": SIM.lsh_bucket_histogram,
-        "embedding_nearest_neighbor": SIM.embedding_nearest_neighbor,
-        "embedding_centroids": SIM.embedding_centroids,
-        "embedding_near_dup_pairs": SIM.embedding_near_dup_pairs,
-        "lsh_multiprobe_ann": SIM.lsh_multiprobe_ann,
-        "ivf_ann": SIM.ivf_ann,
-        "embedding_quantize_int8": SIM.embedding_quantize_int8,
-        # kmeans_embeddings (float Lloyd) is a library function + pytest
-        # twin only since round 7: its centroid means carry
-        # summation-order ulps no oracle can re-derive, and the full
-        # algorithm is already driver-hash-verified via the
-        # decimal-exact kmeans_exact_lloyd below (judge r6 item 2).
-        # multimodal plumbing (binary columns + typed metadata)
-        "blob_metadata": MM.blob_metadata,
-        "frame_sample_census": MM.frame_sample_census,
-        # Arrow-batched grouped-map UDF surface
-        "zscore_by_user": PD.zscore_by_user,
-        # grouped-AGG pandas UDF (UDAF leg) + Python UDTF leg
-        "user_value_median_iqr": PD.user_value_median_iqr,
-        "sentence_split": UT.sentence_split,
-        # referential-integrity audit
-        "fk_orphan_audit": IG.fk_orphan_audit,
-        # training-data prep
-        "build_vocab": TP.build_vocab,
-        "bpe_merge_candidates": TP.bpe_merge_candidates,
-        "bpe_train": TP.bpe_train,  # iterative; unrolled-CTE oracle (r7)
-        "pack_sequences": TP.pack_sequences,
-        "dataset_splits": TP.dataset_splits,
-        "chunk_documents": TP.chunk_documents,
-        "token_budget_mix": TP.token_budget_mix,
-        "dsir_importance_weights": TP.dsir_importance_weights,
-        # data-layout optimization (z-order clustering, compaction)
-        "zorder_tile_stats": LY.zorder_tile_stats,
-        "compaction_plan": LY.compaction_plan,
-        # benchmark decontamination (beyond-reference)
-        "decontaminate_ngrams": DC.decontaminate_ngrams,
-        "contamination_summary": DC.contamination_summary,
-        # incremental MERGE / SCD2 dimension maintenance
-        "scd2_customer_merge": MG.scd2_customer_merge,
-        # round-8: row-level DML on the versioned lake (copy-on-write
-        # MERGE/DELETE/UPDATE with time travel across rewrites)
-        "merge_upsert_orders": LD.merge_upsert_orders,
-        "dml_lifecycle_orders": LD.dml_lifecycle_orders,
-        "dml_mor_delete_orders": LD.dml_mor_delete_orders,
-        "dml_change_feed_orders": LD.dml_change_feed_orders,
-        "schema_evolution_orders": LD.schema_evolution_orders,
-        "cdc_apply_rollup_orders": LD.cdc_apply_rollup_orders,
-        "bloom_point_lookup_orders": LP.bloom_point_lookup_orders,
-        "zorder_pruning_orders": LP.zorder_pruning_orders,
-        # round-9: RESTORE TABLE ... TO VERSION AS OF (log-arithmetic
-        # rollback, no data copied; in-query asserts by-reference)
-        "lake_restore_orders": LD.lake_restore_orders,
-        # round-9b: selective small-file compaction, dataChange=false
-        # (feed leg proves the layout commit is invisible to CDC)
-        "small_compaction_orders": LD.small_compaction_orders,
-        "scd2_point_in_time": MG.scd2_point_in_time,
-        # profiling / sampling / sketches
-        "profile_orders": PF.profile_orders,
-        "stratified_sample_orders": PF.stratified_sample_orders,
-        "sketch_summary": PF.sketch_summary,  # md5-HLL + exact quantiles (r7)
-        "numeric_corr_matrix": PF.numeric_corr_matrix,
-        # round-4 wave: sequence mining / attribution / robust anomaly /
-        # skyline / text-distribution analytics (kept LAST so the
-        # never-green-first ordering places them behind the backlog)
-        "event_bigram_transitions": A3.event_bigram_transitions,
-        "first_touch_attribution": A3.first_touch_attribution,
-        "sliding_zscore_anomaly": A3.sliding_zscore_anomaly,
-        "mad_outlier_events": A3.mad_outlier_events,
-        "pareto_frontier_orders": A3.pareto_frontier_orders,
-        "token_entropy": TX.token_entropy,
-        "term_cooccurrence_pmi": TX.term_cooccurrence_pmi,
-        # round-4b wave: graph analytics over the trade graph (also
-        # kept last — behind the never-green backlog)
-        "pagerank_nations": GR.pagerank_nations,
-        "triangle_count_trade": GR.triangle_count_trade,
-        "semdedup_prune": SIM.semdedup_prune,
-        "exact_substring_dup": DD.exact_substring_dup,
-        # round-4c wave: BFS, star-contraction CC, shard manifest
-        "bfs_hops_trade": GR.bfs_hops_trade,
-        "cc_star_contraction": GR.cc_star_contraction,
-        "training_shard_manifest": TP.training_shard_manifest,
-        "epoch_shuffle_plan": TP.epoch_shuffle_plan,
-        # round-4d: the composed curation pipeline (quality gate →
-        # exact dedup → LSH near-dup prune → decontamination) as ONE
-        # declarative plan with per-source stage survival counts
-        "curation_pipeline": CU.curation_pipeline,
-        # round-4e: the iterative Lloyd loop made cross-engine exact
-        # (decimal centroid sums), so the full algorithm sits under
-        # the differential gate unlike rows-only kmeans_embeddings
-        "kmeans_exact_lloyd": SIM.kmeans_exact_lloyd,
-        # round-5 wave: HLL distinct sketch, salted skew join,
-        # scale-safe equi-depth NTILE, key-skew profiler, entity
-        # resolution (blocking + star-contraction closure)
-        "hll_distinct_users": A4.hll_distinct_users,
-        "skew_join_salted": A4.skew_join_salted,
-        "equidepth_bins": A4.equidepth_bins,
-        "skew_profile": A4.skew_profile,
-        "entity_resolution_clusters": A4.entity_resolution_clusters,
-        # round-5b wave: HLL sketch algebra (intersection estimation),
-        # ANN recall audit, exact-distributed winsorized stats,
-        # deterministic negative sampling
-        "hll_intersection_estimate": A4.hll_intersection_estimate,
-        "ann_recall_eval": SIM.ann_recall_eval,
-        "winsorized_stats": A4.winsorized_stats,
-        "negative_sampling_pairs": A4.negative_sampling_pairs,
-        # round-5c: the composed pipeline with the SemDeDup stage
-        "curation_pipeline_semantic": CU.curation_pipeline_semantic,
-        "column_ndv_sketches": A4.column_ndv_sketches,
-        # round-6: KMV theta-sketch set algebra, Bloom join pruning,
-        # exact weighted systematic sampling, higher moments, bounded
-        # Bellman-Ford SSSP, the declarative DQ expectation suite,
-        # snapshot CDC diff, LSH recall audit, G² keyness, and the
-        # batch twin of the stream-stream attribution join
-        "kmv_set_ops": A5.kmv_set_ops,
-        "bloom_prune_stats": A5.bloom_prune_stats,
-        "weighted_systematic_sample": A5.weighted_systematic_sample,
-        "moment_stats": A5.moment_stats,
-        "sssp_trade_costs": GR.sssp_trade_costs,
-        "dq_expectations": IG.dq_expectations,
-        "snapshot_diff": MG.snapshot_diff,
-        "lsh_recall_audit": DD.lsh_recall_audit,
-        "keyness_g2": TX.keyness_g2,
-        "view_purchase_join": JS.view_purchase_join,
-        # round-6b: incremental-merge parity, planner join-cardinality
-        # calibration, session path mining, vocab coverage eval
-        "incremental_rollup_merge": A6.incremental_rollup_merge,
-        "join_cardinality_estimate": A6.join_cardinality_estimate,
-        "top_session_paths": A6.top_session_paths,
-        "vocab_coverage_eval": A6.vocab_coverage_eval,
-        # round-6c: replication checksums, containment near-dup,
-        # filtered (label-partitioned) vector search
-        "table_checksum": IG.table_checksum,
-        "ngram_containment_pairs": DD.ngram_containment_pairs,
-        "filtered_ann_topk": SIM.filtered_ann_topk,
-        # round-7: the composed pipeline wired to the standing versioned
-        # indexes (signature index + pair ledger + cell index; equals
-        # the one-shot semantic pipeline exactly — shared oracle), and
-        # the watermark-evicted LEFT OUTER attribution join's batch twin
-        "curation_pipeline_incremental": CI.curation_pipeline_incremental,
-        "view_purchase_outer": JS.view_purchase_outer,
-        # round-7b: tokenizer application (corpus encoded under the
-        # learned merges — the fertility/compression signal) and CUSUM
-        # change-point detection via the prefix-sum/running-min closed
-        # form (integer-exact, two window functions, no driver loop)
-        "bpe_encode_corpus": TP.bpe_encode_corpus,
-        "cusum_event_drift": A7.cusum_event_drift,
-        # round-11: the round-10 lake-management surface under the
-        # oracle gate (VERDICT r10 "Next round" item 1): zero-copy
-        # CLONE + divergence + source-vacuum survival, CHECK-constraint
-        # lifecycle, DESCRIBE DETAIL, TIMESTAMP AS OF, VACUUM DRY RUN,
-        # scoped OPTIMIZE ZORDER
-        # round-11: the PII-scrub transform's direct output oracle
-        # (the census pii_scrub_stats counts PII; this certifies the
-        # REDACTED corpus text via per-source checksums)
-        "pii_scrub_corpus": CU.pii_scrub_corpus,
-        # round-11: curation → versioned lake → CDF-maintained training
-        # shard manifest (incremental == from-scratch is the contract)
-        "curation_shards_cdf": CI.curation_shards_cdf,
-        "clone_diverge_orders": LM.clone_diverge_orders,
-        "check_constraints_orders": LM.check_constraints_orders,
-        "describe_detail_orders": LM.describe_detail_orders,
-        "timestamp_as_of_orders": LM.timestamp_as_of_orders,
-        "vacuum_dry_run_orders": LM.vacuum_dry_run_orders,
-        "zorder_scoped_orders": LM.zorder_scoped_orders,
-    }
+    return {name: fn for name, (fn, _) in _registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each query (same column names)."""
-    out = {
-        "f1_lap_times": FX.ORACLE_F1_LAP_TIMES,
-        "f1_tyre_stints": FX.ORACLE_F1_TYRE_STINTS,
-        "f1_stint_pivot": FX.ORACLE_F1_STINT_PIVOT,
-        "f1_weather_trends": FX.ORACLE_F1_WEATHER_TRENDS,
-        "f1_lap_telemetry_summary": FX.ORACLE_F1_LAP_TELEMETRY,
-        "f1_stint_chart_rows": FX.ORACLE_F1_STINT_CHART,
-        "f1_telemetry_compare": FX.ORACLE_F1_TELEMETRY_COMPARE,
-        "q1_pricing_summary": R.ORACLE_Q1,
-        "stint_summary": R.ORACLE_STINT,
-        "agg_stats": R.ORACLE_AGG_STATS,
-        "pivot_returnflag": R.ORACLE_PIVOT,
-        "rollup_order_priority": R.ORACLE_ROLLUP,
-        "q6_forecast_revenue": R.ORACLE_Q6,
-        "q17_small_quantity_revenue": R.ORACLE_Q17,
-        "q18_large_orders": R.ORACLE_Q18,
-        "cube_status_priority": R.ORACLE_CUBE,
-        "grouping_sets_revenue": AN.ORACLE_GROUPING_SETS,
-        "modal_quantity_per_flag": AN.ORACLE_MODE,
-        "null_safe_event_join": AN.ORACLE_NULL_SAFE_JOIN,
-        "event_funnel": A2.ORACLE_FUNNEL,
-        "countmin_sketch": A2.ORACLE_CMS,
-        "priority_sample_orders": A2.ORACLE_PRIORITY_SAMPLE,
-        "decayed_value_recursive": A2.ORACLE_DECAYED,
-        "fuzzy_name_pairs": A2.ORACLE_FUZZY,
-        "frequent_event_types": A2.ORACLE_FREQ,
-        "orderkey_islands": AN.ORACLE_ISLANDS,
-        "window_rank_suite": AN.ORACLE_RANK_SUITE,
-        "daily_order_spine": AN.ORACLE_DAILY_SPINE,
-        "event_type_map_stats": AN.ORACLE_MAP_STATS,
-        "q3_shipping_priority": TS.ORACLE_Q3,
-        "q4_late_shipment_orders": TS.ORACLE_Q4,
-        "q12_priority_by_month": TS.ORACLE_Q12,
-        "q14_promo_revenue": TS.ORACLE_Q14,
-        "q16_supplier_variety": TS.ORACLE_Q16,
-        "q19_disjunctive_revenue": TS.ORACLE_Q19,
-        "q22_idle_customers": TS.ORACLE_Q22,
-        "q2_min_cost_supplier": T2.ORACLE_Q2,
-        "q5_local_supplier_volume": T2.ORACLE_Q5,
-        "q7_nation_trade_flows": T2.ORACLE_Q7,
-        "q8_market_share": T2.ORACLE_Q8,
-        "q9_product_profit": T2.ORACLE_Q9,
-        "q10_returned_items": T2.ORACLE_Q10,
-        "q11_important_parts": T2.ORACLE_Q11,
-        "q15_top_supplier": T2.ORACLE_Q15,
-        "q20_heavy_shippers": T2.ORACLE_Q20,
-        "q21_waiting_suppliers": T2.ORACLE_Q21,
-        "filter_project": R.ORACLE_FILTER_PROJECT,
-        "join_customer_nation_region": R.ORACLE_JOIN_CNR,
-        "revenue_by_nation": R.ORACLE_REVENUE_NATION,
-        "semi_anti_join": R.ORACLE_SEMI_ANTI,
-        "outer_join_order_counts": R.ORACLE_OUTER_COUNTS,
-        "range_join_events_orders": R.ORACLE_RANGE_JOIN,
-        "window_value_changes": R.ORACLE_WINDOW_CHANGES,
-        "running_total": R.ORACLE_RUNNING_TOTAL,
-        "rank_orders_per_customer": R.ORACLE_RANK_ORDERS,
-        "top_orders": R.ORACLE_TOP_ORDERS,
-        "distinct_sorted_types": R.ORACLE_DISTINCT_TYPES,
-        "stride_downsample": R.ORACLE_STRIDE,
-        "set_ops_keys": R.ORACLE_SET_OPS,
-        "unpivot_measures": R.ORACLE_UNPIVOT,
-        "json_props_extract": R.ORACLE_JSON_PROPS,
-        "variant_props_rollup": R.ORACLE_VARIANT_PROPS,
-        "time_format_roundtrip": TO.ORACLE_TIME_ROUNDTRIP,
-        "wallclock_formats": TO.ORACLE_WALLCLOCK,
-        "boolean_normalize": TO.ORACLE_BOOLEAN,
-        "hourly_event_rollup": TO.ORACLE_HOURLY,
-        "retention_cohorts": TO.ORACLE_RETENTION,
-        "sessionize_events": TO.ORACLE_SESSIONIZE,
-        "asof_join_purchase": TO.ORACLE_ASOF,
-        "latest_event_state": TO.ORACLE_LATEST_STATE,
-        "moving_hour_sum": TO.ORACLE_MOVING_HOUR,
-        "value_percentiles": TO.ORACLE_PERCENTILES,
-        "value_histogram": TO.ORACLE_HISTOGRAM,
-        "salted_user_counts": TO.ORACLE_SALTED,
-        "text_stats": TX.ORACLE_TEXT_STATS,
-        "language_id_confusion": TX.ORACLE_LANG_CONFUSION,
-        "quality_scores": TX.ORACLE_QUALITY,
-        "doc_fingerprints": TX.ORACLE_FINGERPRINTS,
-        "top_ngrams": TX.ORACLE_TOP_NGRAMS,
-        "corpus_quality_gate": TX.ORACLE_QUALITY_GATE,
-        "repetition_stats": TX.ORACLE_REPETITION,
-        "pii_scrub_stats": TX.ORACLE_PII_SCRUB,
-        "tfidf_top_terms": TX.ORACLE_TFIDF,
-        "bm25_rank": TX.ORACLE_BM25,
-        "lm_perplexity": TX.ORACLE_LM_PPL,
-        "dataset_card": TX.ORACLE_DATASET_CARD,
-        "tfidf_cosine_pairs": TX.ORACLE_TFIDF_COSINE,
-        "stop_shingle_stats": TX.ORACLE_STOP_SHINGLES,
-        "inverted_index": TX.ORACLE_INVERTED_INDEX,
-        "zipf_fit": TX.ORACLE_ZIPF,
-        "source_overlap_matrix": TX.ORACLE_SOURCE_OVERLAP,
-        "gopher_rules": TX.ORACLE_GOPHER,
-        "value_quartiles": TO.ORACLE_QUARTILES,
-        "dedup_exact": DD.ORACLE_DEDUP_EXACT,
-        "ngram_jaccard_pairs": DD.ORACLE_JACCARD_PAIRS,
-        "prefix_filter_jaccard": DD.ORACLE_PREFIX_JACCARD,
-        "minhash_signatures": DD.ORACLE_MINHASH_SIG,
-        "minhash_lsh_pairs": DD.ORACLE_MINHASH_LSH,
-        "simhash_64": DD.ORACLE_SIMHASH,
-        "simhash_near_dup_pairs": DD.ORACLE_SIMHASH_PAIRS,
-        "dedup_clusters": DD.ORACLE_CLUSTERS,
-        "dedup_keep_first": DD.ORACLE_DEDUP_KEEP,
-        "dedup_keep_canonical": DD.ORACLE_KEEP_CANONICAL,
-        "segment_dedup_stats": DD.ORACLE_SEGMENT_DEDUP,
-        "segment_dedup_clean": DD.ORACLE_SEGMENT_CLEAN,
-        "cross_doc_ngram_dup": DD.ORACLE_CROSS_DOC_NGRAM,
-        "ann_bruteforce_topk": SIM.ORACLE_ANN_TOPK,
-        # the vectorized path exact-rescores its BLAS-pruned candidates,
-        # so it shares the exact twin's oracle verbatim
-        "ann_topk_vectorized": SIM.ORACLE_ANN_TOPK_500,
-        "lsh_bucket_histogram": SIM.ORACLE_LSH_HIST,
-        "embedding_nearest_neighbor": SIM.ORACLE_NN,
-        "embedding_centroids": SIM.ORACLE_CENTROIDS,
-        "embedding_near_dup_pairs": SIM.ORACLE_NEAR_DUP,
-        "lsh_multiprobe_ann": SIM.ORACLE_MULTIPROBE_ANN,
-        "ivf_ann": SIM.ORACLE_IVF_ANN,
-        "embedding_quantize_int8": SIM.ORACLE_QUANTIZE,
-        "zscore_by_user": PD.ORACLE_ZSCORE,
-        "user_value_median_iqr": PD.ORACLE_MEDIAN_IQR,
-        "sentence_split": UT.ORACLE_SENTENCES,
-        "fk_orphan_audit": IG.ORACLE_FK_AUDIT,
-        "blob_metadata": MM.ORACLE_BLOB_METADATA,
-        "frame_sample_census": MM.ORACLE_FRAME_CENSUS,
-        "build_vocab": TP.ORACLE_VOCAB,
-        "bpe_merge_candidates": TP.ORACLE_BPE_MERGE,
-        "bpe_train": TP.ORACLE_BPE_TRAIN,
-        "pack_sequences": TP.ORACLE_PACK,
-        "dataset_splits": TP.ORACLE_SPLITS,
-        "chunk_documents": TP.ORACLE_CHUNKS,
-        "token_budget_mix": TP.ORACLE_BUDGET_MIX,
-        "dsir_importance_weights": TP.ORACLE_DSIR,
-        "zorder_tile_stats": LY.ORACLE_ZORDER_TILES,
-        "compaction_plan": LY.ORACLE_COMPACTION,
-        "decontaminate_ngrams": DC.ORACLE_DECONTAM,
-        "contamination_summary": DC.ORACLE_CONTAM_SUMMARY,
-        "scd2_customer_merge": MG.ORACLE_SCD2,
-        "merge_upsert_orders": LD.ORACLE_MERGE_UPSERT,
-        "dml_lifecycle_orders": LD.ORACLE_DML_LIFECYCLE,
-        "dml_mor_delete_orders": LD.ORACLE_DML_MOR,
-        "dml_change_feed_orders": LD.ORACLE_DML_CDF,
-        "schema_evolution_orders": LD.ORACLE_SCHEMA_EVOLUTION,
-        "cdc_apply_rollup_orders": LD.ORACLE_CDC_APPLY,
-        "bloom_point_lookup_orders": LP.ORACLE_BLOOM_LOOKUP,
-        "zorder_pruning_orders": LP.ORACLE_ZORDER_PRUNING,
-        "lake_restore_orders": LD.ORACLE_LAKE_RESTORE,
-        "small_compaction_orders": LD.ORACLE_SMALL_COMPACTION,
-        "scd2_point_in_time": MG.ORACLE_SCD2_PIT,
-        "profile_orders": PF.ORACLE_PROFILE_ORDERS,
-        "sketch_summary": PF.ORACLE_SKETCH_SUMMARY,
-        "stratified_sample_orders": PF.ORACLE_STRATIFIED_SAMPLE,
-        "numeric_corr_matrix": PF.ORACLE_CORR_MATRIX,
-        "event_bigram_transitions": A3.ORACLE_BIGRAM_TRANSITIONS,
-        "first_touch_attribution": A3.ORACLE_FIRST_TOUCH,
-        "sliding_zscore_anomaly": A3.ORACLE_SLIDING_ZSCORE,
-        "mad_outlier_events": A3.ORACLE_MAD_OUTLIERS,
-        "pareto_frontier_orders": A3.ORACLE_PARETO_FRONTIER,
-        "token_entropy": TX.ORACLE_TOKEN_ENTROPY,
-        "term_cooccurrence_pmi": TX.ORACLE_TERM_PMI,
-        "pagerank_nations": GR.ORACLE_PAGERANK,
-        "triangle_count_trade": GR.ORACLE_TRIANGLES,
-        "semdedup_prune": SIM.ORACLE_SEMDEDUP,
-        "exact_substring_dup": DD.ORACLE_SUBSTR_DUP,
-        "bfs_hops_trade": GR.ORACLE_BFS,
-        "cc_star_contraction": GR.ORACLE_CC_STAR,
-        "training_shard_manifest": TP.ORACLE_SHARD_MANIFEST,
-        "epoch_shuffle_plan": TP.ORACLE_EPOCH_SHUFFLE,
-        "curation_pipeline": CU.ORACLE_CURATION_PIPELINE,
-        "kmeans_exact_lloyd": SIM.ORACLE_KMEANS_EXACT,
-        "hll_distinct_users": A4.ORACLE_HLL,
-        "skew_join_salted": A4.ORACLE_SALTED_JOIN,
-        "equidepth_bins": A4.ORACLE_EQUIDEPTH,
-        "skew_profile": A4.ORACLE_SKEW_PROFILE,
-        "entity_resolution_clusters": A4.ORACLE_ER_CLUSTERS,
-        "hll_intersection_estimate": A4.ORACLE_HLL_INTERSECTION,
-        "ann_recall_eval": SIM.ORACLE_ANN_RECALL,
-        "winsorized_stats": A4.ORACLE_WINSORIZED,
-        "negative_sampling_pairs": A4.ORACLE_NEGATIVE_SAMPLING,
-        "curation_pipeline_semantic": CU.ORACLE_CURATION_SEMANTIC,
-        "column_ndv_sketches": A4.ORACLE_COLUMN_NDV,
-        "kmv_set_ops": A5.ORACLE_KMV,
-        "bloom_prune_stats": A5.ORACLE_BLOOM,
-        "weighted_systematic_sample": A5.ORACLE_WEIGHTED_SAMPLE,
-        "moment_stats": A5.ORACLE_MOMENTS,
-        "sssp_trade_costs": GR.ORACLE_SSSP,
-        "dq_expectations": IG.ORACLE_DQ,
-        "snapshot_diff": MG.ORACLE_SNAPSHOT_DIFF,
-        "lsh_recall_audit": DD.ORACLE_LSH_RECALL,
-        "keyness_g2": TX.ORACLE_KEYNESS,
-        "view_purchase_join": JS.ORACLE_VIEW_PURCHASE,
-        "incremental_rollup_merge": A6.ORACLE_INCR_ROLLUP,
-        "join_cardinality_estimate": A6.ORACLE_JOIN_CARD,
-        "top_session_paths": A6.ORACLE_SESSION_PATHS,
-        "vocab_coverage_eval": A6.ORACLE_VOCAB_COVERAGE,
-        "table_checksum": IG.ORACLE_TABLE_CHECKSUM,
-        "ngram_containment_pairs": DD.ORACLE_CONTAINMENT_PAIRS,
-        "filtered_ann_topk": SIM.ORACLE_FILTERED_ANN,
-        # equality with the one-shot semantic pipeline IS the contract
-        "curation_pipeline_incremental": CI.ORACLE_CURATION_INCREMENTAL,
-        "view_purchase_outer": JS.ORACLE_VIEW_PURCHASE_OUTER,
-        "bpe_encode_corpus": TP.ORACLE_BPE_ENCODE,
-        "cusum_event_drift": A7.ORACLE_CUSUM,
-        "pii_scrub_corpus": CU.ORACLE_PII_CORPUS,
-        "curation_shards_cdf": CI.ORACLE_CURATION_SHARDS,
-        "clone_diverge_orders": LM.ORACLE_CLONE_DIVERGE,
-        "check_constraints_orders": LM.ORACLE_CHECK_CONSTRAINTS,
-        "describe_detail_orders": LM.ORACLE_DESCRIBE_DETAIL,
-        "timestamp_as_of_orders": LM.ORACLE_TIMESTAMP_AS_OF,
-        "vacuum_dry_run_orders": LM.ORACLE_VACUUM_DRY_RUN,
-        "zorder_scoped_orders": LM.ORACLE_ZORDER_SCOPED,
-    }
-    return out
+    return {name: sql for name, (_, sql) in _registry().items()}

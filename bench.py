@@ -19,6 +19,7 @@ access-path queries.
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import re
@@ -257,8 +258,12 @@ LAKE_QUERIES = (
 #: Access-path queries whose registered wall time is ~95% harness
 #: (scratch seed + index build): the detail record carries their
 #: per-phase split so the probe path's real cost is visible (judge r8
-#: item 6).
-PHASE_QUERIES = ("bloom_point_lookup_orders", "zorder_pruning_orders")
+#: item 6).  They are the queries that accept a ``phase_times`` dict.
+PHASE_QUERIES = tuple(
+    name
+    for name, fn in entry_mod._base_queries().items()
+    if "phase_times" in inspect.signature(fn).parameters
+)
 
 
 #: The external runner captures only the TAIL of stdout; anything past
@@ -308,9 +313,10 @@ def build_summary(
     """(compact stdout line, full detail record).
 
     The stdout line stays under MAX_LINE_CHARS — headline number + the
-    slowest 8 queries ∪ the pinned SENTINEL_QUERIES — and the full
-    per-query map goes into the detail record (stderr +
-    BENCH_DETAIL.json).  Pinned by tests/test_bench_contract.py.
+    slowest 8 queries ∪ the pinned SENTINEL_QUERIES, shrunk to the
+    sentinels alone if that overflows — and the full per-query map
+    goes into the detail record (stderr + BENCH_DETAIL.json).  Pinned
+    by tests/test_bench_contract.py.
     """
     slowest = dict(sorted(times.items(), key=lambda kv: -kv[1])[:8])
     for name in SENTINEL_QUERIES:
@@ -333,7 +339,9 @@ def build_summary(
         detail["phases"] = phases
     line = json.dumps(out)
     if len(line) > MAX_LINE_CHARS:  # never outgrow the tail capture
-        out.pop("queries", None)
+        out["queries"] = {
+            n: t for n, t in slowest.items() if n in SENTINEL_QUERIES
+        }
         line = json.dumps(out)
     return line, detail
 

@@ -56,8 +56,13 @@ def memo_col(fn):
     cache lookup (``shingles('text', n=3)`` hits the same entry as
     ``shingles('text', 3)``), and the cache key carries each argument's
     TYPE so bool/int values that compare equal (True == 1) do not
-    collide."""
+    collide.  Variadic builders are returned unmemoized."""
     sig = inspect.signature(fn)
+    if any(
+        p.kind in (inspect.Parameter.VAR_POSITIONAL, inspect.Parameter.VAR_KEYWORD)
+        for p in sig.parameters.values()
+    ):
+        return fn
     cache: dict = {}
 
     @functools.wraps(fn)
@@ -68,15 +73,9 @@ def memo_col(fn):
             return fn(*a, **kw)  # let fn raise its own signature error
         bound.apply_defaults()
         vals = tuple(bound.arguments.items())
-        if any(
-            not isinstance(v, (str, int, bool)) for _, v in vals
-        ) or any(
-            p.kind
-            in (inspect.Parameter.VAR_POSITIONAL, inspect.Parameter.VAR_KEYWORD)
-            for p in sig.parameters.values()
-        ):
+        if any(not isinstance(v, (str, int, bool)) for _, v in vals):
             return fn(*a, **kw)
-        key = tuple((n, type(v).__name__, v) for n, v in vals)
+        key = tuple((n, type(v), v) for n, v in vals)
         if key not in cache:
             cache[key] = fn(*a, **kw)
         return cache[key]

@@ -480,3 +480,15 @@ SELECT user_id,
   MAX(CASE WHEN rk = 1 THEN event_type END) AS top_type
 FROM r GROUP BY user_id ORDER BY user_id
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    grouping_sets_revenue: ORACLE_GROUPING_SETS,
+    modal_quantity_per_flag: ORACLE_MODE,
+    null_safe_event_join: ORACLE_NULL_SAFE_JOIN,
+    orderkey_islands: ORACLE_ISLANDS,
+    window_rank_suite: ORACLE_RANK_SUITE,
+    daily_order_spine: ORACLE_DAILY_SPINE,
+    event_type_map_stats: ORACLE_MAP_STATS,
+}

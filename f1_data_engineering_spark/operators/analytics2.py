@@ -521,3 +521,14 @@ FROM events WHERE event_type IS NOT NULL
 GROUP BY event_type
 ORDER BY rank LIMIT 5
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    event_funnel: ORACLE_FUNNEL,
+    countmin_sketch: ORACLE_CMS,
+    priority_sample_orders: ORACLE_PRIORITY_SAMPLE,
+    decayed_value_recursive: ORACLE_DECAYED,
+    fuzzy_name_pairs: ORACLE_FUZZY,
+    frequent_event_types: ORACLE_FREQ,
+}

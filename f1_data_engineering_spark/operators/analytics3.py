@@ -397,3 +397,13 @@ SELECT o_orderdate, o_orderkey, CAST(price AS DOUBLE) AS best_price
 FROM run WHERE run_max IS NULL OR price > run_max
 ORDER BY o_orderdate
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    event_bigram_transitions: ORACLE_BIGRAM_TRANSITIONS,
+    first_touch_attribution: ORACLE_FIRST_TOUCH,
+    sliding_zscore_anomaly: ORACLE_SLIDING_ZSCORE,
+    mad_outlier_events: ORACLE_MAD_OUTLIERS,
+    pareto_frontier_orders: ORACLE_PARETO_FRONTIER,
+}

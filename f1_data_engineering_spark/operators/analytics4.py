@@ -61,14 +61,6 @@ from ..sources.registry import load_table
 from .graphops import _sorted_fold_sum, star_contract_labels
 from .pandas_ops import _oracle_round6
 
-QUERIES = [
-    "hll_distinct_users",
-    "skew_join_salted",
-    "equidepth_bins",
-    "skew_profile",
-    "entity_resolution_clusters",
-]
-
 
 # ---------------------------------------------------------------------------
 # HyperLogLog distinct-count sketch
@@ -1266,3 +1258,17 @@ SELECT sk.col AS column_name, sk.n_buckets_used,
 FROM sk JOIN ex ON sk.col = ex.col
 ORDER BY column_name
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    hll_distinct_users: ORACLE_HLL,
+    skew_join_salted: ORACLE_SALTED_JOIN,
+    equidepth_bins: ORACLE_EQUIDEPTH,
+    skew_profile: ORACLE_SKEW_PROFILE,
+    entity_resolution_clusters: ORACLE_ER_CLUSTERS,
+    hll_intersection_estimate: ORACLE_HLL_INTERSECTION,
+    winsorized_stats: ORACLE_WINSORIZED,
+    negative_sampling_pairs: ORACLE_NEGATIVE_SAMPLING,
+    column_ndv_sketches: ORACLE_COLUMN_NDV,
+}

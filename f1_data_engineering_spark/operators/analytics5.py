@@ -767,3 +767,12 @@ SELECT g AS event_type, n,
   END AS excess_kurtosis
 FROM m ORDER BY event_type
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    kmv_set_ops: ORACLE_KMV,
+    bloom_prune_stats: ORACLE_BLOOM,
+    weighted_systematic_sample: ORACLE_WEIGHTED_SAMPLE,
+    moment_stats: ORACLE_MOMENTS,
+}

@@ -456,3 +456,12 @@ SELECT source,
   {_oracle_round6("1.0 - CAST(SUM(in_vocab) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)")} AS oov_rate
 FROM tagged GROUP BY source ORDER BY source
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    incremental_rollup_merge: ORACLE_INCR_ROLLUP,
+    join_cardinality_estimate: ORACLE_JOIN_CARD,
+    top_session_paths: ORACLE_SESSION_PATHS,
+    vocab_coverage_eval: ORACLE_VOCAB_COVERAGE,
+}

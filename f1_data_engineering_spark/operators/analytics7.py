@@ -146,3 +146,9 @@ SELECT m.event_type, m.n_hours, m.total_events, m.max_cusum, peak.peak_hour,
 FROM m JOIN peak ON m.event_type IS NOT DISTINCT FROM peak.event_type
 ORDER BY m.event_type
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    cusum_event_drift: ORACLE_CUSUM,
+}

@@ -970,3 +970,11 @@ LEFT JOIN clean_counts c ON r.source = c.source
 ORDER BY r.source
 """
 )
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    curation_pipeline: ORACLE_CURATION_PIPELINE,
+    curation_pipeline_semantic: ORACLE_CURATION_SEMANTIC,
+    pii_scrub_corpus: ORACLE_PII_CORPUS,
+}

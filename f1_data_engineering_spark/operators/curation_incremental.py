@@ -486,3 +486,10 @@ SELECT leg, shard, n_docs, total_tokens FROM (
 ) ORDER BY leg, shard
 """
 )
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    curation_pipeline_incremental: ORACLE_CURATION_INCREMENTAL,
+    curation_shards_cdf: ORACLE_CURATION_SHARDS,
+}

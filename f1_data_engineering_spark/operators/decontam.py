@@ -210,3 +210,10 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 WHERE d.doc_id % 50 <> 0
 GROUP BY d.source
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    decontaminate_ngrams: ORACLE_DECONTAM,
+    contamination_summary: ORACLE_CONTAM_SUMMARY,
+}

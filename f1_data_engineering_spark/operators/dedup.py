@@ -1828,3 +1828,24 @@ JOIN sizes s1 ON d1 = s1.doc_id
 JOIN sizes s2 ON d2 = s2.doc_id
 ORDER BY containment DESC, d1, d2 LIMIT 20
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    dedup_exact: ORACLE_DEDUP_EXACT,
+    ngram_jaccard_pairs: ORACLE_JACCARD_PAIRS,
+    prefix_filter_jaccard: ORACLE_PREFIX_JACCARD,
+    minhash_signatures: ORACLE_MINHASH_SIG,
+    minhash_lsh_pairs: ORACLE_MINHASH_LSH,
+    simhash_64: ORACLE_SIMHASH,
+    simhash_near_dup_pairs: ORACLE_SIMHASH_PAIRS,
+    dedup_clusters: ORACLE_CLUSTERS,
+    dedup_keep_first: ORACLE_DEDUP_KEEP,
+    dedup_keep_canonical: ORACLE_KEEP_CANONICAL,
+    segment_dedup_stats: ORACLE_SEGMENT_DEDUP,
+    segment_dedup_clean: ORACLE_SEGMENT_CLEAN,
+    cross_doc_ngram_dup: ORACLE_CROSS_DOC_NGRAM,
+    exact_substring_dup: ORACLE_SUBSTR_DUP,
+    lsh_recall_audit: ORACLE_LSH_RECALL,
+    ngram_containment_pairs: ORACLE_CONTAINMENT_PAIRS,
+}

@@ -256,3 +256,15 @@ SELECT Driver, LapNumber, AvgSpeed
 FROM summary WHERE Driver IN ('VER', 'HAM', 'NOR')
 ORDER BY Driver, LapNumber
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    f1_lap_times: ORACLE_F1_LAP_TIMES,
+    f1_tyre_stints: ORACLE_F1_TYRE_STINTS,
+    f1_stint_pivot: ORACLE_F1_STINT_PIVOT,
+    f1_weather_trends: ORACLE_F1_WEATHER_TRENDS,
+    f1_lap_telemetry_summary: ORACLE_F1_LAP_TELEMETRY,
+    f1_stint_chart_rows: ORACLE_F1_STINT_CHART,
+    f1_telemetry_compare: ORACLE_F1_TELEMETRY_COMPARE,
+}

@@ -784,3 +784,13 @@ SELECT n.n_nationkey AS node, n.n_name,
 FROM nation n LEFT JOIN d ON n.n_nationkey = d.node
 ORDER BY node
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    pagerank_nations: ORACLE_PAGERANK,
+    triangle_count_trade: ORACLE_TRIANGLES,
+    bfs_hops_trade: ORACLE_BFS,
+    cc_star_contraction: ORACLE_CC_STAR,
+    sssp_trade_costs: ORACLE_SSSP,
+}

@@ -290,3 +290,11 @@ ORACLE_TABLE_CHECKSUM = (
     + "\nUNION ALL\n".join(_sql_checksum(*e) for e in CHECKSUM_COLUMNS)
     + "\n) ORDER BY table_name"
 )
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    fk_orphan_audit: ORACLE_FK_AUDIT,
+    dq_expectations: ORACLE_DQ,
+    table_checksum: ORACLE_TABLE_CHECKSUM,
+}

@@ -911,3 +911,16 @@ SELECT leg, o_orderstatus, CAST(SUM(w) AS BIGINT) AS n_rows,
        AS DOUBLE) AS sum_price
 FROM legs GROUP BY leg, o_orderstatus ORDER BY leg, o_orderstatus
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    merge_upsert_orders: ORACLE_MERGE_UPSERT,
+    dml_lifecycle_orders: ORACLE_DML_LIFECYCLE,
+    dml_mor_delete_orders: ORACLE_DML_MOR,
+    dml_change_feed_orders: ORACLE_DML_CDF,
+    schema_evolution_orders: ORACLE_SCHEMA_EVOLUTION,
+    cdc_apply_rollup_orders: ORACLE_CDC_APPLY,
+    lake_restore_orders: ORACLE_LAKE_RESTORE,
+    small_compaction_orders: ORACLE_SMALL_COMPACTION,
+}

@@ -678,3 +678,14 @@ SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
 FROM stages GROUP BY stage ORDER BY stage
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    clone_diverge_orders: ORACLE_CLONE_DIVERGE,
+    check_constraints_orders: ORACLE_CHECK_CONSTRAINTS,
+    describe_detail_orders: ORACLE_DESCRIBE_DETAIL,
+    timestamp_as_of_orders: ORACLE_TIMESTAMP_AS_OF,
+    vacuum_dry_run_orders: ORACLE_VACUUM_DRY_RUN,
+    zorder_scoped_orders: ORACLE_ZORDER_SCOPED,
+}

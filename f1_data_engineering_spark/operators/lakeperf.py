@@ -289,3 +289,10 @@ SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
 FROM stages GROUP BY stage ORDER BY stage
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    bloom_point_lookup_orders: ORACLE_BLOOM_LOOKUP,
+    zorder_pruning_orders: ORACLE_ZORDER_PRUNING,
+}

@@ -530,3 +530,10 @@ def zorder_versioned_scoped(
         "files_out": r["files_out"],
         "files_total": len(snap),
     }
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    zorder_tile_stats: ORACLE_ZORDER_TILES,
+    compaction_plan: ORACLE_COMPACTION,
+}

@@ -278,3 +278,11 @@ SELECT c_mktsegment, change_type,
 FROM j GROUP BY c_mktsegment, change_type
 ORDER BY c_mktsegment, change_type
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    scd2_customer_merge: ORACLE_SCD2,
+    scd2_point_in_time: ORACLE_SCD2_PIT,
+    snapshot_diff: ORACLE_SNAPSHOT_DIFF,
+}

@@ -291,3 +291,10 @@ def resize_images(df: DataFrame, max_side: int = 224) -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.mapInPandas(_gen, RESIZED_SCHEMA)
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    blob_metadata: ORACLE_BLOB_METADATA,
+    frame_sample_census: ORACLE_FRAME_CENSUS,
+}

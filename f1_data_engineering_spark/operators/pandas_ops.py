@@ -276,3 +276,10 @@ SELECT g.user_id, q.med_value, q.iqr_value, g.n_events
 FROM g LEFT JOIN q ON g.user_id IS NOT DISTINCT FROM q.user_id
 ORDER BY g.user_id
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    zscore_by_user: ORACLE_ZSCORE,
+    user_value_median_iqr: ORACLE_MEDIAN_IQR,
+}

@@ -423,3 +423,12 @@ ORDER BY q.event_type NULLS LAST
 
 
 ORACLE_SKETCH_SUMMARY = _sketch_summary_oracle()
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    profile_orders: ORACLE_PROFILE_ORDERS,
+    stratified_sample_orders: ORACLE_STRATIFIED_SAMPLE,
+    sketch_summary: ORACLE_SKETCH_SUMMARY,
+    numeric_corr_matrix: ORACLE_CORR_MATRIX,
+}

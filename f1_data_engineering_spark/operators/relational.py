@@ -1001,3 +1001,33 @@ SELECT measure, COUNT(*) AS n,
   MIN(value) AS vmin, MAX(value) AS vmax
 FROM melted GROUP BY measure ORDER BY measure
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    q1_pricing_summary: ORACLE_Q1,
+    stint_summary: ORACLE_STINT,
+    agg_stats: ORACLE_AGG_STATS,
+    pivot_returnflag: ORACLE_PIVOT,
+    rollup_order_priority: ORACLE_ROLLUP,
+    q6_forecast_revenue: ORACLE_Q6,
+    q17_small_quantity_revenue: ORACLE_Q17,
+    q18_large_orders: ORACLE_Q18,
+    cube_status_priority: ORACLE_CUBE,
+    filter_project: ORACLE_FILTER_PROJECT,
+    join_customer_nation_region: ORACLE_JOIN_CNR,
+    revenue_by_nation: ORACLE_REVENUE_NATION,
+    semi_anti_join: ORACLE_SEMI_ANTI,
+    outer_join_order_counts: ORACLE_OUTER_COUNTS,
+    range_join_events_orders: ORACLE_RANGE_JOIN,
+    window_value_changes: ORACLE_WINDOW_CHANGES,
+    running_total: ORACLE_RUNNING_TOTAL,
+    rank_orders_per_customer: ORACLE_RANK_ORDERS,
+    top_orders: ORACLE_TOP_ORDERS,
+    distinct_sorted_types: ORACLE_DISTINCT_TYPES,
+    stride_downsample: ORACLE_STRIDE,
+    set_ops_keys: ORACLE_SET_OPS,
+    unpivot_measures: ORACLE_UNPIVOT,
+    json_props_extract: ORACLE_JSON_PROPS,
+    variant_props_rollup: ORACLE_VARIANT_PROPS,
+}

@@ -1687,3 +1687,22 @@ r AS (
 SELECT query_id, query_label, CAST(rn AS BIGINT) AS rank, neighbor_id, sim
 FROM r WHERE rn <= {FILTERED_TOPK} ORDER BY query_id, rank
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    ann_bruteforce_topk: ORACLE_ANN_TOPK,
+    # served as ann_topk_vectorized (see __spark_entry__._RENAMED)
+    ann_topk_vectorized_500: ORACLE_ANN_TOPK_500,
+    lsh_bucket_histogram: ORACLE_LSH_HIST,
+    embedding_nearest_neighbor: ORACLE_NN,
+    embedding_centroids: ORACLE_CENTROIDS,
+    embedding_near_dup_pairs: ORACLE_NEAR_DUP,
+    lsh_multiprobe_ann: ORACLE_MULTIPROBE_ANN,
+    ivf_ann: ORACLE_IVF_ANN,
+    embedding_quantize_int8: ORACLE_QUANTIZE,
+    semdedup_prune: ORACLE_SEMDEDUP,
+    kmeans_exact_lloyd: ORACLE_KMEANS_EXACT,
+    ann_recall_eval: ORACLE_ANN_RECALL,
+    filtered_ann_topk: ORACLE_FILTERED_ANN,
+}

@@ -1700,3 +1700,29 @@ FROM g
 ORDER BY g2 DESC, term
 LIMIT 30
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    text_stats: ORACLE_TEXT_STATS,
+    language_id_confusion: ORACLE_LANG_CONFUSION,
+    quality_scores: ORACLE_QUALITY,
+    doc_fingerprints: ORACLE_FINGERPRINTS,
+    top_ngrams: ORACLE_TOP_NGRAMS,
+    corpus_quality_gate: ORACLE_QUALITY_GATE,
+    repetition_stats: ORACLE_REPETITION,
+    pii_scrub_stats: ORACLE_PII_SCRUB,
+    tfidf_top_terms: ORACLE_TFIDF,
+    bm25_rank: ORACLE_BM25,
+    lm_perplexity: ORACLE_LM_PPL,
+    dataset_card: ORACLE_DATASET_CARD,
+    tfidf_cosine_pairs: ORACLE_TFIDF_COSINE,
+    stop_shingle_stats: ORACLE_STOP_SHINGLES,
+    inverted_index: ORACLE_INVERTED_INDEX,
+    zipf_fit: ORACLE_ZIPF,
+    source_overlap_matrix: ORACLE_SOURCE_OVERLAP,
+    gopher_rules: ORACLE_GOPHER,
+    token_entropy: ORACLE_TOKEN_ENTROPY,
+    term_cooccurrence_pmi: ORACLE_TERM_PMI,
+    keyness_g2: ORACLE_KEYNESS,
+}

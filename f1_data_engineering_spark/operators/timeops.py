@@ -597,3 +597,21 @@ SELECT c.cohort_week, c.weeks_since, c.n_active, s.cohort_n,
 FROM cells c JOIN sizes s USING (cohort_week)
 ORDER BY c.cohort_week, c.weeks_since
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    time_format_roundtrip: ORACLE_TIME_ROUNDTRIP,
+    wallclock_formats: ORACLE_WALLCLOCK,
+    boolean_normalize: ORACLE_BOOLEAN,
+    hourly_event_rollup: ORACLE_HOURLY,
+    retention_cohorts: ORACLE_RETENTION,
+    sessionize_events: ORACLE_SESSIONIZE,
+    asof_join_purchase: ORACLE_ASOF,
+    latest_event_state: ORACLE_LATEST_STATE,
+    moving_hour_sum: ORACLE_MOVING_HOUR,
+    value_percentiles: ORACLE_PERCENTILES,
+    value_histogram: ORACLE_HISTOGRAM,
+    salted_user_counts: ORACLE_SALTED,
+    value_quartiles: ORACLE_QUARTILES,
+}

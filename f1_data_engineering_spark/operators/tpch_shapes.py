@@ -334,3 +334,15 @@ WHERE CAST(c_acctbal AS DOUBLE) > avg_bal
                   AND o_orderdate >= TIMESTAMP '2000-01-01')
 GROUP BY c_nationkey ORDER BY c_nationkey
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    q3_shipping_priority: ORACLE_Q3,
+    q4_late_shipment_orders: ORACLE_Q4,
+    q12_priority_by_month: ORACLE_Q12,
+    q14_promo_revenue: ORACLE_Q14,
+    q16_supplier_variety: ORACLE_Q16,
+    q19_disjunctive_revenue: ORACLE_Q19,
+    q22_idle_customers: ORACLE_Q22,
+}

@@ -703,3 +703,18 @@ GROUP BY s_name
 ORDER BY numwait DESC, s_name
 LIMIT 100
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    q2_min_cost_supplier: ORACLE_Q2,
+    q5_local_supplier_volume: ORACLE_Q5,
+    q7_nation_trade_flows: ORACLE_Q7,
+    q8_market_share: ORACLE_Q8,
+    q9_product_profit: ORACLE_Q9,
+    q10_returned_items: ORACLE_Q10,
+    q11_important_parts: ORACLE_Q11,
+    q15_top_supplier: ORACLE_Q15,
+    q20_heavy_shippers: ORACLE_Q20,
+    q21_waiting_suppliers: ORACLE_Q21,
+}

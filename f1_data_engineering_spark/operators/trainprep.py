@@ -1085,3 +1085,19 @@ SELECT doc_id, h % {N_SHARDS} AS shard,
   CAST(n_tokens AS BIGINT) AS n_tokens
 FROM d ORDER BY shard, position
 """.replace("{epoch}", str(SHUFFLE_EPOCH))
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    build_vocab: ORACLE_VOCAB,
+    bpe_merge_candidates: ORACLE_BPE_MERGE,
+    bpe_train: ORACLE_BPE_TRAIN,
+    pack_sequences: ORACLE_PACK,
+    dataset_splits: ORACLE_SPLITS,
+    chunk_documents: ORACLE_CHUNKS,
+    token_budget_mix: ORACLE_BUDGET_MIX,
+    dsir_importance_weights: ORACLE_DSIR,
+    training_shard_manifest: ORACLE_SHARD_MANIFEST,
+    epoch_shuffle_plan: ORACLE_EPOCH_SHUFFLE,
+    bpe_encode_corpus: ORACLE_BPE_ENCODE,
+}

@@ -135,3 +135,9 @@ class TokenMetrics:
                 elif m == "digit":
                     row.append(sum(c.isdigit() for c in tok))
             yield tuple(row)
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    sentence_split: ORACLE_SENTENCES,
+}

@@ -441,28 +441,6 @@ def merge_into(
             raise ValueError(f"delete clause cannot set columns: {cl!r}")
     snap = _snapshot_files(path, None)
     df = _scan_with_file(spark, path, snap)
-    if clauses:
-        # duplicate check over keys that MATCH a target row only: the
-        # inner semi-join drops NULL keys for free (equality join
-        # semantics), and duplicate never-matching keys are legal —
-        # they take the insert branch, where multiplicity is
-        # well-defined.  Cost: one semi-join of the (small) source
-        # against distinct target keys, same scan shape the touched-
-        # file probe below plans anyway.
-        dup = (
-            source.join(df.select(*on).distinct(), on, "left_semi")
-            .groupBy(*on)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-        )
-        # the guard is independent of the touched-file probe below —
-        # overlap the two jobs (guide §2.6); the result is checked
-        # before anything is staged or committed
-        from concurrent.futures import ThreadPoolExecutor
-
-        _guard_pool = ThreadPoolExecutor(max_workers=1)
-        _dup_fut = _guard_pool.submit(dup.count)
     tcols = [c for c in df.columns if c not in _META]
     types = dict(df.drop(*_META).dtypes)
 
@@ -486,30 +464,52 @@ def merge_into(
     if not clauses:
         touched = []  # insert-if-absent: matched rows are untouched
     else:
-        # touched = files holding at least one row some clause APPLIES
-        # to (an inner join probe: matched rows only; conditions can
-        # reference t./s. columns)
-        probe = df.alias("t").join(
-            source.alias("s"),
-            [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on],
-            "inner",
+        # duplicate check over keys that MATCH a target row only: the
+        # inner semi-join drops NULL keys for free (equality join
+        # semantics), and duplicate never-matching keys are legal —
+        # they take the insert branch, where multiplicity is
+        # well-defined.  Cost: one semi-join of the (small) source
+        # against distinct target keys, same scan shape the touched-
+        # file probe below plans anyway.
+        dup = (
+            source.join(df.select(*on).distinct(), on, "left_semi")
+            .groupBy(*on)
+            .count()
+            .filter(F.col("count") > 1)
+            .limit(1)
         )
-        hit = probe.filter(_clause_idx(F.lit(True)).isNotNull())
-        touched = [
-            r["f"]
-            for r in hit.select(F.col("t._dml_file").alias("f"))
-            .distinct()
-            .collect()
-        ]
+        # the guard is independent of the touched-file probe below —
+        # overlap the two jobs (guide §2.6); the result is checked
+        # before anything is staged or committed, and the pool is shut
+        # down on every path out, a failed probe included
+        from concurrent.futures import ThreadPoolExecutor
+
+        guard_pool = ThreadPoolExecutor(max_workers=1)
         try:
-            if _dup_fut.result() > 0:
+            dup_fut = guard_pool.submit(dup.count)
+            # touched = files holding at least one row some clause
+            # APPLIES to (an inner join probe: matched rows only;
+            # conditions can reference t./s. columns)
+            probe = df.alias("t").join(
+                source.alias("s"),
+                [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on],
+                "inner",
+            )
+            hit = probe.filter(_clause_idx(F.lit(True)).isNotNull())
+            touched = [
+                r["f"]
+                for r in hit.select(F.col("t._dml_file").alias("f"))
+                .distinct()
+                .collect()
+            ]
+            if dup_fut.result() > 0:
                 raise ValueError(
                     "source has multiple rows matching the same target "
                     "merge key — resolve (e.g. latest-wins dedup) before "
                     "merging"
                 )
         finally:
-            _guard_pool.shutdown()
+            guard_pool.shutdown()
 
     # rewrite touched files: unmatched rows (and matched rows no clause
     # applies to) pass through; clause-hit rows update or delete.

@@ -197,3 +197,10 @@ FROM v LEFT JOIN p
   AND v.ts >= p.ts - INTERVAL {ATTRIB_WINDOW_S} SECONDS
 ORDER BY user_id, view_id, purchase_id
 """
+
+
+#: Registered queries, each mapped to its DuckDB oracle (see __spark_entry__).
+QUERIES = {
+    view_purchase_join: ORACLE_VIEW_PURCHASE,
+    view_purchase_outer: ORACLE_VIEW_PURCHASE_OUTER,
+}

@@ -76,12 +76,34 @@ def test_bench_stdout_line_carries_sentinels():
     assert len(line) <= bench.MAX_LINE_CHARS
 
 
+def test_bench_stdout_line_worst_case_keeps_sentinels():
+    """Worst-case timings (99999.999 s for every bench query, plus 10
+    error rows) stay under the tail budget with every sentinel on the
+    line; and when the line would overflow, the query map shrinks to
+    the sentinels instead of vanishing."""
+    bench = _load_bench()
+    times = {name: 99999.999 for name in bench.BENCH_QUERIES}
+    errors = {name: "X" * 60 for name in list(bench.BENCH_QUERIES)[:10]}
+
+    line, _ = bench.build_summary(times, errors, sf=0.1, partial=True)
+    assert len(line) <= bench.MAX_LINE_CHARS
+    assert set(bench.SENTINEL_QUERIES) <= set(json.loads(line)["queries"])
+
+    # a budget the slowest-8 ∪ sentinels line cannot meet
+    full = json.loads(line)
+    bench.MAX_LINE_CHARS = len(line) - 1
+    line, _ = bench.build_summary(times, errors, sf=0.1, partial=True)
+    assert len(line) <= bench.MAX_LINE_CHARS
+    assert set(json.loads(line)["queries"]) == set(bench.SENTINEL_QUERIES)
+    assert set(full["queries"]) > set(bench.SENTINEL_QUERIES)
+
+
 def test_bench_detail_has_full_query_map():
     """The committed per-round detail record must carry every bench
-    query (the stdout line intentionally truncates to the slowest 8 —
-    the full map lives in BENCH_DETAIL_r*.json).  Checks the LATEST
-    round file, so growing BENCH_QUERIES forces a fresh bench run
-    before the round snapshot."""
+    query (the stdout line carries only the slowest 8 ∪ the pinned
+    SENTINEL_QUERIES — the full map lives in BENCH_DETAIL_r*.json).
+    Checks the LATEST round file, so growing BENCH_QUERIES forces a
+    fresh bench run before the round snapshot."""
     import glob
 
     bench = _load_bench()

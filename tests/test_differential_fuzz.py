@@ -26,6 +26,9 @@ from f1_data_engineering_spark.operators import multimodal as MM
 from f1_data_engineering_spark.operators import textops as TX
 from f1_data_engineering_spark.operators import udtf_ops as UT
 
+#: every test in this module is a soak test (SPARK_GRAFT_FULL_TESTS=1)
+pytestmark = pytest.mark.soak
+
 _SPEC = importlib.util.spec_from_file_location(
     "oracle_check",
     os.path.join(
@@ -586,8 +589,6 @@ def test_text_extended_differential_fuzz(spark, fuzz_dir, corpus):
 
 from f1_data_engineering_spark.operators import curation as _CU
 from f1_data_engineering_spark.operators import curation_incremental as _CI
-
-pytestmark = pytest.mark.soak
 
 
 def _det_vec(i: int):

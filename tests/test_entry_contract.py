@@ -49,6 +49,24 @@ def test_every_oracle_has_a_query_and_vice_versa():
     )
 
 
+def test_each_query_is_declared_once_in_its_owning_module():
+    """The registry is the QUERY_MODULES tables: each module declares
+    its own functions, and no two tables register the same name (one
+    would silently overwrite the other in queries())."""
+    mod = _load_entry_by_path()
+    sizes = 0
+    for owner in mod.QUERY_MODULES:
+        table = getattr(owner, "QUERIES", None)
+        assert isinstance(table, dict), f"{owner.__name__} has no QUERIES table"
+        for fn in table:
+            assert inspect.isfunction(fn), (owner.__name__, fn)
+            assert fn.__module__ == owner.__name__, (
+                f"{fn.__module__}.{fn.__qualname__} registered by {owner.__name__}"
+            )
+        sizes += len(table)
+    assert sizes == len(mod.queries())
+
+
 def test_query_callables_take_spark_and_sfdir():
     mod = _load_entry_by_path()
     for name, fn in mod.queries().items():

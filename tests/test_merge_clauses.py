@@ -6,6 +6,8 @@ per-clause CDF capture, and the r9 cardinality guard unchanged."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,6 +176,30 @@ def test_cardinality_guard_fires_with_conditional_clauses(spark, lake):
                  "set": {"v": "s.flag"}},
             ],
         )
+
+
+def test_failed_probe_leaves_no_guard_thread(spark, lake):
+    """An unparseable clause condition fails the touched-file probe
+    after the cardinality guard has started: the merge must raise and
+    must not leave the guard's worker thread (or its job) running."""
+    from pyspark.errors import ParseException
+
+    before = set(threading.enumerate())
+    src = spark.createDataFrame([(10, 1)], "k long, nv long")
+    with pytest.raises(ParseException) as failed:
+        D.merge_into(
+            spark, lake, src, on=["k"],
+            when_matched=[
+                {"action": "update", "condition": "s.nv >",
+                 "set": {"v": "s.nv"}},
+            ],
+        )
+    leaked = [
+        t.name for t in threading.enumerate()
+        if t not in before and t.is_alive() and not t.daemon
+    ]
+    assert not leaked, (leaked, failed.value)
+    assert V.read_versioned(spark, lake).count() == 100  # nothing committed
 
 
 def test_clause_validation(spark, lake):

@@ -12,6 +12,7 @@ from f1_data_engineering_spark.functions.text import (
     bpe_ish_token_count,
     doc_fingerprint,
     language_id,
+    memo_col,
     quality_score,
     shingles,
     token_count,
@@ -263,3 +264,28 @@ def test_shingles_property_vs_reference(spark):
             else:
                 want = []
             assert got[i] == want, (toks, n, got[i], want)
+
+
+def test_memo_col_keys_on_the_argument_type_not_its_name():
+    """Two distinct ``str`` subclasses that share a class name (defined
+    in different scopes) compare equal as values but must not share a
+    cache entry; no Spark needed."""
+
+    def tag_type():
+        class Tag(str):
+            pass
+
+        return Tag
+
+    a_type, b_type = tag_type(), tag_type()
+    seen = []
+
+    @memo_col
+    def build(x):
+        seen.append(type(x))
+        return object()
+
+    first = build(a_type("x"))
+    assert build(a_type("x")) is first  # same type: one cached build
+    assert build(b_type("x")) is not first
+    assert seen == [a_type, b_type]
