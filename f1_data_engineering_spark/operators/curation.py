@@ -14,19 +14,24 @@ them the way a production training-data build actually runs them —
       → decontamination     (drop eval-split docs + any train doc whose
                              5-gram overlap with the eval set ≥ 30%)
 
-— and rolls up per-source survival counts at every stage.  The whole
-pipeline is a single DataFrame: Catalyst sees every stage at once, so
-filters fold into the scan, the exact-dedup keep is one shuffle on the
-16-byte fingerprint, the LSH band join shuffles K-long signatures (not
-bodies), and the eval-gram set broadcasts.  No stage materializes an
-intermediate table.
+— and rolls up per-source survival counts at every stage in ONE
+aggregate (:func:`stage_rollup`: the stage frames, each projected to
+(source, stage index, pii_hit, n_tok), unioned and grouped by source).
+The whole pipeline is a single DataFrame: Catalyst sees every stage at
+once, so filters fold into the scan, the exact-dedup keep is one
+shuffle on the 16-byte fingerprint, the LSH band join shuffles K-long
+signatures (not bodies), and the eval-gram set broadcasts.  No stage
+materializes an intermediate table.
 
 100 TB posture: per-stage cost is the same as the standalone operators
 (each already audited in PLANS.md / SCALING.md); composing them adds
 zero extra shuffles beyond the per-stage ones because every stage keys
-on doc_id-derived columns.  The three cached frames (scored docs,
-survivor signatures, gram sets) are the canonical multi-consumer
-checkpoints, each O(docs) rows of fixed-width columns.  A/B note
+on doc_id-derived columns, and the rollup adds one shuffle of at most
+(stages × sources × partitions) partial-aggregate rows.  The text
+pipeline caches five frames (the scrubbed corpus, scored docs,
+survivor signatures, near-dup survivors, gram sets) and the semantic
+stage two more (the cell assignment and its survivors): the canonical
+multi-consumer checkpoints, each O(docs) rows.  A/B note
 (sf0.1, solo min-of-3): computing grams only where consumed (eval
 split + train survivors, no cache) measured 9.0 s vs 5.5 s for the
 cached full-corpus pass — the synthetic gates prune little, so cache
@@ -42,6 +47,8 @@ for, composed from the reference-independent stage operators.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -288,9 +295,9 @@ def assign_cells(sv: DataFrame, cent: DataFrame) -> DataFrame:
 
 @memo_col
 def _stage_cols() -> dict:
-    """Constant Column trees of the curation stage chain and its count
-    rollups, built once per process (memo_col) — four queries build
-    this chain, twice each per bench run."""
+    """Constant Column trees of the curation stage chain, built once
+    per process (memo_col) — four queries build this chain, twice each
+    per bench run."""
     return {
         "scored": [
             F.col("doc_id"),
@@ -319,42 +326,7 @@ def _stage_cols() -> dict:
             F.col("n_hit").cast("double") / F.col("n_grams")
             >= CONTAM_THRESHOLD
         ),
-        "raw_aggs": [
-            F.count(F.lit(1)).alias("n_raw"),
-            F.sum("pii_hit").cast("bigint").alias("n_pii_redacted"),
-        ],
-        "clean_aggs": [
-            F.count(F.lit(1)).alias("n_clean"),
-            F.sum("n_tok").alias("clean_tokens"),
-        ],
-        "rollup": [
-            F.col("source"),
-            F.col("n_raw"),
-            F.col("n_pii_redacted"),
-            F.coalesce("n_quality", F.lit(0)).alias("n_quality"),
-            F.coalesce("n_exact", F.lit(0)).alias("n_exact"),
-            F.coalesce("n_neardup", F.lit(0)).alias("n_neardup"),
-            F.coalesce("n_clean", F.lit(0)).alias("n_clean"),
-            F.coalesce("clean_tokens", F.lit(0)).alias("clean_tokens"),
-        ],
-        "rollup_sem": [
-            F.col("source"),
-            F.col("n_raw"),
-            F.col("n_pii_redacted"),
-            F.coalesce("n_quality", F.lit(0)).alias("n_quality"),
-            F.coalesce("n_exact", F.lit(0)).alias("n_exact"),
-            F.coalesce("n_neardup", F.lit(0)).alias("n_neardup"),
-            F.coalesce("n_semantic", F.lit(0)).alias("n_semantic"),
-            F.coalesce("n_clean", F.lit(0)).alias("n_clean"),
-            F.coalesce("clean_tokens", F.lit(0)).alias("clean_tokens"),
-        ],
     }
-
-
-@memo_col
-def _cnt_col(name: str):
-    """count(1) aliased — memoized per alias (the per-stage rollups)."""
-    return F.count(F.lit(1)).alias(name)
 
 
 @memo_col
@@ -395,9 +367,11 @@ def _curation_stages(
     corpus: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """The per-stage survivor frames, shared by the count rollup
-    (``curation_pipeline``) and the clean-corpus sink
-    (``write_clean_corpus``): scored → passed → exact → neardup →
-    [semantic →] clean, each carrying (doc_id, source, text, n_tok).
+    (:func:`stage_rollup`, behind all three curation pipelines), the
+    clean-corpus sink (``write_clean_corpus``) and the shard feed
+    (``curation_incremental.curation_shards_cdf``): scored → passed →
+    exact → neardup → [semantic →] clean, each carrying (doc_id,
+    source, text, pii_hit, n_tok).
     With ``semantic=True`` a SemDeDup embedding-space prune runs
     between the near-dup and decontamination stages (and decontam is
     rooted on its survivors).
@@ -562,6 +536,67 @@ def _curation_stages(
     return out
 
 
+#: The stage ladder in pipeline order: stage frame → survivor count.
+_LADDER = {
+    "scored": "n_raw", "passed": "n_quality", "exact": "n_exact",
+    "neardup": "n_neardup", "semantic": "n_semantic", "clean": "n_clean",
+}
+
+
+@memo_col
+def _rollup_cols(semantic: bool) -> dict:
+    """Constant Column trees of :func:`stage_rollup`, one set per
+    ladder: the per-stage projections in ladder order and the
+    aggregates in output column order."""
+    ladder = [st for st in _LADDER if semantic or st != "semantic"]
+    zero = F.lit(0).cast("long")
+    counts = [
+        F.count(F.when(F.col("stage") == i, 1)).alias(_LADDER[st])
+        for i, st in enumerate(ladder)
+    ]
+    return {
+        "proj": {
+            st: [
+                F.col("source"),
+                F.lit(i).alias("stage"),
+                (F.col("pii_hit").cast("long") if st == "scored" else zero)
+                .alias("pii_hit"),
+                (F.col("n_tok") if st == "clean" else zero).alias("n_tok"),
+            ]
+            for i, st in enumerate(ladder)
+        },
+        "aggs": [
+            counts[0],
+            F.sum("pii_hit").alias("n_pii_redacted"),
+            *counts[1:],
+            F.sum("n_tok").alias("clean_tokens"),
+        ],
+    }
+
+
+def stage_rollup(stages: dict[str, DataFrame]) -> DataFrame:
+    """Per-source survivor count at every stage of a
+    :func:`_curation_stages` ladder, plus the redacted docs (on
+    ``scored``) and the clean set's total tokens — ONE ``groupBy``
+    over the union of the stage frames, each projected to (source,
+    stage index, pii_hit, n_tok), so partial aggregation runs inside
+    each stage's own plan and the rollup adds one shuffle.  Every
+    source has a ``scored`` row and the other branches carry 0, so no
+    count or sum is null.
+
+    Columns: source, n_raw, n_pii_redacted, n_quality, n_exact,
+    n_neardup, [n_semantic,] n_clean, clean_tokens.
+    """
+    rc = _rollup_cols("semantic" in stages)
+    frames = [stages[st].select(*cols) for st, cols in rc["proj"].items()]
+    return (
+        functools.reduce(DataFrame.union, frames)
+        .groupBy("source")
+        .agg(*rc["aggs"])
+        .orderBy("source")
+    )
+
+
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: docs surviving each curation stage, and the total
     whitespace tokens of the final clean set.  The corpus is PII-
@@ -571,24 +606,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: source, n_raw, n_pii_redacted, n_quality, n_exact,
     n_neardup, n_clean, clean_tokens.
     """
-    s = _curation_stages(spark, sf_dir)
-    sc = _stage_cols()
-    scored, passed, exact = s["scored"], s["passed"], s["exact"]
-    neardup, clean = s["neardup"], s["clean"]
-
-    raw_c = scored.groupBy("source").agg(*sc["raw_aggs"])
-    qual_c = passed.groupBy("source").agg(_cnt_col("n_quality"))
-    ex_c = exact.groupBy("source").agg(_cnt_col("n_exact"))
-    nd_c = neardup.groupBy("source").agg(_cnt_col("n_neardup"))
-    cl_c = clean.groupBy("source").agg(*sc["clean_aggs"])
-    return (
-        raw_c.join(qual_c, "source", "left")
-        .join(ex_c, "source", "left")
-        .join(nd_c, "source", "left")
-        .join(cl_c, "source", "left")
-        .select(*sc["rollup"])
-        .orderBy("source")
-    )
+    return stage_rollup(_curation_stages(spark, sf_dir))
 
 
 # DuckDB twin: the stage CTEs are the proven fragments from the
@@ -844,26 +862,7 @@ def curation_pipeline_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     one cell-local equi-join over (id, vector) rows — document bodies
     never enter it.
     """
-    s = _curation_stages(spark, sf_dir, semantic=True)
-    sc = _stage_cols()
-    scored, passed, exact = s["scored"], s["passed"], s["exact"]
-    neardup, semantic, clean = s["neardup"], s["semantic"], s["clean"]
-
-    def cnt(df: DataFrame, name: str) -> DataFrame:
-        return df.groupBy("source").agg(_cnt_col(name))
-
-    raw_c = scored.groupBy("source").agg(*sc["raw_aggs"])
-    cl_c = clean.groupBy("source").agg(*sc["clean_aggs"])
-    return (
-        raw_c
-        .join(cnt(passed, "n_quality"), "source", "left")
-        .join(cnt(exact, "n_exact"), "source", "left")
-        .join(cnt(neardup, "n_neardup"), "source", "left")
-        .join(cnt(semantic, "n_semantic"), "source", "left")
-        .join(cl_c, "source", "left")
-        .select(*sc["rollup_sem"])
-        .orderBy("source")
-    )
+    return stage_rollup(_curation_stages(spark, sf_dir, semantic=True))
 
 
 # DuckDB twin: the quality/exact/near-dup prefix is textually the

@@ -70,6 +70,7 @@ from .curation import (
     _curation_stages,
     assign_cells,
     pii_scrub_clean,
+    stage_rollup,
 )
 from .incremental_dedup import advance_dedup_index
 
@@ -233,41 +234,11 @@ def curation_pipeline_incremental(
 
         ledger = V.read_versioned(spark, pairs_path).select("d1", "d2")
         cells = V.read_versioned(spark, cells_path).select("vec_id", "cell")
-        s = _curation_stages(
-            spark, sf_dir, semantic=True, neardup_pairs=ledger, cells=cells,
-            corpus=corpus,
-        )
-
-        def cnt(df: DataFrame, name: str) -> DataFrame:
-            return df.groupBy("source").agg(F.count(F.lit(1)).alias(name))
-
-        cl_c = s["clean"].groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_clean"),
-            F.sum("n_tok").alias("clean_tokens"),
-        )
-        raw_c = s["scored"].groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_raw"),
-            F.sum("pii_hit").cast("bigint").alias("n_pii_redacted"),
-        )
-        rollup = (
-            raw_c
-            .join(cnt(s["passed"], "n_quality"), "source", "left")
-            .join(cnt(s["exact"], "n_exact"), "source", "left")
-            .join(cnt(s["neardup"], "n_neardup"), "source", "left")
-            .join(cnt(s["semantic"], "n_semantic"), "source", "left")
-            .join(cl_c, "source", "left")
-            .select(
-                "source",
-                "n_raw",
-                "n_pii_redacted",
-                F.coalesce("n_quality", F.lit(0)).alias("n_quality"),
-                F.coalesce("n_exact", F.lit(0)).alias("n_exact"),
-                F.coalesce("n_neardup", F.lit(0)).alias("n_neardup"),
-                F.coalesce("n_semantic", F.lit(0)).alias("n_semantic"),
-                F.coalesce("n_clean", F.lit(0)).alias("n_clean"),
-                F.coalesce("clean_tokens", F.lit(0)).alias("clean_tokens"),
+        rollup = stage_rollup(
+            _curation_stages(
+                spark, sf_dir, semantic=True, neardup_pairs=ledger,
+                cells=cells, corpus=corpus,
             )
-            .orderBy("source")
         )
         # pin the (≤ n_sources)-row result before the scratch lake is
         # removed — the returned frame must stay collectable

@@ -134,6 +134,8 @@ def test_curation_pipeline_planted(spark, tmp_path):
     V — decontamination: doc 50 (eval split, also quality-failing
         nonsense) leaks its 5-grams into doc 51's prefix (~39% gram
         overlap ≥ 30% threshold → contaminated) while doc 52 is clean.
+    Z — zero survivors: every doc fails the quality gate, so every
+        count past ``n_raw`` (and ``clean_tokens``) must be 0, not NULL.
     """
     stop_tail = "the and of to in is that it for with those people here"
     n_text = (
@@ -159,13 +161,15 @@ def test_curation_pipeline_planted(spark, tmp_path):
         (50, v_eval, "en", "V"),
         (51, v_contam, "en", "V"),
         (52, v_clean, "en", "V"),
+        (21, q_bad, "en", "Z"),
+        (22, "### ... ~~~ +++ === ||| <<< >>>", "en", "Z"),
     ]
     _write_docs(spark, tmp_path, rows)
 
     from f1_data_engineering_spark.operators import curation as CU
 
     out = {r["source"]: r for r in CU.curation_pipeline(spark, str(tmp_path)).collect()}
-    assert set(out) == {"N", "Q", "E", "V"}
+    assert set(out) == {"N", "Q", "E", "V", "Z"}
 
     n = out["N"]  # original + planted truncation; LSH prunes the copy
     assert (n["n_raw"], n["n_quality"], n["n_exact"]) == (2, 2, 2)
@@ -184,17 +188,39 @@ def test_curation_pipeline_planted(spark, tmp_path):
     assert v["n_clean"] == 1
     assert v["clean_tokens"] == len(v_clean.split())
 
+    z = out["Z"]  # nothing passes the quality gate: zeros, never NULL
+    assert z["n_raw"] == 2
+    zeros = ("n_quality", "n_exact", "n_neardup", "n_clean", "clean_tokens")
+    assert [z[c] for c in zeros] == [0] * len(zeros)
+
+
+def _source_aggregates(df) -> int:
+    """Aggregate nodes grouped on ``source`` alone, counted by walking
+    the optimized logical plan tree (cached stages are leaves)."""
+    n, todo = 0, [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Aggregate":
+            g = node.groupingExpressions()
+            n += g.size() == 1 and g.apply(0).toString().startswith("source#")
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
 
 def test_curation_pipeline_plan_quality(spark, sf_dir):
     """The composed plan must stay join-sane end to end: no
-    CartesianProduct anywhere, and the eval-gram set enters the
-    contamination join as a broadcast."""
+    CartesianProduct anywhere, the eval-gram set enters the
+    contamination join as a broadcast, and the per-source stage
+    counts of both pipelines come from ONE aggregate."""
     from f1_data_engineering_spark.operators import curation as CU
     from f1_data_engineering_spark.plans import assert_broadcast_join, physical_plan
 
     df = CU.curation_pipeline(spark, sf_dir)
     assert "CartesianProduct" not in physical_plan(df, "simple")
     assert_broadcast_join(df, at_least=1)
+    assert _source_aggregates(df) == 1
+    assert _source_aggregates(CU.curation_pipeline_semantic(spark, sf_dir)) == 1
 
 
 def test_write_clean_corpus_matches_pipeline(spark, sf_dir, tmp_path):
