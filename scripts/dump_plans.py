@@ -15,13 +15,14 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from f1_data_engineering_spark.plans import physical_plan
 from f1_data_engineering_spark.session import get_spark
 
-OUT_DIR = os.path.join("/root/repo", "plans", "r11")
+OUT_DIR = os.path.join(ROOT, "plans", "r11")
 
 
 def main() -> None:

@@ -3,7 +3,7 @@
 The driver only ships sf0.001/0.01/0.1; the scale posture claims need
 at least one more decade of evidence.  This script unions 10
 key-shifted copies of every sf0.1 table into
-``/root/repo/benchdata/sf1`` (gitignored), preserving the properties
+``benchdata/sf1`` in the checkout (gitignored), preserving the properties
 the queries depend on:
 
 * fact/dim FK integrity — every key column in a copy shifts by
@@ -28,7 +28,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -36,7 +37,7 @@ from f1_data_engineering_spark.session import get_spark
 from f1_data_engineering_spark.sources.registry import load_table
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/benchdata/sf1"
+DST = os.path.join(ROOT, "benchdata", "sf1")
 COPIES = 10
 
 

@@ -9,6 +9,7 @@ snapshot.  Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -16,7 +17,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

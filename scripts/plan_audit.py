@@ -6,10 +6,12 @@ Run: python scripts/plan_audit.py  (writes PLANS.md at repo root)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from f1_data_engineering_spark.operators import analytics as AN
 from f1_data_engineering_spark.operators import analytics2 as A2
@@ -564,7 +566,7 @@ def main() -> None:
         out.append(plan.strip()[:4000])
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

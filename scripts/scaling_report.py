@@ -19,13 +19,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from bench import BENCH_QUERIES
 from f1_data_engineering_spark.session import get_spark
 
-SF1_DIR = "/root/repo/benchdata/sf1"
+SF1_DIR = os.path.join(ROOT, "benchdata", "sf1")
 
 SFS = [("/root/testdata/sf0.01", 0.01), ("/root/testdata/sf0.1", 0.1)]
 if os.path.isdir(SF1_DIR):
@@ -219,7 +220,7 @@ def main() -> None:
             "not a plan defect)."
         )
     lines.append("")
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines))
     import json
 
@@ -227,7 +228,7 @@ def main() -> None:
     # measurement is distinguishable from a min-of-2 in the artifact —
     # a noisy single-run point tripping the super-linear flag is then
     # diagnosable from SCALING_DETAIL.json alone
-    with open("/root/repo/SCALING_DETAIL.json", "w") as f:
+    with open(os.path.join(ROOT, "SCALING_DETAIL.json"), "w") as f:
         json.dump(
             {
                 n: {

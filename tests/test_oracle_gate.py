@@ -12,12 +12,14 @@ equal, and must still pass genuinely-equal frames.
 """
 
 import importlib.util
+import os
 import sys
 
 import pandas as pd
 
 spec = importlib.util.spec_from_file_location(
-    "oracle_check", "/root/repo/scripts/oracle_check.py"
+    "oracle_check",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "oracle_check.py"),
 )
 oc = importlib.util.module_from_spec(spec)
 sys.modules["oracle_check"] = oc
