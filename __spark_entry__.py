@@ -126,11 +126,26 @@ MAX_GREEN_AGE_ROUNDS = 4
 #: pii_scrub_clean), so every stage fingerprints scrubbed text and the
 #: rollups gained an ``n_pii_redacted`` column: oracle text AND values
 #: changed.
+#:
+#: Single-scan MERGE: ``sources/dml.merge_into`` derives its guard,
+#: touched files, clause counts and inserts from one cached probe, and
+#: deletion-vector sidecars are read through one fixed-schema helper
+#: (``versioned._anti_join_dvs``) — every query whose path merges or
+#: reads DVs: ``merge_upsert_orders``, ``cdc_apply_rollup_orders``,
+#: ``dml_mor_delete_orders``, ``small_compaction_orders``,
+#: ``clone_diverge_orders``, ``describe_detail_orders``.
+#: ``cc_star_contraction`` builds its LSH pair graph once.
 CHANGED: set[str] = {
     "cdc_apply_rollup_orders",
     "curation_pipeline",
     "curation_pipeline_semantic",
     "curation_pipeline_incremental",
+    "merge_upsert_orders",
+    "dml_mor_delete_orders",
+    "small_compaction_orders",
+    "clone_diverge_orders",
+    "describe_detail_orders",
+    "cc_star_contraction",
 }
 
 #: Back-compat alias (pre-r11 name; semantics generalized above).

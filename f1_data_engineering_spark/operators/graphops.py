@@ -630,10 +630,13 @@ def cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from . import dedup as DD
 
+    # the pair graph is built once: ``nodes`` and the contraction's
+    # edges both read this checkpoint, not two runs of the LSH join
     pairs = (
         DD.minhash_lsh_pairs(spark, sf_dir)
         .filter(F.col("est_jaccard") >= 0.5)
         .select(F.col("d1").alias("u"), F.col("d2").alias("v"))
+        .localCheckpoint(eager=False)
     )
     nodes = (
         pairs.select(F.col("u").alias("node"))

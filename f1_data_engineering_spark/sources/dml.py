@@ -7,12 +7,17 @@ this is the engine-level replacement).
 
 Algorithm (the same shape Delta/Iceberg copy-on-write uses):
 
-1. **Find touched files.**  Scan the current snapshot with
-   ``input_file_name()`` and keep the DISTINCT file names owning at
-   least one row the operation affects (predicate rows for
-   DELETE/UPDATE, key-matched rows for MERGE — the match scan is a
-   semi-join against the source, broadcast when the source is small).
-   The collect is file-metadata sized, never row sized.
+1. **Find touched files.**  Scan the current snapshot with each row's
+   owning file (``_metadata.file_path``) and row position, and keep
+   the DISTINCT file names owning at least one row the operation
+   affects.  DELETE/UPDATE filter the scan by the predicate.  MERGE
+   builds one PROBE: the inner join of the scan with the source on
+   the merge keys, projected to (file, row position, applicable
+   clause, key) and cached.  It is the merge's only full-table scan
+   and it is source-sized: the cardinality guard, the touched files
+   and the per-clause counts come from one collect over it, and the
+   not-matched insert anti-joins the source against its keys.  Every
+   collect is file-metadata sized, never row sized.
 2. **Rewrite only those files.**  Untouched files carry over into the
    new snapshot by reference — zero IO.  Touched files are re-read
    and rewritten without the deleted rows / with assignments applied /
@@ -101,7 +106,7 @@ def _scan_with_file(spark: SparkSession, path: str, files: list[str]) -> DataFra
     a copy-on-write op over a table carrying MoR deletes must not
     resurrect them (the rewrite it commits materializes those deletes
     as a side effect)."""
-    from .versioned import _dv_files, _read_with_log_schema
+    from .versioned import _anti_join_dvs, _dv_files, _read_with_log_schema
 
     df = _read_with_log_schema(spark, path, files, None).select(
         "*",
@@ -110,18 +115,9 @@ def _scan_with_file(spark: SparkSession, path: str, files: list[str]) -> DataFra
         ),
         F.col("_metadata.row_index").alias("_dml_ri"),
     )
-    dvs = _dv_files(path, None)
-    if dvs:
-        dv = spark.read.parquet(*[os.path.join(path, f) for f in dvs]).select(
-            F.col("file").alias("_dv_f"), F.col("row_index").alias("_dv_ri")
-        )
-        df = df.join(
-            dv,
-            (F.col("_dml_file") == F.col("_dv_f"))
-            & (F.col("_dml_ri") == F.col("_dv_ri")),
-            "left_anti",
-        )
-    return df
+    return _anti_join_dvs(
+        spark, path, df, _dv_files(path, None), "_dml_file", "_dml_ri"
+    )
 
 
 def _touched(df_with_file: DataFrame, affected: Column) -> tuple[list[str], int]:
@@ -412,10 +408,23 @@ def merge_into(
 
     Only files containing at least one row a matched clause APPLIES to
     are rewritten (with conditional clauses, a file whose matched rows
-    all fail every condition carries over by reference); the match
-    scan is one equi-join of ``target ⋉ source`` on the key columns —
-    broadcast the source below the threshold, shuffle equi-join above,
-    never a full-table rewrite.
+    all fail every condition carries over by reference).
+
+    The table is scanned once, by the PROBE: ``target ⋈ source`` on
+    the key columns (broadcast the source below the threshold, shuffle
+    equi-join above), keeping matched rows only as (file, row
+    position, first applicable clause, key), cached.  From it:
+
+    * one collect of ``groupBy(file, row)`` then ``groupBy(file,
+      clause)`` gives the guard (a row matched more than once), the
+      touched files and ``n_updated``/``n_deleted``;
+    * the insert is ``source ▷ distinct probe keys`` — a source row
+      whose key matches any target row is never inserted, whatever
+      the clause conditions say; ``n_inserted`` is counted on it;
+    * the rewrite is ``touched scope ⟕ source``, cached only when CDF
+      capture reads it more than once.
+
+    The probe is released on every path out, a raise included.
     """
     if when_matched is not None and (when_matched_update or when_matched_delete):
         raise ValueError(
@@ -440,6 +449,15 @@ def merge_into(
         if cl["action"] == "delete" and cl.get("set"):
             raise ValueError(f"delete clause cannot set columns: {cl!r}")
     snap = _snapshot_files(path, None)
+    noop = {
+        "n_updated": 0,
+        "n_deleted": 0,
+        "n_inserted": 0,
+        "files_rewritten": 0,
+        "files_total": len(snap),
+    }
+    if not clauses and not when_not_matched_insert:
+        return {"version": _entries(path)[-1]["version"], **noop}
     df = _scan_with_file(spark, path, snap)
     tcols = [c for c in df.columns if c not in _META]
     types = dict(df.drop(*_META).dtypes)
@@ -447,6 +465,8 @@ def merge_into(
     def _clause_idx(matched: Column) -> Column:
         """First-match-wins clause index (NULL = no clause applies) —
         F.when chains evaluate in order, which IS the clause order."""
+        if not clauses:
+            return F.lit(None).cast("int")
         expr = F
         for i, cl in enumerate(clauses):
             cond = cl.get("condition")
@@ -458,163 +478,137 @@ def merge_into(
             expr = expr.when(matched & c, F.lit(i))
         return expr.otherwise(F.lit(None))
 
+    # eqNullSafe is NOT used — NULL keys never match
+    on_keys = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on]
+
     upd_idx = [i for i, cl in enumerate(clauses) if cl["action"] == "update"]
     del_idx = [i for i, cl in enumerate(clauses) if cl["action"] == "delete"]
 
-    if not clauses:
-        touched = []  # insert-if-absent: matched rows are untouched
-    else:
-        # duplicate check over keys that MATCH a target row only: the
-        # inner semi-join drops NULL keys for free (equality join
-        # semantics), and duplicate never-matching keys are legal —
-        # they take the insert branch, where multiplicity is
-        # well-defined.  Cost: one semi-join of the (small) source
-        # against distinct target keys, same scan shape the touched-
-        # file probe below plans anyway.
-        dup = (
-            source.join(df.select(*on).distinct(), on, "left_semi")
-            .groupBy(*on)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
+    # THE probe: matched target rows only, as (file, row position,
+    # applicable clause, key).  It is the merge's one full-table scan;
+    # the guard, the touched files, the clause counts and the insert
+    # anti-join all read it.  Cached, and source-sized: one row per
+    # (target row, source row) pair that matches on the keys.
+    probe = (
+        df.alias("t")
+        .join(source.alias("s"), on_keys, "inner")
+        .select(
+            F.col("t._dml_file").alias("_dml_file"),
+            F.col("t._dml_ri").alias("_dml_ri"),
+            _clause_idx(F.lit(True)).alias("_dml_ci"),
+            *[F.col(f"t.{k}").alias(k) for k in on],
         )
-        # the guard is independent of the touched-file probe below —
-        # overlap the two jobs (guide §2.6); the result is checked
-        # before anything is staged or committed, and the pool is shut
-        # down on every path out, a failed probe included
-        from concurrent.futures import ThreadPoolExecutor
-
-        guard_pool = ThreadPoolExecutor(max_workers=1)
-        try:
-            dup_fut = guard_pool.submit(dup.count)
-            # touched = files holding at least one row some clause
-            # APPLIES to (an inner join probe: matched rows only;
-            # conditions can reference t./s. columns)
-            probe = df.alias("t").join(
-                source.alias("s"),
-                [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on],
-                "inner",
-            )
-            hit = probe.filter(_clause_idx(F.lit(True)).isNotNull())
-            touched = [
-                r["f"]
-                for r in hit.select(F.col("t._dml_file").alias("f"))
-                .distinct()
+        .cache()
+    )
+    cached = [probe]
+    try:
+        touched: list[str] = []
+        n_updated = n_deleted = 0
+        if clauses:
+            # one collect, (file × clause)-sized: max matches per target
+            # row (the guard), and per (file, clause) the rows hit
+            stats = (
+                probe.groupBy("_dml_file", "_dml_ri")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.min("_dml_ci").alias("_dml_ci"),
+                )
+                .groupBy("_dml_file", "_dml_ci")
+                .agg(F.count(F.lit(1)).alias("rows"), F.max("n").alias("max_n"))
                 .collect()
-            ]
-            if dup_fut.result() > 0:
+            )
+            # source-cardinality guard: a target row matched by several
+            # source rows (only keys that MATCH count — the probe is an
+            # inner join, so NULL and never-matching keys are absent)
+            if any(r["max_n"] > 1 for r in stats):
                 raise ValueError(
                     "source has multiple rows matching the same target "
                     "merge key — resolve (e.g. latest-wins dedup) before "
                     "merging"
                 )
-        finally:
-            guard_pool.shutdown()
-
-    # rewrite touched files: unmatched rows (and matched rows no clause
-    # applies to) pass through; clause-hit rows update or delete.
-    # eqNullSafe is NOT used — NULL keys never match.
-    n_updated = n_deleted = 0
-    rewritten = None
-    cdf: list[tuple[DataFrame, str]] = []
-    if touched:
-        scope = df.filter(F.col("_dml_file").isin(touched)).alias("t")
-        s = source.alias("s")
-        joined = scope.join(
-            s, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on], "left"
-        )
-        is_matched = F.col(f"s.{on[0]}").isNotNull()
-        # cached: the clause-count aggregate, the rewrite staging, and
-        # (with CDF) three sidecar projections all consume this join —
-        # uncached each one re-runs the touched-scope ⋈ source join
-        # (guide §5 caching: reused and recomputation-heavy).  Scope is
-        # touched-files-sized, never table-sized.  Unpersisted after
-        # the commit.
-        joined = joined.withColumn(
-            "_dml_ci", _clause_idx(is_matched)
-        ).cache()
-        ci = F.col("_dml_ci")
-        counts = {
-            r["_dml_ci"]: r["count"]
-            for r in joined.filter(ci.isNotNull())
-            .groupBy("_dml_ci")
-            .count()
-            .collect()
-        }
-        n_updated = sum(counts.get(i, 0) for i in upd_idx)
-        n_deleted = sum(counts.get(i, 0) for i in del_idx)
-        t_row = [F.col(f"t.{c}").alias(c) for c in tcols]
-        out = []
-        for c in tcols:
-            e = F
-            branched = False
-            for i in upd_idx:
-                st = clauses[i]["set"]
-                if c in st:
-                    e = e.when(ci == i, _to_cond(st[c]).cast(types[c]))
-                    branched = True
-            out.append(
-                (e.otherwise(F.col(f"t.{c}")) if branched else F.col(f"t.{c}"))
-                .alias(c)
+            touched = sorted(
+                {r["_dml_file"] for r in stats if r["_dml_ci"] is not None}
             )
-        survivors = (
-            joined.filter(~ci.isin(del_idx) | ci.isNull())
-            if del_idx
-            else joined
-        )
-        rewritten = survivors.select(*out)
-        if capture_cdf:
-            if del_idx and n_deleted:
-                cdf.append(
-                    (joined.filter(ci.isin(del_idx)).select(*t_row), "delete")
+            n_updated = sum(r["rows"] for r in stats if r["_dml_ci"] in upd_idx)
+            n_deleted = sum(r["rows"] for r in stats if r["_dml_ci"] in del_idx)
+
+        # rewrite touched files: unmatched rows (and matched rows no
+        # clause applies to) pass through; clause-hit rows update or
+        # delete.
+        rewritten = None
+        cdf: list[tuple[DataFrame, str]] = []
+        if touched:
+            scope = df.filter(F.col("_dml_file").isin(touched)).alias("t")
+            is_matched = F.col(f"s.{on[0]}").isNotNull()
+            joined = scope.join(source.alias("s"), on_keys, "left").withColumn(
+                "_dml_ci", _clause_idx(is_matched)
+            )
+            if capture_cdf:
+                # the rewrite and the sidecar projections all consume
+                # the join; touched-files-sized, never table-sized
+                joined = joined.cache()
+                cached.append(joined)
+            ci = F.col("_dml_ci")
+            t_row = [F.col(f"t.{c}").alias(c) for c in tcols]
+            out = []
+            for c in tcols:
+                e = F
+                branched = False
+                for i in upd_idx:
+                    st = clauses[i]["set"]
+                    if c in st:
+                        e = e.when(ci == i, _to_cond(st[c]).cast(types[c]))
+                        branched = True
+                out.append(
+                    (e.otherwise(F.col(f"t.{c}")) if branched else F.col(f"t.{c}"))
+                    .alias(c)
                 )
-            if upd_idx and n_updated:
-                upd = joined.filter(ci.isin(upd_idx))
-                cdf.append((upd.select(*t_row), "update_preimage"))
-                cdf.append((upd.select(*out), "update_postimage"))
-
-    inserts = None
-    n_inserted = 0
-    if when_not_matched_insert:
-        # a source row matching ANY target row matches one in a touched
-        # file by construction, so anti-joining the full target equals
-        # anti-joining the touched scope — use the full snapshot keys
-        # for clarity (it is the same scan the semi-join planned)
-        unmatched = source.join(df.select(*on), on, "left_anti")
-        if insert_condition is not None:
-            unmatched = unmatched.filter(
-                F.coalesce(_to_cond(insert_condition), F.lit(False))
+            survivors = (
+                joined.filter(~ci.isin(del_idx) | ci.isNull())
+                if del_idx
+                else joined
             )
-        n_inserted = unmatched.count()
-        if n_inserted:
-            inserts = unmatched.select(
-                *[
-                    F.col(c).cast(types[c]).alias(c)
-                    if c in unmatched.columns
-                    else F.lit(None).cast(types[c]).alias(c)
-                    for c in tcols
-                ]
-            )
+            rewritten = survivors.select(*out)
+            if capture_cdf:
+                if del_idx and n_deleted:
+                    cdf.append(
+                        (joined.filter(ci.isin(del_idx)).select(*t_row), "delete")
+                    )
+                if upd_idx and n_updated:
+                    upd = joined.filter(ci.isin(upd_idx))
+                    cdf.append((upd.select(*t_row), "update_preimage"))
+                    cdf.append((upd.select(*out), "update_postimage"))
 
-    new_df = None
-    if rewritten is not None and inserts is not None:
-        new_df = rewritten.unionByName(inserts)
-    elif rewritten is not None:
-        new_df = rewritten
-    elif inserts is not None:
-        new_df = inserts
-    if new_df is None and not touched:
-        return {
-            "version": _entries(path)[-1]["version"],
-            "n_updated": 0,
-            "n_deleted": 0,
-            "n_inserted": 0,
-            "files_rewritten": 0,
-            "files_total": len(snap),
-        }
-    if capture_cdf and inserts is not None:
-        cdf.append((inserts, "insert"))
-    try:
+        inserts = None
+        n_inserted = 0
+        if when_not_matched_insert:
+            # a source row whose key matches ANY target row is in the
+            # probe, so anti-joining the probe's keys equals anti-joining
+            # the table — at source size.  NULL keys never match: insert.
+            unmatched = source.join(probe.select(*on).distinct(), on, "left_anti")
+            if insert_condition is not None:
+                unmatched = unmatched.filter(
+                    F.coalesce(_to_cond(insert_condition), F.lit(False))
+                )
+            n_inserted = unmatched.count()
+            if n_inserted:
+                inserts = unmatched.select(
+                    *[
+                        F.col(c).cast(types[c]).alias(c)
+                        if c in unmatched.columns
+                        else F.lit(None).cast(types[c]).alias(c)
+                        for c in tcols
+                    ]
+                )
+
+        if rewritten is not None and inserts is not None:
+            new_df = rewritten.unionByName(inserts)
+        else:
+            new_df = rewritten if rewritten is not None else inserts
+        if new_df is None:
+            return {"version": _entries(path)[-1]["version"], **noop}
+        if capture_cdf and inserts is not None:
+            cdf.append((inserts, "insert"))
         version = _commit_rewrite(
             new_df,
             path,
@@ -625,11 +619,11 @@ def merge_into(
                 "n_deleted": n_deleted,
                 "n_inserted": n_inserted,
             },
-            cdf if (capture_cdf and cdf) else None,
+            cdf or None,
         )
     finally:
-        if touched:
-            joined.unpersist()
+        for c in cached:
+            c.unpersist()
     return {
         "version": version,
         "n_updated": n_updated,

@@ -689,32 +689,53 @@ def _dv_files(path: str, version: int | None) -> list[str]:
     return kept
 
 
+#: Fixed schema of a deletion-vector sidecar (``dml.delete_where_mor``
+#: writes it): reading with it skips parquet schema inference, a Spark
+#: job per read of a table carrying DVs.
+_DV_SCHEMA = "file STRING, row_index BIGINT"
+
+
+def _anti_join_dvs(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    dvs: list[str],
+    file_col: str,
+    ri_col: str,
+) -> DataFrame:
+    """``df`` minus the rows the deletion-vector sidecars ``dvs``
+    delete, matched on (owning file basename ``file_col``, row position
+    ``ri_col``).  The DV side is O(MoR-deleted rows) — broadcast-sized
+    until a compaction materializes it away."""
+    if not dvs:
+        return df
+    dv = (
+        spark.read.schema(_DV_SCHEMA)
+        .parquet(*[os.path.join(path, f) for f in dvs])
+        .select(F.col("file").alias("_dv_f"), F.col("row_index").alias("_dv_ri"))
+    )
+    return df.join(
+        dv,
+        (F.col(file_col) == F.col("_dv_f")) & (F.col(ri_col) == F.col("_dv_ri")),
+        "left_anti",
+    )
+
+
 def _apply_dvs(
     spark: SparkSession, path: str, df: DataFrame, version: int | None
 ) -> DataFrame:
-    """Merge-on-read: anti-join the scan against the in-effect
-    deletion vectors on (owning file basename, row position).  The DV
-    side is O(MoR-deleted rows) — broadcast-sized until a compaction
-    materializes it away."""
+    """Merge-on-read: the snapshot scan ``df`` with the deletion
+    vectors in effect at ``version`` applied."""
     dvs = _dv_files(path, version)
     if not dvs:
         return df
-    dv = spark.read.parquet(*[os.path.join(path, f) for f in dvs]).select(
-        F.col("file").alias("_dv_f"), F.col("row_index").alias("_dv_ri")
-    )
     tagged = df.select(
         "*",
         F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_mor_f"),
         F.col("_metadata.row_index").alias("_mor_ri"),
     )
-    return (
-        tagged.join(
-            dv,
-            (F.col("_mor_f") == F.col("_dv_f"))
-            & (F.col("_mor_ri") == F.col("_dv_ri")),
-            "left_anti",
-        )
-        .drop("_mor_f", "_mor_ri")
+    return _anti_join_dvs(spark, path, tagged, dvs, "_mor_f", "_mor_ri").drop(
+        "_mor_f", "_mor_ri"
     )
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from f1_data_engineering_spark.sources import dml as D
@@ -193,6 +194,78 @@ def test_merge_null_keys_never_match(spark, tmp_path):
     assert sorted(
         x["v"] for x in snap.filter("k IS NULL").collect()
     ) == [1, 100]
+
+
+def _input_records(spark, first_job: int, last_job: int) -> int:
+    """Rows read from storage (stage ``inputRecords``) by jobs
+    ``[first_job, last_job)``, from the status store once the listener
+    bus has drained (perfbench/harness.py ``SparkProbe.collect``)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    seen: set[int] = set()
+    total = 0
+    for jid in range(first_job, last_job):
+        ids = store.job(jid).stageIds()
+        for i in range(ids.size()):
+            sid = int(ids.apply(i))
+            if sid in seen:
+                continue
+            seen.add(sid)
+            try:
+                stage = store.lastStageAttempt(sid)
+            except Exception:  # noqa: BLE001 - skipped stage never attempted
+                continue
+            total += int(stage.inputRecords())
+    return total
+
+
+def test_merge_scans_table_once(spark, lake):
+    """The guard, the touched files, the clause counts and the insert
+    anti-join all read one source-sized probe: a MERGE touching one of
+    four files reads the table once plus that file, not once per
+    consumer."""
+    sc = spark.sparkContext._jsc.sc()
+    src = spark.createDataFrame(
+        [(10, 1, "u"), (11, 2, "u"), (500, 3, "i")], "k long, v long, s string"
+    )
+    first = int(sc.dagScheduler().nextJobId())
+    r = D.merge_into(spark, lake, src, on=["k"], when_matched_update={"v": "s.v"})
+    last = int(sc.dagScheduler().nextJobId())
+    assert (r["n_updated"], r["n_inserted"]) == (2, 1)
+    assert (r["files_rewritten"], r["files_total"]) == (1, 4)
+    assert _input_records(spark, first, last) < 2 * 100
+
+
+def _cache_state(spark) -> tuple[set[int], int]:
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().keySet()
+    n_plans = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    return {int(i) for i in rdds}, int(n_plans)
+
+
+@pytest.mark.parametrize(
+    "src_rows, clause, error, match",
+    [
+        # the cardinality guard raises after the probe is materialized
+        ([(50, 1, "a"), (50, 2, "b")], {"action": "update", "set": {"v": "s.v"}},
+         ValueError, "multiple rows matching"),
+        # an unparseable clause condition raises while the merge is planned
+        ([(10, 1, "a")], {"action": "update", "condition": "s.v >",
+                          "set": {"v": "s.v"}},
+         ParseException, "PARSE_SYNTAX_ERROR"),
+    ],
+    ids=["cardinality_guard", "unparseable_condition"],
+)
+def test_merge_failure_leaks_nothing(spark, lake, src_rows, clause, error, match):
+    """A MERGE that raises leaves no persisted RDD, no cached plan and
+    no commit behind."""
+    src = spark.createDataFrame(src_rows, "k long, v long, s string")
+    before = _cache_state(spark)
+    version = V.latest_version(lake)
+    with pytest.raises(error, match=match):
+        D.merge_into(spark, lake, src, on=["k"], when_matched=[clause])
+    assert _cache_state(spark) == before
+    assert V.latest_version(lake) == version
 
 
 def test_time_travel_across_rewrites(spark, lake):

@@ -10,6 +10,10 @@ table state against the declaratively-computed expected state in
 DuckDB — the same rows+schema+values gate as the driver.  Also pins
 the two delete strategies against each other (CoW state == MoR state)
 and change-feed replay (v0 + feed == head).
+
+The two MERGE suites form a smoke tier that runs in the default profile
+on ``SMOKE_EXAMPLES`` examples each; the other suites are ``soak`` and
+run, with the full counts, only under ``SPARK_GRAFT_FULL_TESTS=1``.
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ from pyspark.sql import functions as F
 from f1_data_engineering_spark.sources import dml as D
 from f1_data_engineering_spark.sources import versioned as V
 
-pytestmark = pytest.mark.soak
+from conftest import RUN_SOAKS
 
 _SPEC = importlib.util.spec_from_file_location(
     "oracle_check",
@@ -43,6 +47,15 @@ compare = _ORACLE_CHECK.compare
 def _n_examples(default: int) -> int:
     base = int(os.environ.get("SPARK_GRAFT_FUZZ_EXAMPLES", "0"))
     return max(1, round(base * default / 8)) if base else default
+
+
+#: Smoke tier: the two MERGE suites also run in the default profile,
+#: on this many examples each; the full profile runs their soak counts.
+SMOKE_EXAMPLES = 2
+
+
+def _smoke_or(default: int) -> int:
+    return _n_examples(default) if RUN_SOAKS else SMOKE_EXAMPLES
 
 
 @pytest.fixture(scope="module")
@@ -133,6 +146,7 @@ def _snap_pdf(spark, t):
     return V.read_versioned(spark, t).select("k", "v", "s").toPandas()
 
 
+@pytest.mark.soak
 @settings(
     max_examples=_n_examples(8),
     deadline=None,
@@ -167,7 +181,7 @@ def test_delete_cow_mor_and_oracle(spark, fuzz_dir, case):
 
 
 @settings(
-    max_examples=_n_examples(8),
+    max_examples=_smoke_or(8),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
@@ -258,6 +272,7 @@ def test_update_then_merge_oracle_and_feed_replay(spark, fuzz_dir, case):
     assert head.exceptAll(state).count() == 0
 
 
+@pytest.mark.soak
 @settings(
     max_examples=_n_examples(6),
     deadline=None,
@@ -380,7 +395,7 @@ def _clause_case(draw):
 
 
 @settings(
-    max_examples=_n_examples(8),
+    max_examples=_smoke_or(8),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
@@ -552,6 +567,7 @@ def _ck_history(draw):
             "ops": ops}
 
 
+@pytest.mark.soak
 @settings(
     max_examples=_n_examples(10),
     deadline=None,
