@@ -135,6 +135,12 @@ MAX_GREEN_AGE_ROUNDS = 4
 #: ``dml_mor_delete_orders``, ``small_compaction_orders``,
 #: ``clone_diverge_orders``, ``describe_detail_orders``.
 #: ``cc_star_contraction`` builds its LSH pair graph once.
+#:
+#: Nation-graph algorithms in one task: ``pagerank_nations``,
+#: ``triangle_count_trade``, ``bfs_hops_trade`` and
+#: ``sssp_trade_costs`` run in one cogrouped ``applyInPandas`` call
+#: over the distributed edge build; ORACLE_TRIANGLES materializes its
+#: CTEs and ORACLE_PAGERANK its per-iteration rank stages.
 CHANGED: set[str] = {
     "cdc_apply_rollup_orders",
     "curation_pipeline",
@@ -146,6 +152,10 @@ CHANGED: set[str] = {
     "clone_diverge_orders",
     "describe_detail_orders",
     "cc_star_contraction",
+    "pagerank_nations",
+    "triangle_count_trade",
+    "bfs_hops_trade",
+    "sssp_trade_costs",
 }
 
 #: Back-compat alias (pre-r11 name; semantics generalized above).

@@ -1,48 +1,46 @@
-"""Graph analytics over the TPC-H trade graph: fixed-iteration
-PageRank and degree-oriented triangle counting.
+"""Graph analytics over the TPC-H nation trade graph: fixed-iteration
+PageRank, triangle census, bounded BFS and bounded Bellman-Ford SSSP;
+plus star-contraction connected components over the near-dup pair
+graph.
 
 Beyond-reference scope (the reference's eager pandas layer has no
-graph shapes); these are the two canonical "iterate / enumerate over
-an edge list" operators a 100 TB relational lake still needs — entity
-importance (PageRank over who-buys-from-whom) and community density
-(triangles).  The graph here is the **nation-level trade graph**:
-edge ``cust_nation -> supp_nation`` weighted by the number of
-lineitems a customer of the source nation bought from a supplier of
-the destination nation.
+graph shapes).  The **nation trade graph** has an edge
+``cust_nation -> supp_nation`` weighted by the number of lineitems a
+customer of the source nation bought from a supplier of the
+destination nation.
 
-Scale design:
+Design:
 
-* **Graph build** is two broadcast-dimension joins (customer and
-  supplier keyed maps are dim-sized) + one hash aggregate on the
-  (src, dst) pair — the only big shuffle carries 16-byte key pairs,
-  map-side combined.
-* **PageRank** keeps node state as a DataFrame (NEVER collected):
-  each iteration is edges ⋈ ranks on src (one hash join keyed like
-  the previous iteration — the exchange layout is reusable), a
-  groupBy dst, and a left join back to the node spine.  Per-iteration
-  cost ∝ |E| shuffled bytes, state ∝ |V|; at 100 TB the nation graph
-  is trivially small, and the same plan holds for a billion-node
-  graph because nothing is driver-materialized.  Iterations are fixed
-  (``PR_ITERS``) so the DuckDB oracle can unroll the recurrence into
-  one CTE chain per iteration.
-* **FP parity** for the rank sums: every order-sensitive double sum
-  (inflow per dst, dangling mass) is a LEFT-TO-RIGHT fold over the
-  contribution list sorted by source node — Spark folds
-  ``array_sort(collect_list(struct(src, contrib)))``, DuckDB
-  ``list_sum(list(contrib ORDER BY src))`` — so both engines add the
-  same doubles in the same order and the 10-iteration fixpoint is
-  bit-identical (same trick as the cosine folds in similarity.py).
-* **Triangles** use the classic degree-orientation: each undirected
-  edge points from its (degree, id)-smaller endpoint to the larger,
-  so every triangle is counted exactly once as an oriented wedge
-  (u→v, u→w, v<w ordering implied by orientation) closed by the
-  oriented edge (v→w).  The wedge join fans out by out-degree, which
-  orientation bounds by O(√|E|) — the standard distributed triangle
-  bound; all joins are equi-joins on node ids.
+* **Edge build** (:func:`_trade_edges`) is the only part whose size
+  grows with the scale factor: one fact-fact join on the order key,
+  two broadcast dimension joins and one map-side-combined aggregate on
+  the (src, dst) pair.  It stays distributed.
+* **The nation-graph algorithms run in one task.**  The graph has one
+  node per ``nation`` row (25 at every scale factor) and at most 625
+  edges, so :func:`_on_nation_graph` cogroups the nodes with the edges
+  on one constant key and hands both, as pandas frames, to a
+  plain-Python function in a single ``applyInPandas`` call.  Building
+  a query submits no Spark job, and running it takes the same few
+  jobs whatever the iteration count; a distributed loop paid one
+  checkpointed join per round.
+* **FP parity** for PageRank: every double sum (inflow per dst,
+  dangling mass) is a left-to-right fold from 0.0 over the terms in
+  source-node order, the order of DuckDB's
+  ``list_sum(list(x ORDER BY src))``, so both engines add the same
+  doubles in the same order and the 10-iteration fixpoint is
+  bit-identical.  Rounding and the rank position stay in Spark:
+  Python's ``round`` is half-even, Spark's HALF_UP.
+* **Star contraction** (:func:`cc_star_contraction`) stays a
+  distributed loop: its pair graph grows with the corpus.
 """
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+from functools import reduce
+from operator import add
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -64,13 +62,9 @@ PR_DAMPING = 0.85  # exactly representable? 0.85 is not exact in binary,
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed weighted edges cust_nation -> supp_nation.
-
-    lineitem ⋈ orders(broadcastable at dim granularity? orders is a
-    fact — join on l_orderkey is the one fact-fact shuffle) ⋈ customer
-    ⋈ supplier; customer/supplier are broadcast dims.  Output is at
-    most |nations|² rows after the map-side-combined count.
-    """
+    """Directed weighted edges cust_nation -> supp_nation: lineitem ⋈
+    orders (the one fact-fact join) ⋈ broadcast customer ⋈ broadcast
+    supplier, then a map-side-combined count; at most |nations|² rows."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -96,12 +90,34 @@ GROUP BY 1, 2
 """
 
 
+def _on_nation_graph(spark: SparkSession, sf_dir: str, fn, schema: str) -> DataFrame:
+    """``fn(nodes, edges)`` over the whole nation trade graph in one
+    task: ``nodes`` (node, n_name) is the ``nation`` table and
+    ``edges`` (src, dst, w) is :func:`_trade_edges`, both as pandas
+    frames, cogrouped on one constant key; ``fn`` returns a frame of
+    ``schema``.  Either side may be empty.  The key needs its alias: a
+    bare ``F.lit(0)`` key fails analysis."""
+    k = F.lit(0).alias("_g")
+    nation = load_table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("node"), "n_name"
+    )
+    return (
+        nation.groupBy(k)
+        .cogroup(_trade_edges(spark, sf_dir).groupBy(k))
+        .applyInPandas(fn, schema)
+    )
+
+
+def _fold(xs) -> float:
+    """Left-to-right double sum from 0.0 (``sum`` may compensate)."""
+    return reduce(add, xs, 0.0)
+
+
 @memo_col
 def _sorted_fold_sum(order_col: str, value_col: str) -> Column:
     """Deterministic double sum: left fold over values sorted by
     ``order_col`` (parity twin of DuckDB ``list_sum(list(v ORDER BY o))``).
-    memo_col: rebuilt per PageRank iteration otherwise (~130 py4j round
-    trips each) — the tree is constant per (order, value) name pair."""
+    memo_col: the tree is constant per (order, value) name pair."""
     return F.aggregate(
         F.transform(
             F.array_sort(F.collect_list(F.struct(order_col, value_col))),
@@ -112,6 +128,38 @@ def _sorted_fold_sum(order_col: str, value_col: str) -> Column:
     )
 
 
+def _pagerank(nodes: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
+    """Raw rank ``r`` of every node after ``PR_ITERS`` iterations.
+
+    An edge's share is w / out(src), with out(src) summed over every
+    edge; only edges between two nodes carry rank, and a node with no
+    out-edge at all is dangling."""
+    n = float(len(nodes))
+    if not n:
+        return nodes.assign(r=0.0)
+    node_ids = nodes.node.tolist()
+    src, dst, w = edges.src.tolist(), edges.dst.tolist(), edges.w.tolist()
+    out_w = Counter()
+    for u, x in zip(src, w):
+        out_w[u] += x
+    into = {v: [] for v in node_ids}  # dst -> [(src, share)] in src order
+    for u, v, x in sorted(zip(src, dst, w)):
+        if u in into and v in into:
+            into[v].append((u, float(x) / float(out_w[u])))
+    dangling = sorted(v for v in node_ids if v not in out_w)
+    # 1 - 0.85 is 0.15000000000000002, not the literal 0.15; the oracle
+    # interpolates the same Python-computed value
+    base = (1.0 - PR_DAMPING) / n
+    r = dict.fromkeys(node_ids, 1.0 / n)
+    for _ in range(PR_ITERS):
+        dm = _fold(r[v] for v in dangling)
+        r = {
+            v: base + PR_DAMPING * (_fold(r[u] * s for u, s in into[v]) + dm / n)
+            for v in node_ids
+        }
+    return nodes.assign(r=[r[v] for v in node_ids])
+
+
 def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``PR_ITERS`` fixed iterations of damped PageRank over the
     nation trade graph; returns every nation with its rank and
@@ -119,89 +167,26 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r_{k+1}(v) = (1-d)/N + d·(Σ_{(u,v)∈E} r_k(u)·w(u,v)/out(u)
                               + dangling_k/N)
-
-    The dangling-mass scalar is a 1-row aggregate crossJoined in
-    (broadcast, the sanctioned scalar pattern).  State stays
-    distributed; lineage depth is ``PR_ITERS`` joins over a
-    25-row state — checkpoint per iteration when |V| is large (see
-    dedup_clusters for the localCheckpoint loop pattern).
     """
-    nation = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node"), "n_name"
+    ranks = _on_nation_graph(
+        spark, sf_dir, _pagerank, "node int, n_name string, r double"
     )
-    n_nodes = nation.count()  # graph metadata, dim-sized by construction
-
-    edges = _trade_edges(spark, sf_dir)
-    out = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    # localCheckpoint truncates lineage: ``ranks`` feeds BOTH the
-    # dangling-mass and the inflow branch each iteration, so without
-    # truncation the logical plan doubles per iteration (2^ITERS copies
-    # of the 4-table edge build — Catalyst stack-overflows around 10).
-    # The checkpointed state is |V|-sized (nation granularity here);
-    # at billion-node scale swap in reliable checkpoint() to HDFS.
-    edges = edges.join(out, "src").select(
-        "src",
-        "dst",
-        (F.col("w").cast("double") / F.col("out_w").cast("double")).alias("s"),
-    ).localCheckpoint(eager=True)
-    dangling = nation.join(edges.select("src"), nation.node == F.col("src"), "left_anti")
-
-    # teleport derived from the damping constant so the two can never
-    # desynchronize; NB in IEEE 1-0.85 is 0.15000000000000002 (not the
-    # literal-0.15 double) — the oracle f-string interpolates the same
-    # Python-computed value, keeping both engines in lockstep
-    base = F.lit(1.0 - PR_DAMPING) / F.lit(float(n_nodes))
-    ranks = nation.select("node", (F.lit(1.0) / F.lit(float(n_nodes))).alias("r"))
-
-    for _ in range(PR_ITERS):
-        dm = (
-            dangling.join(ranks, "node")
-            .agg(F.coalesce(_sorted_fold_sum("node", "r"), F.lit(0.0)).alias("dm"))
-        )
-        inflow = (
-            edges.join(ranks, edges.src == ranks.node)
-            .select("dst", "src", (F.col("r") * F.col("s")).alias("contrib"))
-            .groupBy("dst")
-            .agg(_sorted_fold_sum("src", "contrib").alias("infl"))
-        )
-        ranks = (
-            nation.select("node")
-            .join(inflow, nation.node == inflow.dst, "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "node",
-                (
-                    base
-                    + F.lit(PR_DAMPING)
-                    * (
-                        F.coalesce(F.col("infl"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n_nodes))
-                    )
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    pos = F.row_number().over(W.orderBy(F.col("_key").desc(), F.col("node")))
-    return (
-        ranks.join(F.broadcast(nation), "node")
-        .select(
-            "node",
-            "n_name",
-            F.round("r", 6).alias("pagerank"),
-            F.round("r", 9).alias("_key"),
-        )
-        .withColumn("position", pos.cast("long"))
-        .select("node", "n_name", "pagerank", "position")
-        .orderBy("position")
-    )
+    pos = F.row_number().over(W.orderBy(F.round("r", 9).desc(), F.col("node")))
+    return ranks.select(
+        "node",
+        "n_name",
+        F.round("r", 6).alias("pagerank"),
+        pos.cast("long").alias("position"),
+    ).orderBy("position")
 
 
 def _oracle_pagerank() -> str:
     """Unrolled CTE chain — one (dm, inflow, rank) stage per iteration."""
     # shared CTEs are MATERIALIZED: the unrolled iteration chain
     # references them 10+ times, and inlining would re-open the base
-    # parquet per reference (fd exhaustion on the 4-table edge scan)
+    # parquet per reference (fd exhaustion on the 4-table edge scan);
+    # each rank stage r{k} feeds two CTEs of the next, so inlined the
+    # chain expands 2^PR_ITERS-fold (~25 s even on a 3-node lake)
     parts = [
         f"WITH edges_raw AS MATERIALIZED ({_SQL_EDGES}),",
         "nodes AS MATERIALIZED (SELECT n_nationkey AS node, n_name FROM nation),",
@@ -213,7 +198,7 @@ def _oracle_pagerank() -> str:
         """dangling AS MATERIALIZED (
   SELECT node FROM nodes WHERE node NOT IN (SELECT src FROM edges)
 ),""",
-        "r0 AS (SELECT node, 1.0 / nn.n AS r FROM nodes, nn),",
+        "r0 AS MATERIALIZED (SELECT node, 1.0 / nn.n AS r FROM nodes, nn),",
     ]
     for k in range(PR_ITERS):
         parts.append(
@@ -225,7 +210,7 @@ infl{k} AS (
   SELECT e.dst AS node, list_sum(list(r{k}.r * e.s ORDER BY e.src)) AS infl
   FROM edges e JOIN r{k} ON e.src = r{k}.node GROUP BY e.dst
 ),
-r{k + 1} AS (
+r{k + 1} AS MATERIALIZED (
   SELECT n.node,
     {1.0 - PR_DAMPING} / nn.n + {PR_DAMPING} * (COALESCE(i.infl, 0.0) + d.dm / nn.n) AS r
   FROM nodes n
@@ -248,107 +233,59 @@ FROM ranked ORDER BY position"""
 ORACLE_PAGERANK = _oracle_pagerank()
 
 
+def _triangles(nodes: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
+    """Per-node triangle count of the undirected graph over every edge
+    (self-loops dropped), including triangles through endpoints that
+    are not nodes."""
+    adj = defaultdict(set)
+    for u, v in zip(edges.src.tolist(), edges.dst.tolist()):
+        if u != v:
+            adj[u].add(v)
+            adj[v].add(u)
+    count = Counter()
+    for a, nbrs in adj.items():
+        for b in nbrs:
+            for c in nbrs & adj[b]:
+                if a < b < c:
+                    count.update((a, b, c))
+    return nodes.assign(n_triangles=[count[v] for v in nodes.node.tolist()])
+
+
 def triangle_count_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation triangle participation in the undirected trade graph
     (distinct nation pairs with any trade in either direction;
-    self-loops dropped).
-
-    Degree orientation → wedge equi-join → closing-edge semi join;
-    each triangle found once, then exploded to its three corners for
-    the per-node census.  Everything is an equi-join on int keys.
-    """
-    e = _trade_edges(spark, sf_dir)
-    # localCheckpoint: ``und`` fans out into degree (×2) / wedge (×2) /
-    # closing (×2) branches — inlined, the 4-table edge build would
-    # appear ~20× in the static plan (90 lineitem scans observed);
-    # truncating here computes it once.  State is |E_und| rows.
-    und = (
-        e.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    lower_a = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(F.broadcast(da), "a")
-        .join(F.broadcast(db), "b")
-        .select(
-            F.when(lower_a, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(lower_a, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-    )
-    e1 = oriented.select(F.col("u"), F.col("v").alias("x"))
-    e2 = oriented.select(F.col("u"), F.col("v").alias("y"))
-    wedges = e1.join(e2, "u").filter(F.col("x") < F.col("y"))
-    tri = wedges.join(
-        oriented.select(F.col("u").alias("x"), F.col("v").alias("y")),
-        ["x", "y"],
-        "inner",
-    ).unionAll(
-        # closing edge may be oriented y->x when deg(y) < deg(x)
-        wedges.join(
-            oriented.select(F.col("v").alias("x"), F.col("u").alias("y")),
-            ["x", "y"],
-            "inner",
-        )
-    )
-    corners = (
-        tri.select(F.col("u").alias("node"))
-        .unionAll(tri.select(F.col("x").alias("node")))
-        .unionAll(tri.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node"), "n_name"
-    )
-    return (
-        nation.join(corners, "node", "left")
-        .select(
-            "node",
-            "n_name",
-            F.coalesce("n_triangles", F.lit(0)).cast("long").alias("n_triangles"),
-        )
-        .orderBy("node")
-    )
+    self-loops dropped)."""
+    return _on_nation_graph(
+        spark, sf_dir, _triangles, "node int, n_name string, n_triangles long"
+    ).orderBy("node")
 
 
+# MATERIALIZED: inlined, the chain re-expands ``und`` and ``oriented``
+# into every reference and spills tens of GB at sf0.1
 ORACLE_TRIANGLES = f"""
-WITH edges_raw AS ({_SQL_EDGES}),
-und AS (
+WITH edges_raw AS MATERIALIZED ({_SQL_EDGES}),
+und AS MATERIALIZED (
   SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
   FROM edges_raw WHERE src <> dst
 ),
-deg AS (
+deg AS MATERIALIZED (
   SELECT node, COUNT(*) AS deg FROM (
     SELECT a AS node FROM und UNION ALL SELECT b AS node FROM und
   ) GROUP BY node
 ),
-oriented AS (
+oriented AS MATERIALIZED (
   SELECT CASE WHEN (da.deg, u.a) < (db.deg, u.b) THEN u.a ELSE u.b END AS u,
          CASE WHEN (da.deg, u.a) < (db.deg, u.b) THEN u.b ELSE u.a END AS v
   FROM und u
   JOIN deg da ON u.a = da.node
   JOIN deg db ON u.b = db.node
 ),
-wedges AS (
+wedges AS MATERIALIZED (
   SELECT e1.u, e1.v AS x, e2.v AS y
   FROM oriented e1 JOIN oriented e2 ON e1.u = e2.u
   WHERE e1.v < e2.v
 ),
-tri AS (
+tri AS MATERIALIZED (
   SELECT w.u, w.x, w.y FROM wedges w JOIN oriented o ON w.x = o.u AND w.y = o.v
   UNION ALL
   SELECT w.u, w.x, w.y FROM wedges w JOIN oriented o ON w.y = o.u AND w.x = o.v
@@ -376,96 +313,54 @@ BFS_MAX_HOPS = 6
 BFS_TOP_PARTNERS = 3
 
 
-def _sparse_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected sparsified trade graph: each nation keeps its
-    ``BFS_TOP_PARTNERS`` strongest outgoing trade edges (by weight,
-    ties broken by dst id), then the union of both directions.
+def _top_partners(nodes: pd.DataFrame, edges: pd.DataFrame) -> dict:
+    """Sparsified undirected trade graph as {(src, dst): rank}: each
+    src keeps its ``BFS_TOP_PARTNERS`` strongest out-edges, ranked by
+    (w desc, dst) with rank 1 the strongest, self-loops excluded; a
+    kept edge counts in both directions at the min rank over them,
+    and only edges with both endpoints among ``nodes`` remain.
 
-    The dense nation graph is near-complete, so BFS over it is
-    trivially all-hops-1; top-k sparsification is the standard way a
+    The dense nation graph is near-complete, so paths over it are
+    trivially all one hop; top-k sparsification is the standard way a
     relationship graph is thinned before path analytics (k-NN graph
-    construction).  The top-k is a per-src window — partitioned, never
-    global — and both endpoints are restricted to nodes present in
-    ``nation`` so the walk can't pass through a dangling FK.
-    """
-    nation_keys = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("nk")
-    )
-    e = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
-    rk = F.row_number().over(
-        W.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst"))
-    )
-    sparse = (
-        e.withColumn("rk", rk)
-        .filter(F.col("rk") <= BFS_TOP_PARTNERS)
-        .select("src", "dst")
-    )
-    und = sparse.unionAll(
-        sparse.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    return (
-        und.join(
-            F.broadcast(nation_keys), und.src == F.col("nk"), "left_semi"
-        )
-        .join(F.broadcast(nation_keys), F.col("dst") == F.col("nk"), "left_semi")
-    )
+    construction)."""
+    out = defaultdict(list)
+    for u, v, w in zip(edges.src.tolist(), edges.dst.tolist(), edges.w.tolist()):
+        if u != v:
+            out[u].append((-w, v))
+    keys = set(nodes.node.tolist())
+    rank = {}
+    for u, partners in out.items():
+        for k, (_, v) in enumerate(sorted(partners)[:BFS_TOP_PARTNERS], 1):
+            if u in keys and v in keys:
+                for pair in ((u, v), (v, u)):
+                    rank[pair] = min(k, rank.get(pair, k))
+    return rank
+
+
+def _bfs(nodes: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
+    """Hops from ``BFS_SOURCE`` within ``BFS_MAX_HOPS``, else -1."""
+    adj = defaultdict(list)
+    for u, v in _top_partners(nodes, edges):
+        adj[u].append(v)
+    hops = {BFS_SOURCE: 0}
+    frontier = {BFS_SOURCE}
+    for k in range(1, BFS_MAX_HOPS + 1):
+        frontier = {v for u in frontier for v in adj[u]} - hops.keys()
+        hops.update(dict.fromkeys(frontier, k))
+    return nodes.assign(hops=[hops.get(v, -1) for v in nodes.node.tolist()])
 
 
 def bfs_hops_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS hop distance from nation ``BFS_SOURCE`` over the sparsified
-    undirected trade graph, bounded at ``BFS_MAX_HOPS`` hops;
-    unreachable (or beyond the bound) nations report -1.
-
-    Frontier expansion: each hop is ONE equi-join of the current
-    frontier against the edge list plus a left join back onto the
-    |V|-row distance spine — the textbook distributed BFS whose
-    per-hop shuffle is |frontier ⋈ edges|, never |V|².  The distance
-    state is ``localCheckpoint``ed per hop because it feeds both the
-    frontier filter and the next join (plan would double per hop
-    otherwise, exactly the PageRank branch shape above).  Hop counts
-    are integers — no FP-parity concern — and the hop bound is fixed
-    so the DuckDB twin is a depth-bounded recursive CTE over the same
-    nation-restricted edge set.
-    """
-    nation = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node"), "n_name"
-    )
-    und = _sparse_und_edges(spark, sf_dir).localCheckpoint(eager=False)
-    dist = nation.select(
-        "node",
-        F.when(F.col("node") == BFS_SOURCE, F.lit(0)).alias("hops"),
-    ).localCheckpoint(eager=False)
-    for k in range(1, BFS_MAX_HOPS + 1):
-        frontier = dist.filter(F.col("hops") == k - 1).select("node")
-        reached = (
-            und.join(frontier, und.src == frontier.node)
-            .select(F.col("dst").alias("rnode"))
-            .distinct()
-        )
-        dist = (
-            dist.join(reached, dist.node == reached.rnode, "left")
-            .select(
-                "node",
-                F.coalesce(
-                    F.col("hops"),
-                    F.when(F.col("rnode").isNotNull(), F.lit(k)),
-                ).alias("hops"),
-            )
-            # lazy: the hop bound is fixed (no per-hop action needed),
-            # so the single final action materializes the whole chain
-            # — one job instead of one per hop; each checkpoint still
-            # truncates the plan for the next hop's analysis
-            .localCheckpoint(eager=False)
-        )
-    return (
-        dist.join(F.broadcast(nation), "node")
-        .select(
-            "node",
-            "n_name",
-            F.coalesce(F.col("hops"), F.lit(-1)).cast("long").alias("hops"),
-        )
-        .orderBy("node")
-    )
+    undirected trade graph (:func:`_top_partners`), bounded at
+    ``BFS_MAX_HOPS`` hops; unreachable (or beyond the bound) nations
+    report -1.  The hop bound is fixed so the DuckDB twin is a
+    depth-bounded recursive CTE over the same nation-restricted edge
+    set."""
+    return _on_nation_graph(
+        spark, sf_dir, _bfs, "node int, n_name string, hops long"
+    ).orderBy("node")
 
 
 ORACLE_BFS = f"""
@@ -672,85 +567,37 @@ SSSP_SOURCE = 0
 SSSP_ITERS = 8
 
 
+def _sssp(nodes: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
+    """``SSSP_ITERS`` synchronous Bellman-Ford rounds from
+    ``SSSP_SOURCE``; unreached nodes report -1.  Each round relaxes
+    from the previous round's distances only, so a cost is a min over
+    paths of at most ``SSSP_ITERS`` edges, as in the oracle's walk."""
+    cost = _top_partners(nodes, edges)
+    dist = {SSSP_SOURCE: 0}
+    for _ in range(SSSP_ITERS):
+        nxt = dict(dist)
+        for (u, v), c in cost.items():
+            if u in dist:
+                nxt[v] = min(dist[u] + c, nxt.get(v, dist[u] + c))
+        dist = nxt
+    return nodes.assign(min_cost=[dist.get(v, -1) for v in nodes.node.tolist()])
+
+
 def sssp_trade_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cheapest trade route from nation ``SSSP_SOURCE`` over the
-    sparsified undirected trade graph, where an edge's cost is its
-    strength RANK at the keeping endpoint (1 = strongest partner) —
-    "prefer strong partners" as an additive path metric.  Bounded
-    Bellman-Ford: ``SSSP_ITERS`` relaxation rounds give the exact
-    minimum cost over paths of at most that many edges; nations not
-    reachable within the bound report -1.
-
-    Each round is ONE equi-join of the settled-distance spine against
-    the edge list plus a min-aggregate — per-round shuffle is
-    |dist ⋈ edges|, never |V|².  The spine is ``localCheckpoint``ed
-    per round (it feeds both the relax join and the merge — the
-    PageRank/BFS branch shape; without it the plan doubles per round).
-    Costs are integers end-to-end: no FP-parity surface at all.  The
-    DuckDB twin is a depth-bounded recursive walk over the identical
-    edge set (min cost over ≤ITERS-edge paths ≡ ITERS-round
-    Bellman-Ford).
+    sparsified undirected trade graph (:func:`_top_partners`), where
+    an edge's cost is its strength RANK at the keeping endpoint (1 =
+    strongest partner) — "prefer strong partners" as an additive path
+    metric.  Bounded Bellman-Ford: ``SSSP_ITERS`` relaxation rounds
+    give the exact minimum cost over paths of at most that many edges;
+    nations not reachable within the bound report -1.  Costs are
+    integers end-to-end: no FP-parity surface at all.  The DuckDB twin
+    is a depth-bounded recursive walk over the identical edge set (min
+    cost over ≤ITERS-edge paths ≡ ITERS-round Bellman-Ford).
     """
-    nation = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node"), "n_name"
-    )
-    nation_keys = nation.select(F.col("node").alias("nk"))
-    e = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
-    rk = F.row_number().over(
-        W.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst"))
-    )
-    sp = (
-        e.withColumn("cost", rk)
-        .filter(F.col("cost") <= BFS_TOP_PARTNERS)
-        .select("src", "dst", F.col("cost").cast("long").alias("cost"))
-    )
-    und = (
-        sp.unionAll(
-            sp.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "cost"
-            )
-        )
-        .groupBy("src", "dst")
-        .agg(F.min("cost").alias("cost"))
-    )
-    und = (
-        und.join(F.broadcast(nation_keys), und.src == F.col("nk"), "left_semi")
-        .join(F.broadcast(nation_keys), F.col("dst") == F.col("nk"), "left_semi")
-        .localCheckpoint(eager=False)
-    )
-    dist = nation.select(
-        "node",
-        F.when(F.col("node") == SSSP_SOURCE, F.lit(0).cast("long")).alias("d"),
-    ).localCheckpoint(eager=False)
-    for _ in range(SSSP_ITERS):
-        relax = (
-            dist.filter(F.col("d").isNotNull())
-            .join(und, dist.node == und.src)
-            .select(F.col("dst").alias("rnode"), (F.col("d") + F.col("cost")).alias("nd"))
-            .groupBy("rnode")
-            .agg(F.min("nd").alias("nd"))
-        )
-        dist = (
-            dist.join(relax, dist.node == relax.rnode, "left")
-            .select(
-                "node",
-                F.when(F.col("d").isNull(), F.col("nd"))
-                .when(F.col("nd").isNull(), F.col("d"))
-                .otherwise(F.least(F.col("d"), F.col("nd")))
-                .alias("d"),
-            )
-            # lazy: fixed iteration count — see the BFS loop note
-            .localCheckpoint(eager=False)
-        )
-    return (
-        dist.join(F.broadcast(nation), "node")
-        .select(
-            "node",
-            "n_name",
-            F.coalesce(F.col("d"), F.lit(-1)).cast("long").alias("min_cost"),
-        )
-        .orderBy("node")
-    )
+    return _on_nation_graph(
+        spark, sf_dir, _sssp, "node int, n_name string, min_cost long"
+    ).orderBy("node")
 
 
 ORACLE_SSSP = f"""

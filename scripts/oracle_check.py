@@ -113,6 +113,9 @@ def main() -> int:
         app_name="oracle-check", master="local[8]", shuffle_partitions=8
     )
     con = duckdb.connect()
+    # DuckDB may otherwise spill up to 90% of free disk: a runaway
+    # oracle fails as one "oracle error" line instead of filling it
+    con.execute("SET max_temp_directory_size = '4GB'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

@@ -310,9 +310,9 @@ AUDIT = [
         "triangle_count_trade",
         GR.triangle_count_trade,
         "Edge build: two broadcast dim joins + one fact equi-join, then a "
-        "16-byte-key pair aggregate. Orientation/wedge/closing joins are "
-        "all hash equi-joins on int node ids — no nested loop anywhere; "
-        "wedge fan-out is degree-orientation-bounded O(√E).",
+        "16-byte-key pair aggregate; the ≤625 edges are cogrouped with "
+        "nation on one constant key and counted in one applyInPandas "
+        "task — no nested loop, no per-round join.",
     ),
     (
         "semdedup_prune",
@@ -333,10 +333,10 @@ AUDIT = [
     (
         "bfs_hops_trade",
         GR.bfs_hops_trade,
-        "Top-k sparsification is a per-src window (partitioned, never "
-        "global); each BFS hop is one frontier⋈edges equi-join + a left "
-        "join onto the |V|-row distance spine, localCheckpointed per hop "
-        "so the plan stays hop-count-deep, not 2^hops.",
+        "Same distributed edge build as the triangles; sparsification "
+        "and every BFS hop run in the one cogrouped applyInPandas task, "
+        "so the plan has one FlatMapCoGroupsInPandas and no per-hop "
+        "join or checkpoint.",
     ),
     (
         "cc_star_contraction",

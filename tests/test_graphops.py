@@ -5,7 +5,9 @@ exact_substring_dup."""
 
 from __future__ import annotations
 
+import importlib.util
 import itertools
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +15,17 @@ from pyspark.sql import functions as F
 from f1_data_engineering_spark.operators import dedup as DD
 from f1_data_engineering_spark.operators import graphops as GR
 from f1_data_engineering_spark.operators import similarity as SIM
+
+_SPEC = importlib.util.spec_from_file_location(
+    "oracle_check_graph",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "oracle_check.py",
+    ),
+)
+_ORACLE_CHECK = importlib.util.module_from_spec(_SPEC)
+_SPEC.loader.exec_module(_ORACLE_CHECK)
 
 
 def _write_trade_lake(spark, path, nations, edges):
@@ -343,6 +356,156 @@ def test_bfs_corpus_vs_reference(spark, sf_dir):
     assert got[GR.BFS_SOURCE] == 0
     for n, h in got.items():
         assert h == want.get(n, -1), n
+
+
+# ---------------------------------------------------------------------------
+# bounded SSSP
+# ---------------------------------------------------------------------------
+
+
+def _sparse_costs_reference(trade_edges, nations):
+    """Top-k sparsified undirected costs {(a, b): rank}, computed from
+    the raw trade edges independently of the operator."""
+    bysrc = {}
+    for s, d, w in trade_edges:
+        if s != d:
+            bysrc.setdefault(s, []).append((d, w))
+    cost = {}
+    for s, lst in bysrc.items():
+        ranked = sorted(lst, key=lambda x: (-x[1], x[0]))[: GR.BFS_TOP_PARTNERS]
+        for rank, (d, _w) in enumerate(ranked, 1):
+            if s in nations and d in nations:
+                for pair in ((s, d), (d, s)):
+                    cost[pair] = min(rank, cost.get(pair, rank))
+    return cost
+
+
+def _bounded_paths_reference(cost, source, max_edges):
+    """Min cost over simple paths of at most ``max_edges`` edges, by
+    exhaustive depth-first enumeration (costs are positive, so a
+    walk's cycles only add cost and edges)."""
+    adj = {}
+    for (a, b), c in cost.items():
+        adj.setdefault(a, []).append((b, c))
+    best = {}
+
+    def walk(v, total, depth, seen):
+        if total < best.get(v, total + 1):
+            best[v] = total
+        if depth < max_edges:
+            for nxt, c in adj.get(v, ()):
+                if nxt not in seen:
+                    walk(nxt, total + c, depth + 1, seen | {nxt})
+
+    walk(source, 0, 0, {source})
+    return best
+
+
+def test_sssp_bounded_micro_graph(spark, tmp_path):
+    """Three routes out of nation 0, checked against an exhaustive
+    path enumeration:
+
+    * chain 0-31-…-40 (one rank-1 edge per hop): 39 and 40 lie beyond
+      the ``SSSP_ITERS``-edge bound and report -1;
+    * to 9 the cheapest route is 0-1-…-8-9, nine rank-1 edges (cost
+      9), one edge more than the bound allows; within the bound only
+      0-11-12-13-9 remains, four rank-3 edges (each src has two
+      stronger edges to private dead ends), so 9 costs 12.  Relaxing
+      in place instead of round by round can find the cost-9 route.
+    """
+    chain = [(31, 0, 5)] + [(i + 1, i, 5) for i in range(31, 40)]
+    cheap = [(0, 1, 10)] + [(i, i + 1, 5) for i in range(1, 9)]
+    dear = []
+    for a, b, decoys in ((0, 11, [20]), (11, 12, [21, 22]), (12, 13, [23, 24]),
+                         (13, 9, [25, 26])):
+        dear += [(a, d, 9 - k) for k, d in enumerate(decoys)] + [(a, b, 1)]
+    edges = chain + cheap + dear
+    nations = sorted({n for e in edges for n in e[:2]})
+    _write_trade_lake(spark, str(tmp_path), nations, edges)
+    got = {
+        r["node"]: r["min_cost"]
+        for r in GR.sssp_trade_costs(spark, str(tmp_path)).collect()
+    }
+    assert got[9] == 12 and got[8] == 8
+    assert [got[n] for n in range(31, 41)] == [1, 2, 3, 4, 5, 6, 7, 8, -1, -1]
+    want = _bounded_paths_reference(
+        _sparse_costs_reference(edges, set(nations)), GR.SSSP_SOURCE, GR.SSSP_ITERS
+    )
+    assert got == {n: want.get(n, -1) for n in nations}
+
+
+# ---------------------------------------------------------------------------
+# nation-graph queries: one task, lazy, and exact on degenerate lakes
+# ---------------------------------------------------------------------------
+
+NATION_GRAPH_QUERIES = {
+    "pagerank_nations": GR.ORACLE_PAGERANK,
+    "triangle_count_trade": GR.ORACLE_TRIANGLES,
+    "bfs_hops_trade": GR.ORACLE_BFS,
+    "sssp_trade_costs": GR.ORACLE_SSSP,
+}
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+@pytest.mark.parametrize("name", NATION_GRAPH_QUERIES)
+def test_nation_graph_query_lazy_bounded_leak_free(spark, sf_dir, name):
+    """Building the query submits no Spark job; running it submits a
+    few, however many iterations the algorithm takes; nothing stays
+    persisted afterwards."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    rdds = _persisted_rdds(spark)
+    first = int(sched.nextJobId())
+    df = getattr(GR, name)(spark, sf_dir)
+    built = int(sched.nextJobId())
+    assert len(df.collect()) == 25
+    ran = int(sched.nextJobId())
+    assert built == first
+    assert ran - built <= 12
+    assert _persisted_rdds(spark) == rdds
+
+
+#: (nations with a customer and a supplier, trade edges, nations left
+#: in ``nation``; None keeps them all)
+_DEGENERATE_LAKES = {
+    "no_edges": ([0, 1, 2], [], None),
+    "source_missing": ([1, 2, 3], [(1, 2, 3), (2, 3, 1), (3, 1, 2)], None),
+    "self_loops_only": ([0, 1, 2], [(0, 0, 2), (1, 1, 1)], None),
+    # 4 closes the triangle 0-1-4 and would shortcut 0-4-3
+    "endpoint_not_in_nation": (
+        [0, 1, 2, 3, 4],
+        [(0, 4, 5), (4, 3, 5), (4, 1, 2), (1, 0, 1), (1, 2, 3), (2, 3, 1)],
+        [0, 1, 2, 3],
+    ),
+    "no_nations": ([0, 1], [(0, 1, 2), (1, 0, 1)], []),
+}
+
+
+@pytest.mark.parametrize("lake", _DEGENERATE_LAKES)
+def test_nation_graph_degenerate_lakes_match_oracle(spark, tmp_path, lake):
+    """Empty edge sets, a missing source nation, self-loops only, edge
+    endpoints outside ``nation`` and an empty ``nation``: all four
+    queries equal their DuckDB oracles (either cogroup side empty)."""
+    import duckdb
+
+    nations, edges, kept = _DEGENERATE_LAKES[lake]
+    path = str(tmp_path)
+    _write_trade_lake(spark, path, nations, edges)
+    if kept is not None:
+        spark.createDataFrame(
+            [(n, f"N{n}", 0) for n in kept],
+            "n_nationkey int, n_name string, n_regionkey int",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/nation.parquet")
+    con = duckdb.connect()
+    for t in ("nation", "customer", "supplier", "orders", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}/{t}.parquet/*.parquet'")
+    for name, oracle in NATION_GRAPH_QUERIES.items():
+        got = getattr(GR, name)(spark, path).toPandas()
+        assert len(got) == len(nations if kept is None else kept), name
+        problems = _ORACLE_CHECK.compare(name, got, con.execute(oracle).df())
+        assert not problems, (name, problems)
 
 
 # ---------------------------------------------------------------------------
