@@ -152,6 +152,9 @@ CHANGED: set[str] = {
     "clone_diverge_orders",
     "describe_detail_orders",
     "cc_star_contraction",
+    "entity_resolution_clusters",
+    "dedup_clusters",
+    "dedup_keep_canonical",
     "pagerank_nations",
     "triangle_count_trade",
     "bfs_hops_trade",

@@ -726,17 +726,16 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     every doc labeled with the min doc_id of its near-dup cluster —
     the final "keep one per cluster" step of a dedup pipeline.
 
-    Iterative label propagation (min-label flood) TO CONVERGENCE: each
-    round is one join + aggregate; the loop stops when a round changes
-    no label (checked with a cheap count on the materialized round
-    output), so the result is the true transitive closure — which is
-    what the DuckDB recursive-CTE oracle computes, making this fully
-    hash-checked rather than rows-only.  ``localCheckpoint(eager=True)``
-    per round truncates lineage (the canonical Spark iterative-
-    algorithm shape); pair graphs from LSH are tiny relative to the
-    corpus, so each round's shuffle is proportional to duplicate
-    density, and rounds needed = cluster diameter (near-dup clusters
-    are shallow — a handful of rounds in practice).
+    The result is the true transitive closure — what the DuckDB
+    recursive-CTE oracle computes, so this is fully hash-checked rather
+    than rows-only.  A pair graph of at most
+    ``graphops.CLOSURE_LOCAL_EDGES`` pairs (LSH pair graphs are tiny
+    relative to the corpus) closes in one union-find task.  A larger
+    one runs iterative label propagation (min-label flood) TO
+    CONVERGENCE: each round is one join + aggregate, the loop stops
+    when a round changes no label (a count on the materialized round
+    output), ``localCheckpoint`` per round truncates lineage, and
+    rounds needed = cluster diameter (near-dup clusters are shallow).
     """
     return (
         _cluster_members(spark, sf_dir)
@@ -757,7 +756,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Internal array-shaped twin of :func:`dedup_clusters`:
     (label, cluster_size, members array<long>) — composed by
-    :func:`dedup_keep_canonical` without a string round-trip."""
+    :func:`dedup_keep_canonical` without a string round-trip.  A pair
+    graph of at most ``graphops.CLOSURE_LOCAL_EDGES`` pairs closes in
+    one union-find task (graphops.union_find_stars); a larger one
+    floods (:func:`_flood_labels`)."""
+    from . import graphops as GR
+
     pairs = minhash_lsh_pairs(spark, sf_dir).filter(
         F.col("est_jaccard") >= 0.5
     ).select("d1", "d2").cache()
@@ -766,6 +770,23 @@ def _cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
     )
     nodes = edges.select(F.col("d1").alias("node")).distinct()
+    if pairs.count() <= GR.CLOSURE_LOCAL_EDGES:
+        stars = GR.union_find_stars(
+            pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
+        )
+        labels = GR.star_labels(nodes, stars)
+    else:
+        labels = _flood_labels(nodes, edges)
+    return labels.groupBy("label").agg(
+        F.count(F.lit(1)).alias("cluster_size"),
+        F.sort_array(F.collect_list("node")).alias("members"),
+    )
+
+
+def _flood_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(node, label = min reachable node) by min-label flooding over
+    the directed edge list ``edges`` (d1, d2), one checkpointed round
+    per hop until a round changes no label."""
     labels = nodes.withColumn("label", F.col("node")).localCheckpoint(eager=False)
     for _ in range(30):  # cap ≫ any real near-dup cluster diameter
         neighbor_min = (
@@ -792,10 +813,7 @@ def _cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = new_labels.select("node", "label")
         if changed == 0:
             break
-    return labels.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cluster_size"),
-        F.sort_array(F.collect_list("node")).alias("members"),
-    )
+    return labels
 
 
 #: Transitive closure of the same ≥0.5-est_jaccard pair graph via a

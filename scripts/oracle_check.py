@@ -109,8 +109,13 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from f1_data_engineering_spark.session import get_spark
 
+    # no console progress bar: its carriage-return lines interleave
+    # with the verdict lines when stdout and stderr are read together
     spark = get_spark(
-        app_name="oracle-check", master="local[8]", shuffle_partitions=8
+        app_name="oracle-check",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     con = duckdb.connect()
     # DuckDB may otherwise spill up to 90% of free disk: a runaway

@@ -10,8 +10,10 @@ import itertools
 import os
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from f1_data_engineering_spark.operators import analytics4 as A4
 from f1_data_engineering_spark.operators import dedup as DD
 from f1_data_engineering_spark.operators import graphops as GR
 from f1_data_engineering_spark.operators import similarity as SIM
@@ -545,9 +547,11 @@ def test_star_contraction_chain_and_islands(spark):
     assert label[40] == 40 and label[41] == 40
 
 
-def test_star_contraction_matches_label_flood(spark, sf_dir):
+def test_star_contraction_matches_label_flood(spark, sf_dir, monkeypatch):
     """cc_star_contraction and dedup_clusters: same pair graph, two
-    independent algorithms, identical output."""
+    independent algorithms, identical output.  The closure bound is 0,
+    so neither finishes with the shared union-find task."""
+    monkeypatch.setattr(GR, "CLOSURE_LOCAL_EDGES", 0)
     a = sorted(
         (r["label"], r["cluster_size"], r["members"])
         for r in GR.cc_star_contraction(spark, sf_dir).collect()
@@ -557,6 +561,173 @@ def test_star_contraction_matches_label_flood(spark, sf_dir):
         for r in DD.dedup_clusters(spark, sf_dir).collect()
     )
     assert a == b and len(a) > 0
+
+
+# ---------------------------------------------------------------------------
+# closure tail: rounds above CLOSURE_LOCAL_EDGES, one union-find task below
+# ---------------------------------------------------------------------------
+
+
+def _components_reference(edges):
+    """{endpoint: component min} by breadth-first search from each
+    endpoint in ascending order."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in sorted(adj):
+        if start in label:
+            continue
+        label[start] = start
+        frontier = [start]
+        while frontier:
+            frontier = [w for v in frontier for w in adj[v] if w not in label]
+            label.update(dict.fromkeys(frontier, start))
+    return label
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=80))
+@example([])
+@example([(3, 3)])
+@example([(2, 1), (1, 2), (2, 1), (5, 5), (5, 1)])
+def test_min_roots_matches_bfs_components(edges):
+    """The union-find labels every endpoint with its component min,
+    on random small edge lists with self-loops and repeated or
+    reversed edges."""
+    got = GR.min_roots([u for u, _ in edges], [v for _, v in edges])
+    assert got == _components_reference(edges)
+
+
+def _spy_closure(monkeypatch) -> dict:
+    """Record each star-contraction edge count and each union-find
+    task the closure queries start."""
+    seen = {"n": [], "tasks": 0}
+    checksum, stars = GR._edge_checksum, GR.union_find_stars
+
+    def spy_checksum(edges):
+        c = checksum(edges)
+        seen["n"].append(c[0])
+        return c
+
+    def spy_stars(edges):
+        seen["tasks"] += 1
+        return stars(edges)
+
+    monkeypatch.setattr(GR, "_edge_checksum", spy_checksum)
+    monkeypatch.setattr(GR, "union_find_stars", spy_stars)
+    return seen
+
+
+def _on_every_path(monkeypatch, run) -> dict:
+    """{path: run().toPandas()} with the closure bound at 0 (always
+    distributed), above any edge count (always one task) and, where
+    the distributed rounds shrink the edge set, halfway between its
+    first and final edge counts (rounds, then one task)."""
+    seen = _spy_closure(monkeypatch)
+    monkeypatch.setattr(GR, "CLOSURE_LOCAL_EDGES", 0)
+    out = {"distributed": run()}
+    ns = list(seen["n"])
+    assert seen["tasks"] == (1 if ns == [0] else 0), ns
+    monkeypatch.setattr(GR, "CLOSURE_LOCAL_EDGES", 2**62)
+    seen.update(n=[], tasks=0)
+    out["one_task"] = run()
+    assert seen["tasks"] == 1 and len(seen["n"]) <= 1
+    if ns and ns[0] > ns[-1]:
+        monkeypatch.setattr(GR, "CLOSURE_LOCAL_EDGES", (ns[0] + ns[-1]) // 2)
+        seen.update(n=[], tasks=0)
+        out["switched"] = run()
+        assert seen["tasks"] == 1 and len(seen["n"]) >= 2, seen
+    return out
+
+
+def _assert_same_on_every_path(out: dict):
+    import pandas as pd
+
+    first = out["distributed"]
+    for path, got in out.items():
+        pd.testing.assert_frame_equal(got, first, obj=path)
+
+
+#: the literal micro graphs, as (u, v) edge lists
+_MICRO_GRAPHS = {
+    "chain": [(i, i + 1) for i in range(100, 111)],
+    "triangle": [(7, 8), (8, 9), (7, 9)],
+    "pair": [(40, 41)],
+    "empty": [],
+    "self_loops": [(5, 5), (6, 6), (5, 6), (7, 7)],
+    "duplicate_reversed": [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (4, 3)],
+}
+_MICRO_GRAPHS["all"] = [e for g in _MICRO_GRAPHS.values() for e in g]
+
+
+@pytest.mark.parametrize("graph", _MICRO_GRAPHS)
+@pytest.mark.parametrize("dtype", ["long", "int"])
+def test_star_contract_labels_same_on_every_path(spark, monkeypatch, graph, dtype):
+    """Every path labels each node with its component min (isolated
+    node 999 and self-loop-only nodes label themselves), with the
+    input's column types."""
+    pairs = _MICRO_GRAPHS[graph]
+    edges = spark.createDataFrame(pairs, f"u {dtype}, v {dtype}")
+    node_ids = sorted({x for e in pairs for x in e} | {999})
+    nodes = spark.createDataFrame([(x,) for x in node_ids], f"node {dtype}")
+    out = _on_every_path(
+        monkeypatch,
+        lambda: GR.star_contract_labels(nodes, edges).orderBy("node").toPandas(),
+    )
+    _assert_same_on_every_path(out)
+    if graph in ("duplicate_reversed", "all"):
+        assert "switched" in out
+    want = _components_reference(pairs)
+    got = out["distributed"]
+    assert got.node.tolist() == node_ids
+    assert got.label.tolist() == [want.get(x, x) for x in node_ids]
+    assert str(got.label.dtype) == ("int64" if dtype == "long" else "int32")
+
+
+#: the three closure queries; the label flood has no rounds to switch
+#: in, so dedup_clusters runs its two paths only
+_CLOSURE_QUERIES = {
+    "entity_resolution_clusters": A4.entity_resolution_clusters,
+    "cc_star_contraction": GR.cc_star_contraction,
+    "dedup_clusters": DD.dedup_clusters,
+}
+
+
+@pytest.mark.parametrize("name", _CLOSURE_QUERIES)
+def test_closure_query_same_on_every_path(spark, sf_dir, monkeypatch, name):
+    """The closure queries return identical rows and dtypes on every
+    path over the test lake's graphs."""
+    fn = _CLOSURE_QUERIES[name]
+    out = _on_every_path(monkeypatch, lambda: fn(spark, sf_dir).toPandas())
+    _assert_same_on_every_path(out)
+    assert len(out["distributed"]) > 0
+    assert ("switched" in out) == (name != "dedup_clusters")
+
+
+#: (job ceiling for build plus execution, persisted RDDs that one run
+#: of the distributed rounds left behind), measured at sf0.001 on
+#: ``local[4]``
+_CLOSURE_QUERY_BOUNDS = {
+    "entity_resolution_clusters": (13, 3),
+    "cc_star_contraction": (18, 4),
+}
+
+
+@pytest.mark.parametrize("name", _CLOSURE_QUERY_BOUNDS)
+def test_closure_query_bounded_jobs_and_leaks(spark, sf_dir, name):
+    """With the edge set under the bound, the closure takes one task:
+    the whole query runs in a few jobs (the distributed rounds took
+    45 for ER and 34 for cc_star) and persists no more RDDs than the
+    rounds did."""
+    max_jobs, max_new_rdds = _CLOSURE_QUERY_BOUNDS[name]
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    rdds = _persisted_rdds(spark)
+    first = int(sched.nextJobId())
+    _CLOSURE_QUERIES[name](spark, sf_dir).collect()
+    assert int(sched.nextJobId()) - first <= max_jobs
+    assert len(_persisted_rdds(spark) - rdds) <= max_new_rdds
 
 
 # ---------------------------------------------------------------------------
