@@ -730,9 +730,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE oracle computes, so this is fully hash-checked rather
     than rows-only.  A pair graph of at most
     ``graphops.CLOSURE_LOCAL_EDGES`` pairs (LSH pair graphs are tiny
-    relative to the corpus) closes in one union-find task.  A larger
-    one runs iterative label propagation (min-label flood) TO
-    CONVERGENCE: each round is one join + aggregate, the loop stops
+    relative to the corpus) closes in one union-find task
+    (graphops.closure_labels).  A larger one runs iterative label
+    propagation (min-label flood) TO CONVERGENCE: each round is one
+    join + aggregate, the loop stops
     when a round changes no label (a count on the materialized round
     output), ``localCheckpoint`` per round truncates lineage, and
     rounds needed = cluster diameter (near-dup clusters are shallow).
@@ -756,42 +757,47 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Internal array-shaped twin of :func:`dedup_clusters`:
     (label, cluster_size, members array<long>) — composed by
-    :func:`dedup_keep_canonical` without a string round-trip.  A pair
-    graph of at most ``graphops.CLOSURE_LOCAL_EDGES`` pairs closes in
-    one union-find task (graphops.union_find_stars); a larger one
-    floods (:func:`_flood_labels`)."""
+    :func:`dedup_keep_canonical` without a string round-trip.  The
+    closure is graphops.closure_labels: a pair graph of at most
+    ``graphops.CLOSURE_LOCAL_EDGES`` pairs closes in one union-find
+    task, a larger one floods (:func:`_flood_labels`)."""
     from . import graphops as GR
 
-    pairs = minhash_lsh_pairs(spark, sf_dir).filter(
-        F.col("est_jaccard") >= 0.5
-    ).select("d1", "d2").cache()
-    # undirected edge list; nodes = every pair endpoint
-    edges = pairs.unionByName(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
+    pairs = (
+        minhash_lsh_pairs(spark, sf_dir)
+        .filter(F.col("est_jaccard") >= 0.5)
+        .select(F.col("d1").alias("u"), F.col("d2").alias("v"))
+        .cache()
     )
-    nodes = edges.select(F.col("d1").alias("node")).distinct()
-    if pairs.count() <= GR.CLOSURE_LOCAL_EDGES:
-        stars = GR.union_find_stars(
-            pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
-        )
-        labels = GR.star_labels(nodes, stars)
-    else:
-        labels = _flood_labels(nodes, edges)
+    # nodes = every pair endpoint
+    nodes = (
+        pairs.select(F.col("u").alias("node"))
+        .unionAll(pairs.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    labels = GR.closure_labels(nodes, pairs, _flood_labels)
     return labels.groupBy("label").agg(
         F.count(F.lit(1)).alias("cluster_size"),
         F.sort_array(F.collect_list("node")).alias("members"),
     )
 
 
-def _flood_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+def _flood_labels(
+    nodes: DataFrame, pairs: DataFrame, _checksum: tuple
+) -> DataFrame:
     """(node, label = min reachable node) by min-label flooding over
-    the directed edge list ``edges`` (d1, d2), one checkpointed round
-    per hop until a round changes no label."""
+    the undirected pairs (u, v), one checkpointed round per hop until a
+    round changes no label (the flood tests its own fixpoint, so the
+    pairs' checksum goes unused)."""
+    # directed edge list: both orientations of every pair
+    edges = pairs.unionByName(
+        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
     labels = nodes.withColumn("label", F.col("node")).localCheckpoint(eager=False)
     for _ in range(30):  # cap ≫ any real near-dup cluster diameter
         neighbor_min = (
-            edges.join(labels, edges.d2 == labels.node)
-            .groupBy(edges.d1.alias("node2"))
+            edges.join(labels, edges.v == labels.node)
+            .groupBy(edges.u.alias("node2"))
             .agg(F.min("label").alias("nbr_label"))
         )
         new_labels = (

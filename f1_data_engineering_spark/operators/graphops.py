@@ -34,13 +34,15 @@ Design:
   :func:`cc_star_contraction` and entity resolution) is distributed
   above the bound: its pair graph grows with the corpus.  Once the
   edge set is at most ``CLOSURE_LOCAL_EDGES`` edges, a min-root
-  union-find (:func:`min_roots`) finishes it in one task.
+  union-find (:func:`min_roots`) finishes it in one task;
+  :func:`closure_labels` makes that choice for it and for the label
+  flood in dedup.py.
 """
 
 from __future__ import annotations
 
 from collections import Counter, defaultdict
-from functools import reduce
+from functools import partial, reduce
 from operator import add
 
 import pandas as pd
@@ -405,11 +407,27 @@ ORDER BY node
 
 CC_STAR_MAX_ROUNDS = 20
 #: Edge count at or below which the closure finishes in one task
-#: (:func:`union_find_stars`).  At 2**18 random edges, :func:`min_roots`
-#: takes 0.35 s and the whole task 1.4-1.6 s warm, against 5-12 s for
-#: the rounds it replaces (``local[4]``); 2**20 edges take 2.8 s in
-#: :func:`min_roots` alone.
-CLOSURE_LOCAL_EDGES = 2**18
+#: (:func:`closure_labels`).  That task's Python worker holds the whole
+#: edge set, so the bound is the largest power of two whose task stays
+#: within 1 GiB: one core's share of the 8 GiB executor overhead in
+#: DEPLOY.md's cluster shape.  ``scripts/closure_bound.py`` on
+#: ``local[4]`` (worker baseline 124 MB, one run per cell), task
+#: against rounds, worker peak:
+#:
+#: ======  =========================  ==========================
+#: edges   random (m edges, m ids)    disjoint (m edges, 2m ids)
+#: ======  =========================  ==========================
+#: 2**18   3.0 / 19.4 s, 186 MB       2.6 / 9.1 s, 217 MB
+#: 2**20   6.3 / 35.0 s, 377 MB       4.0 / 16.1 s, 497 MB
+#: 2**21   11.7 / 71.9 s, 633 MB      7.0 / 26.7 s, 834 MB
+#: 2**22   26.3 / 139.0 s, 1106 MB    18.0 / 62.9 s, 1507 MB
+#: ======  =========================  ==========================
+#:
+#: The task won at every size; memory, not time, sets the bound.  Above
+#: it, the input count that picks the path is one job more than the
+#: rounds alone would run (0.3 s of 19.4 s at 2**18 random edges, 2.9 s
+#: of 139.0 s at 2**22).
+CLOSURE_LOCAL_EDGES = 2**21
 
 
 @memo_col
@@ -531,39 +549,60 @@ def _edge_checksum(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def star_contract_labels(
+def closure_labels(
+    nodes: DataFrame, edges: DataFrame, distributed, checksum: tuple = None
+) -> DataFrame:
+    """(node, label = component min) for every row of ``nodes`` under
+    the undirected edges ``edges`` (u, v), which the caller has cached
+    or checkpointed: the one place a closure picks its path.  The edges
+    are counted once (:func:`_edge_checksum`, unless the caller passes
+    their ``checksum``).  At most ``CLOSURE_LOCAL_EDGES`` of them close
+    in one union-find task (:func:`union_find_stars`); ``nodes`` stays
+    distributed, only the edges go to that task.  A larger set goes to
+    ``distributed(nodes, edges, checksum)``."""
+    checksum = checksum or _edge_checksum(edges)
+    if checksum[0] <= CLOSURE_LOCAL_EDGES:
+        return star_labels(nodes, union_find_stars(edges))
+    return distributed(nodes, edges, checksum)
+
+
+def _star_rounds(
     nodes: DataFrame,
     edges: DataFrame,
-    max_rounds: int = CC_STAR_MAX_ROUNDS,
+    prev: tuple,
+    rounds_left: int = CC_STAR_MAX_ROUNDS,
 ) -> DataFrame:
+    """One large-star/small-star round over ``edges`` (checksum
+    ``prev``).  At the checksum fixpoint, or after the last allowed
+    round, the round's output is the converged stars (node, center);
+    otherwise it goes back through :func:`closure_labels`, which
+    finishes it in one task once it fits the bound or runs the next
+    round.  ``localCheckpoint`` per round truncates the iterative
+    lineage; it is LAZY (eager=False), so the checksum action is what
+    materializes it and each round is ONE job (guide §1.2)."""
+    edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+    cur = _edge_checksum(edges)
+    if cur == prev or rounds_left <= 1:
+        return star_labels(nodes, edges)
+    rounds = partial(_star_rounds, rounds_left=rounds_left - 1)
+    return closure_labels(nodes, edges, rounds, cur)
+
+
+def star_contract_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node, label) for every row of ``nodes`` (one column ``node``),
     where label = the component min id under the undirected edge set
     ``edges`` (columns ``u``, ``v``) — nodes touching no edge label
     themselves.  Shared by :func:`cc_star_contraction` and
     analytics4.entity_resolution_clusters.
 
-    Above ``CLOSURE_LOCAL_EDGES`` edges: alternating large-star/
-    small-star rounds to a checksum fixpoint; ``localCheckpoint`` per
-    round truncates the iterative lineage and the fixpoint test is a
-    1-row aggregate (edge count n, hash sum), not an edge collect.  The
-    checkpoints are LAZY (eager=False): the checksum action is what
-    materializes them, so each round is ONE job (guide §1.2).  Once n
-    is at most the bound (checked on the input edges and after every
-    round), :func:`union_find_stars` finishes the closure in one task;
-    ``nodes`` stays distributed, only the edges go to that task."""
+    Above ``CLOSURE_LOCAL_EDGES`` edges, alternating large-star/
+    small-star rounds (:func:`_star_rounds`) contract the edge set to a
+    checksum fixpoint (edge count n, hash sum: a 1-row aggregate, not
+    an edge collect); :func:`closure_labels` checks n against the bound
+    on the input and after every round, and finishes the closure in
+    one union-find task once it fits."""
     edges = edges.filter(F.col("u") != F.col("v")).localCheckpoint(eager=False)
-    prev, cur = None, _edge_checksum(edges)
-    for _ in range(max_rounds):
-        if cur == prev or cur[0] <= CLOSURE_LOCAL_EDGES:
-            break
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        prev, cur = cur, _edge_checksum(edges)
-    if cur != prev and cur[0] <= CLOSURE_LOCAL_EDGES:
-        edges = union_find_stars(edges)
-
-    # converged: edges are (node, component-min) stars; centers label
-    # themselves
-    return star_labels(nodes, edges)
+    return closure_labels(nodes, edges, _star_rounds)
 
 
 def cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -601,8 +601,8 @@ def test_min_roots_matches_bfs_components(edges):
 
 
 def _spy_closure(monkeypatch) -> dict:
-    """Record each star-contraction edge count and each union-find
-    task the closure queries start."""
+    """Record each edge count the closures check against the bound
+    (graphops.closure_labels) and each union-find task they start."""
     seen = {"n": [], "tasks": 0}
     checksum, stars = GR._edge_checksum, GR.union_find_stars
 
