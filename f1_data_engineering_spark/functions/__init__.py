@@ -12,6 +12,7 @@ from .timefmt import (
     fmt_hhmmss,
     fmt_hhmmssms,
     parse_f1_duration,
+    parse_f1_duration_columns,
     safe_duration_seconds,
     wallclock_hhmmss,
     wallclock_hhmmssms,
@@ -36,6 +37,7 @@ __all__ = [
     "fmt_hhmmss",
     "fmt_hhmmssms",
     "parse_f1_duration",
+    "parse_f1_duration_columns",
     "safe_duration_seconds",
     "wallclock_hhmmss",
     "wallclock_hhmmssms",

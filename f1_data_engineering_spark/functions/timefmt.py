@@ -32,8 +32,10 @@ mirroring the reference's coerce-to-null policy.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .text import memo_col
 
 __all__ = [
     "duration_seconds",
@@ -41,6 +43,7 @@ __all__ = [
     "fmt_hhmmss",
     "fmt_hhmmssms",
     "parse_f1_duration",
+    "parse_f1_duration_columns",
     "safe_duration_seconds",
     "wallclock_hhmmss",
     "wallclock_hhmmssms",
@@ -139,31 +142,17 @@ _RE_MMSSMS = r"^([+-]?)(\d+):(\d{2}):(\d{3})$"
 _RE_HHMMSS = r"^([+-]?)(\d+):(\d{2}):(\d{2})$"
 
 
-def parse_f1_duration(c: Column | str) -> Column:
-    """F9 ``parse_custom_format_to_timedelta`` → double seconds
-    (f1_dataTransformer.py:11-64).
-
-    Three-way dispatch in the reference's precedence order:
-    ``±HH:MM:SS:mmm`` | ``±MM:SS:mmm`` | ``±HH:MM:SS``; the 3-field forms
-    disambiguate on the last group's width (3 digits = milliseconds).
-    Empty / 'nan' / 'nat' / non-matching → NULL (warning → engine-side
-    NULL, per SURVEY.md F9).
-
-    Perf note (this is the ingest hot path at scale): shapes are gated
-    by ONE rlike each, then fields come from a shared ``split`` —
-    4 regex executions per row instead of 18 with per-group
-    regexp_extract.  A regex-FREE variant (split + translate
-    width/digit checks) was A/B-measured SLOWER — 1.50s vs 0.42s at
-    sf0.1, 1.07s vs 0.72s at sf1 on the roundtrip scan: the duplicated
-    conditional array probes defeat codegen subexpression elimination,
-    while rlike is a compiled matcher with no per-row allocation.
-    Hypothesis property tests in tests/test_timefmt.py pin the accept
-    language either way.
-    """
+def _duration_fields(c: Column | str) -> tuple[Column, Column]:
+    """The parser's two inputs: the trimmed string and its unsigned
+    magnitude split on ``:``."""
     s = F.trim(_col(c))
+    return s, F.split(F.regexp_replace(s, r"^[+-]", ""), ":")
+
+
+def _duration_from(s: Column, p: Column) -> Column:
+    """(trimmed string, split fields) → double seconds: the one shape
+    dispatch both parse forms share."""
     sign = F.when(s.startswith("-"), F.lit(-1.0)).otherwise(F.lit(1.0))
-    mag = F.regexp_replace(s, r"^[+-]", "")
-    p = F.split(mag, ":")
 
     def fld(i: int) -> Column:
         return F.element_at(p, i).cast("double")
@@ -183,6 +172,70 @@ def parse_f1_duration(c: Column | str) -> Column:
         )
         .otherwise(F.lit(None).cast("double"))
     )
+
+
+def parse_f1_duration(c: Column | str) -> Column:
+    """F9 ``parse_custom_format_to_timedelta`` → double seconds
+    (f1_dataTransformer.py:11-64).
+
+    Three-way dispatch in the reference's precedence order:
+    ``±HH:MM:SS:mmm`` | ``±MM:SS:mmm`` | ``±HH:MM:SS``; the 3-field forms
+    disambiguate on the last group's width (3 digits = milliseconds).
+    Empty / 'nan' / 'nat' / non-matching → NULL (warning → engine-side
+    NULL, per SURVEY.md F9).
+
+    Perf note: shapes are gated by one ``rlike`` each, and fields come
+    from a shared ``split`` — 3 shape matches and one split per row
+    instead of 18 per-group ``regexp_extract`` calls.  As one expression
+    the trimmed string and the split are written out again at every
+    use: a projection of many such columns (``laps_data`` has 11) grows
+    past the JVM's 64 KB method limit and runs without whole-stage
+    codegen.  :func:`parse_f1_duration_columns` is the form for whole
+    frames: it computes the two inputs once per column in a lower
+    projection and runs the same dispatch over them in an upper one.
+    A regex-free variant (split + translate width/digit checks) was
+    A/B-measured slower — 1.50s vs 0.42s at sf0.1, 1.07s vs 0.72s at
+    sf1 on the roundtrip scan.  Hypothesis property tests in
+    tests/test_timefmt.py pin the accepted input language of both forms.
+    """
+    return _duration_from(*_duration_fields(c))
+
+
+def _part_names(name: str) -> tuple[str, str]:
+    return f"__{name}_trimmed", f"__{name}_fields"
+
+
+@memo_col
+def _duration_parts(name: str) -> list[Column]:
+    """Lower projection of one duration column: its two parser inputs
+    under temporary names (memo_col: built once per process)."""
+    s_name, p_name = _part_names(name)
+    s, p = _duration_fields(name)
+    return [s.alias(s_name), p.alias(p_name)]
+
+
+@memo_col
+def _duration_value(name: str) -> Column:
+    """Upper projection of one duration column: seconds from the lower
+    projection's two attributes, under the column's own name."""
+    s_name, p_name = _part_names(name)
+    return _duration_from(F.col(s_name), F.col(p_name)).alias(name)
+
+
+def parse_f1_duration_columns(df: DataFrame, names: list[str]) -> DataFrame:
+    """:func:`parse_f1_duration` over the columns ``names`` of ``df``,
+    in place, as two stacked projections.
+
+    The lower one adds each column's trimmed string and split fields;
+    the upper one maps them to seconds and drops them.  The optimizer
+    keeps the two apart (each attribute is used more than once above),
+    so every column's string work runs once per row and the generated
+    code stays small enough to compile.
+    """
+    if not names:
+        return df
+    lower = df.select("*", *(part for c in names for part in _duration_parts(c)))
+    return lower.select(*(_duration_value(c) if c in names else c for c in df.columns))
 
 
 _RE_SAFE3 = r"^([+-]?)(\d+):(\d+):(\d+):(\d+)$"

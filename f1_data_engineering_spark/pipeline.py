@@ -7,6 +7,14 @@ land raw → one lazy transform per table → dynamic-partition-overwrite
 parquet.  Re-running a session overwrites exactly that session's
 partitions (idempotent); sibling sessions are untouched.
 
+Each table is two Spark jobs, the CSV header read and the write; the
+rows written are counted by an ``Observation`` on the written frame,
+which the write job fills in, instead of a second scan and parse of
+the CSV.  The plan is the same for every ingest of a table (partition
+keys come from the path's last three directories, not from a pattern
+holding ``raw_dir``), so its generated code is compiled once per
+process, and its column trees are built once (``memo_col``).
+
 The network fetch itself (FastF1) stays outside the engine — sources
 here are landed CSV trees, which is also what this container has.
 """
@@ -15,11 +23,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.text import memo_col
 from .sources.csvio import read_csv_all_string
-from .sources.f1_compat import transform_table
+from .sources.f1_compat import typed_table
 from .sources.parquetio import write_partitioned
 
 __all__ = ["ingest_table", "ingest_session_tree", "SESSION_KEYS"]
@@ -40,41 +49,46 @@ def ingest_table(
     raw files don't carry them as columns (the reference encodes them
     only in the directory path).
     """
-    raw = read_csv_all_string(spark, raw_glob)
-    typed, _, _ = transform_table(raw, table)
-    for k, v in (partition_values or {}).items():
-        typed = typed.withColumn(k, F.lit(v))
+    typed, _, _ = typed_table(read_csv_all_string(spark, raw_glob), table)
+    if partition_values:
+        typed = typed.withColumns({k: F.lit(v) for k, v in partition_values.items()})
     write_partitioned(typed, os.path.join(lake_dir, table), SESSION_KEYS)
     return typed
+
+
+@memo_col
+def _path_keys() -> dict[str, Column]:
+    """(Year, EventName, SessionKey) from the last three directories of
+    each row's file path, ``<year>/<event>/<session>/<table>.csv``.
+    Counting from the end needs neither ``raw_dir`` nor its spelling in
+    the file URI (which percent-encodes spaces), and no literal of the
+    ingest's own makes the generated code differ between ingests."""
+    parts = F.split(F.input_file_name(), "/")
+    return {
+        "Year": F.element_at(parts, -4).try_cast("int"),
+        "EventName": F.element_at(parts, -3),
+        "SessionKey": F.element_at(parts, -2),
+    }
 
 
 def ingest_session_tree(
     spark: SparkSession, raw_dir: str, lake_dir: str, tables: tuple[str, ...]
 ) -> dict[str, int]:
     """Ingest every ``<year>/<event>/<session>/<table>.csv`` under
-    ``raw_dir`` into the partitioned silver lake.  Partition columns are
-    derived from the file path (`input_file_name`), replacing the
-    reference's per-directory Python loop with one distributed job per
-    table.
+    ``raw_dir`` into the partitioned silver lake; returns {table: rows
+    written}.
+
+    Partition columns are derived from the file path (`input_file_name`),
+    replacing the reference's per-directory Python loop with one
+    distributed write per table; the counts are observed on the writes.
     """
     counts: dict[str, int] = {}
     for table in tables:
         pattern = os.path.join(raw_dir, "*", "*", "*", f"{table}.csv")
-        raw = read_csv_all_string(spark, pattern)
-        # relative path below raw_dir, scheme-agnostic (input_file_name
-        # yields file:///…)
-        import re as _re
-
-        rel = F.regexp_extract(
-            F.input_file_name(), _re.escape(raw_dir.rstrip("/")) + "/(.*)$", 1
-        )
-        path_parts = F.split(rel, "/")
-        raw = (
-            raw.withColumn("Year", path_parts.getItem(0).try_cast("int"))
-            .withColumn("EventName", path_parts.getItem(1))
-            .withColumn("SessionKey", path_parts.getItem(2))
-        )
-        typed, _, _ = transform_table(raw, table)
-        write_partitioned(typed, os.path.join(lake_dir, table), SESSION_KEYS)
-        counts[table] = typed.count()
+        raw = read_csv_all_string(spark, pattern).withColumns(_path_keys())
+        typed, _, _ = typed_table(raw, table)
+        rows = Observation()
+        written = typed.observe(rows, F.count(F.lit(1)).alias("rows"))
+        write_partitioned(written, os.path.join(lake_dir, table), SESSION_KEYS)
+        counts[table] = rows.get["rows"]
     return counts

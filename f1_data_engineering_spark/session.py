@@ -92,4 +92,21 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _quiet_file_stream_sink(spark)
     return spark
+
+
+def _quiet_file_stream_sink(spark: SparkSession) -> None:
+    """Every read of a glob path logs ``FileStreamSink: Assume no
+    metadata directory`` with a ``FileNotFoundException`` stack trace:
+    the batch reader probes the glob for a streaming sink's log
+    directory, finds none, and reads the files as asked.  Only that
+    logger is raised to ERROR.  Spark 4.1 moved the class into
+    ``streaming.sinks``; both names are set, so either version is quiet."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    log4j = jvm.org.apache.logging.log4j
+    for name in (
+        "org.apache.spark.sql.execution.streaming.FileStreamSink",
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+    ):
+        log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)

@@ -16,9 +16,11 @@ no Python in the loop).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.text import memo_col
 
 __all__ = ["NULL_TOKENS", "read_csv_all_string", "read_csv_inferred"]
 
@@ -49,18 +51,19 @@ NULL_TOKENS = (
 )
 
 
-def _nullify(df: DataFrame, tokens: tuple[str, ...] = NULL_TOKENS) -> DataFrame:
-    """Map the reference's token spellings (case-sensitive, untrimmed —
-    matching pandas na_values semantics) to SQL NULL, all columns."""
-    nonempty = [t for t in tokens if t]
-    exprs = []
-    for name in df.columns:
-        c = F.col(name)
-        cond = c.isNull() | c.isin(nonempty)
-        if "" in tokens:
-            cond = cond | (c == "")
-        exprs.append(F.when(cond, None).otherwise(c).alias(name))
-    return df.select(*exprs)
+@memo_col
+def _null_token(name: str) -> Column:
+    """One column with the reference's token spellings (case-sensitive,
+    untrimmed — matching pandas na_values semantics) mapped to SQL
+    NULL; memo_col: the 16-literal ``isin`` is built once per name."""
+    c = F.col(name)
+    cond = c.isNull() | c.isin([t for t in NULL_TOKENS if t]) | (c == "")
+    return F.when(cond, None).otherwise(c).alias(name)
+
+
+def _nullify(df: DataFrame) -> DataFrame:
+    """:func:`_null_token` over every column."""
+    return df.select(*(_null_token(name) for name in df.columns))
 
 
 def read_csv_all_string(

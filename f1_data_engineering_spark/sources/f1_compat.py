@@ -18,25 +18,36 @@ Semantics reproduced exactly:
 
 Architecture note: in the lakehouse design this stage is the
 bronze→silver hop — the typed frame (double seconds / timestamps) is
-the real product and lands in Parquet; the formatted CSV is a
-compatibility sink for consumers of the reference's file format.
+the real product and lands in Parquet (:func:`typed_table`, what the
+ingest writes); the formatted CSV is a compatibility sink for
+consumers of the reference's file format (:func:`compat_table`, built
+only where :func:`transform_csv_tree` writes it).
+
+Plan shape: duration columns parse in the two stacked projections of
+``timefmt.parse_f1_duration_columns`` — the string work once per
+column, then the shape dispatch — which keeps ``laps_data``'s 11 of
+them inside whole-stage codegen; every column tree is built once per
+process (``memo_col``).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.timefmt import fmt_hhmmssms, fmt_mmssms, parse_f1_duration
+from ..functions.text import memo_col
+from ..functions.timefmt import fmt_hhmmssms, fmt_mmssms, parse_f1_duration_columns
 from .csvio import read_csv_all_string
 
 __all__ = [
     "STRING_COLUMNS_TO_TIMEDELTA",
     "ISO_STRING_COLUMNS_TO_DATETIME",
     "NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA",
+    "compat_table",
     "transform_table",
+    "typed_table",
     "transform_csv_tree",
 ]
 
@@ -77,10 +88,55 @@ NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA: dict[str, list[str]] = {
     "lap_telemetry_summary": ["TelemetryLapStartTime_seconds"],
 }
 
-_FORMATTERS = {
-    "hhmmssms": lambda c: fmt_hhmmssms(c, rounding="trunc"),
-    "mmssms": lambda c: fmt_mmssms(c, rounding="trunc"),
-}
+_FORMATTERS = {"hhmmssms": fmt_hhmmssms, "mmssms": fmt_mmssms}
+
+
+@memo_col
+def _timestamp(name: str) -> Column:
+    # try_to_timestamp = pd.to_datetime(errors='coerce'): ANSI
+    # to_timestamp would throw on malformed input
+    return F.try_to_timestamp(F.col(name))
+
+
+@memo_col
+def _seconds(name: str) -> Column:
+    return F.col(name).try_cast("double")
+
+
+@memo_col
+def _formatted(name: str, fmt_key: str) -> Column:
+    """Compat re-serialization of one typed column (truncating, F10/F11)."""
+    return _FORMATTERS[fmt_key](F.col(name), rounding="trunc").alias(name)
+
+
+def typed_table(df: DataFrame, table: str) -> tuple[DataFrame, dict[str, str], int]:
+    """All-string frame → (typed frame, {column: compat output format},
+    #columns transformed).
+
+    Duration columns parse in the two stacked projections of
+    :func:`parse_f1_duration_columns`; timestamp and numeric-seconds
+    columns are one ``withColumns`` above them."""
+    present = set(df.columns)
+    out_formats = {
+        c: fmt for c, fmt in STRING_COLUMNS_TO_TIMEDELTA.get(table, {}).items() if c in present
+    }
+    typed = parse_f1_duration_columns(df, list(out_formats))
+    n = len(out_formats)
+    others = {c: _timestamp(c) for c in ISO_STRING_COLUMNS_TO_DATETIME.get(table, []) if c in present}
+    for c in NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA.get(table, []):
+        if c in present:
+            others[c] = _seconds(c)
+            out_formats.setdefault(c, "hhmmssms")
+    if others:
+        typed = typed.withColumns(others)
+    return typed, out_formats, n + len(others)
+
+
+def compat_table(typed: DataFrame, out_formats: dict[str, str]) -> DataFrame:
+    """Typed frame → the reference transformer's output strings."""
+    return typed.select(
+        *(_formatted(c, out_formats[c]) if c in out_formats else c for c in typed.columns)
+    )
 
 
 def transform_table(df: DataFrame, table: str) -> tuple[DataFrame, DataFrame, int]:
@@ -91,33 +147,8 @@ def transform_table(df: DataFrame, table: str) -> tuple[DataFrame, DataFrame, in
     canonical representation); the compat frame re-serializes exactly
     as the reference's transformer writes its output CSVs.
     """
-    typed = df
-    n = 0
-    out_formats: dict[str, str] = {}
-
-    for col, fmt_key in STRING_COLUMNS_TO_TIMEDELTA.get(table, {}).items():
-        if col in typed.columns:
-            typed = typed.withColumn(col, parse_f1_duration(F.col(col)))
-            out_formats[col] = fmt_key
-            n += 1
-
-    for col in ISO_STRING_COLUMNS_TO_DATETIME.get(table, []):
-        if col in typed.columns:
-            # try_to_timestamp = pd.to_datetime(errors='coerce'): ANSI
-            # to_timestamp would throw on malformed input
-            typed = typed.withColumn(col, F.try_to_timestamp(F.col(col)))
-            n += 1
-
-    for col in NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA.get(table, []):
-        if col in typed.columns:
-            typed = typed.withColumn(col, F.col(col).try_cast("double"))
-            out_formats.setdefault(col, "hhmmssms")
-            n += 1
-
-    compat = typed
-    for col, fmt_key in out_formats.items():
-        compat = compat.withColumn(col, _FORMATTERS[fmt_key](F.col(col)))
-    return typed, compat, n
+    typed, out_formats, n = typed_table(df, table)
+    return typed, compat_table(typed, out_formats), n
 
 
 def transform_csv_tree(
@@ -142,12 +173,13 @@ def transform_csv_tree(
             raw = read_csv_all_string(spark, pattern)
         except Exception:
             continue
-        _, compat, n = transform_table(raw, table)
+        typed, out_formats, n = typed_table(raw, table)
         if n == 0:
             continue
         stats[table] = n
         (
-            compat.write.mode("overwrite")
+            compat_table(typed, out_formats)
+            .write.mode("overwrite")
             .option("header", True)
             .csv(os.path.join(output_dir, table))
         )

@@ -4,6 +4,9 @@ out, byte-compared against the reference's semantics."""
 
 from __future__ import annotations
 
+import pytest
+
+from f1_data_engineering_spark.sources.csvio import read_csv_all_string
 from f1_data_engineering_spark.sources.f1_compat import transform_table
 
 
@@ -101,3 +104,24 @@ def test_transform_csv_tree(spark, tmp_path):
     )
     assert back["Q1"] == "00:01:05:123"        # promoted to HH:MM:SS:mmm
     assert back["Interval"] == "00:00:12:345"  # numeric -> formatted
+
+
+@pytest.mark.parametrize("table", ["laps_data", "session_results", "weather_data"])
+def test_season_tables_compile_without_codegen_fallback(spark, tmp_path, table):
+    """Both frames of every season table run in whole-stage codegen: with
+    the fallback off, a generated class past the JVM's 64 KB method
+    limit fails the query instead of running it interpreted."""
+    from perfbench import datagen
+
+    datagen.write_season(str(tmp_path), 2021, 7, events=1)
+    raw = read_csv_all_string(spark, str(tmp_path / "*" / "*" / "*" / f"{table}.csv"))
+    typed, compat, n = transform_table(raw, table)
+    assert n > 0
+    key = "spark.sql.codegen.fallback"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for frame in (typed, compat):
+            frame.write.format("noop").mode("overwrite").save()
+    finally:
+        spark.conf.set(key, before)

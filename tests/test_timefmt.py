@@ -15,6 +15,7 @@ from f1_data_engineering_spark.functions import (
     fmt_hhmmssms,
     fmt_mmssms,
     parse_f1_duration,
+    parse_f1_duration_columns,
     safe_duration_seconds,
     to_bool_or_numeric,
     to_bool_strict,
@@ -103,15 +104,25 @@ PARSE_VECTORS = [
 ]
 
 
+def parse_both(spark, values):
+    """Both parse forms over ``values``: the single expression and the
+    two-projection frame form."""
+    df = spark.createDataFrame([(v,) for v in values], schema="x string")
+    return (
+        [r[0] for r in df.select(parse_f1_duration("x")).collect()],
+        [r[0] for r in parse_f1_duration_columns(df, ["x"]).collect()],
+    )
+
+
 def test_parse_f1_duration(spark):
     vals = [v for v, _ in PARSE_VECTORS]
     exp = [e for _, e in PARSE_VECTORS]
-    got = run_expr(spark, vals, parse_f1_duration, in_type="string")
-    for g, e in zip(got, exp):
-        if e is None:
-            assert g is None
-        else:
-            assert g == pytest.approx(e, abs=1e-9)
+    for got in parse_both(spark, vals):
+        for g, e in zip(got, exp):
+            if e is None:
+                assert g is None
+            else:
+                assert g == pytest.approx(e, abs=1e-9)
 
 
 def test_safe_duration_seconds(spark):
@@ -283,10 +294,10 @@ def test_parse_matches_regex_reference(spark, values):
             return sign * (int(m.group(2)) * 3600 + int(m.group(3)) * 60 + int(m.group(4)))
         return None
 
-    got = run_expr(spark, values, parse_f1_duration, in_type="string")
-    for g, v in zip(got, values):
-        e = ref(v)
-        if e is None:
-            assert g is None, (v, g)
-        else:
-            assert g is not None and g == pytest.approx(e, abs=1e-9), (v, g, e)
+    for got in parse_both(spark, values):
+        for g, v in zip(got, values):
+            e = ref(v)
+            if e is None:
+                assert g is None, (v, g)
+            else:
+                assert g is not None and g == pytest.approx(e, abs=1e-9), (v, g, e)
