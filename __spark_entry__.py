@@ -141,6 +141,12 @@ MAX_GREEN_AGE_ROUNDS = 4
 #: ``sssp_trade_costs`` run in one cogrouped ``applyInPandas`` call
 #: over the distributed edge build; ORACLE_TRIANGLES materializes its
 #: CTEs and ORACLE_PAGERANK its per-iteration rank stages.
+#:
+#: One connected-components closure: ``dedup_clusters`` and
+#: ``dedup_keep_canonical`` now close their pair graph with
+#: ``graphops.star_contract_labels`` (the label flood is gone), and
+#: ``cc_star_contraction`` is ``dedup_clusters`` under its registered
+#: name.
 CHANGED: set[str] = {
     "cdc_apply_rollup_orders",
     "curation_pipeline",

@@ -516,9 +516,10 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: blocking is an equi-join on deletion keys (never
     names²), the segment check is a broadcast-sized rejoin on the pair
-    ids, closure is O(log² n) aggregate+join rounds until the edge set
-    fits ``graphops.CLOSURE_LOCAL_EDGES`` and then one union-find task
-    (the whole closure at sf0.1: 52k edges), and the canonical pick is
+    ids, closure is the engine's one closure (the same as the near-dup
+    clusters'): O(log² n) aggregate+join rounds until the edge set fits
+    ``graphops.CLOSURE_LOCAL_EDGES`` and then one union-find task (the
+    whole closure at sf0.1: 52k edges), and the canonical pick is
     a per-cluster conditional MAX — no sorts, no collects beyond the
     contraction checksums.  Oracle: recursive-CTE
     transitive closure over the identical pair SQL.

@@ -728,103 +728,54 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The result is the true transitive closure — what the DuckDB
     recursive-CTE oracle computes, so this is fully hash-checked rather
-    than rows-only.  A pair graph of at most
+    than rows-only.  The closure is graphops.star_contract_labels
+    (:func:`_near_dup_labels`): a pair graph of at most
     ``graphops.CLOSURE_LOCAL_EDGES`` pairs (LSH pair graphs are tiny
-    relative to the corpus) closes in one union-find task
-    (graphops.closure_labels).  A larger one runs iterative label
-    propagation (min-label flood) TO CONVERGENCE: each round is one
-    join + aggregate, the loop stops
-    when a round changes no label (a count on the materialized round
-    output), ``localCheckpoint`` per round truncates lineage, and
-    rounds needed = cluster diameter (near-dup clusters are shallow).
+    relative to the corpus) closes in one union-find task, a larger one
+    in O(log² n) large-star/small-star rounds first.
     """
     return (
-        _cluster_members(spark, sf_dir)
-        .select(
-            "label",
-            "cluster_size",
+        _near_dup_labels(spark, sf_dir)
+        .groupBy("label")
+        .agg(
+            F.count(F.lit(1)).alias("cluster_size"),
             # ','-joined string rather than array<long>: the driver's
             # pandas canonicalizer cannot sort list cells, so the
             # member list ships as a scalar column (same information)
-            F.array_join(F.col("members").cast("array<string>"), ",").alias(
-                "members"
-            ),
+            F.array_join(
+                F.sort_array(F.collect_list("node")).cast("array<string>"), ","
+            ).alias("members"),
         )
         .orderBy("label")
     )
 
 
-def _cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Internal array-shaped twin of :func:`dedup_clusters`:
-    (label, cluster_size, members array<long>) — composed by
-    :func:`dedup_keep_canonical` without a string round-trip.  The
-    closure is graphops.closure_labels: a pair graph of at most
-    ``graphops.CLOSURE_LOCAL_EDGES`` pairs closes in one union-find
-    task, a larger one floods (:func:`_flood_labels`)."""
+def _near_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, label = min doc_id of its cluster) for every endpoint of
+    the ≥0.5-est_jaccard LSH pair graph, the input of
+    :func:`dedup_clusters` and :func:`dedup_keep_canonical`."""
     from . import graphops as GR
 
+    # the pair graph is built once: ``nodes`` and the contraction's
+    # edges both read this checkpoint, not two runs of the LSH join
     pairs = (
         minhash_lsh_pairs(spark, sf_dir)
         .filter(F.col("est_jaccard") >= 0.5)
         .select(F.col("d1").alias("u"), F.col("d2").alias("v"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
-    # nodes = every pair endpoint
     nodes = (
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    labels = GR.closure_labels(nodes, pairs, _flood_labels)
-    return labels.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cluster_size"),
-        F.sort_array(F.collect_list("node")).alias("members"),
-    )
-
-
-def _flood_labels(
-    nodes: DataFrame, pairs: DataFrame, _checksum: tuple
-) -> DataFrame:
-    """(node, label = min reachable node) by min-label flooding over
-    the undirected pairs (u, v), one checkpointed round per hop until a
-    round changes no label (the flood tests its own fixpoint, so the
-    pairs' checksum goes unused)."""
-    # directed edge list: both orientations of every pair
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    labels = nodes.withColumn("label", F.col("node")).localCheckpoint(eager=False)
-    for _ in range(30):  # cap ≫ any real near-dup cluster diameter
-        neighbor_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy(edges.u.alias("node2"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.withColumnRenamed("label", "old_label")
-            .join(neighbor_min, F.col("node") == neighbor_min.node2, "left")
-            .select(
-                "node",
-                "old_label",
-                F.least(
-                    F.col("old_label"),
-                    F.coalesce(F.col("nbr_label"), F.col("old_label")),
-                ).alias("label"),
-            )
-        )
-        # lazy: the changed-count action materializes the checkpoint —
-        # one job per round instead of two (guide §1.2)
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    return labels
+    return GR.star_contract_labels(nodes, pairs)
 
 
 #: Transitive closure of the same ≥0.5-est_jaccard pair graph via a
-#: recursive CTE — min reachable id ≡ the flood's converged label, so
-#: the iterative Spark algorithm is hash-checked end-to-end.
+#: recursive CTE — min reachable id ≡ the star contraction's component
+#: min, so the iterative Spark closure is hash-checked end-to-end.
 ORACLE_CLUSTERS = f"""
 WITH RECURSIVE thresholded AS (
   SELECT d1, d2 FROM ({ORACLE_MINHASH_LSH}) p WHERE est_jaccard >= 0.5
@@ -906,14 +857,14 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     and drops its truncated copy — the policy production dedup actually
     wants (keep-first would keep whichever id sorts lower).
 
-    Composition cost on top of :func:`dedup_clusters`: one join of the
-    exploded member list (rows ∝ docs-in-clusters, ≪ corpus) against
-    doc lengths, and one cluster-partitioned window.
+    Composition cost on top of the closure (:func:`_near_dup_labels`):
+    one join of the labeled docs (rows ∝ docs-in-clusters, ≪ corpus)
+    against doc lengths, and one cluster-partitioned window.
     """
     from pyspark.sql import Window as W
 
-    m = _cluster_members(spark, sf_dir).select(
-        "label", F.explode("members").alias("doc_id")
+    m = _near_dup_labels(spark, sf_dir).select(
+        "label", F.col("node").alias("doc_id")
     )
     corpus = _near_dup_corpus(spark, sf_dir).select(
         "doc_id", F.length("text").cast("long").alias("n_chars")

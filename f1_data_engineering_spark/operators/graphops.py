@@ -30,19 +30,18 @@ Design:
   doubles in the same order and the 10-iteration fixpoint is
   bit-identical.  Rounding and the rank position stay in Spark:
   Python's ``round`` is half-even, Spark's HALF_UP.
-* **Star contraction** (:func:`star_contract_labels`, serving
-  :func:`cc_star_contraction` and entity resolution) is distributed
-  above the bound: its pair graph grows with the corpus.  Once the
-  edge set is at most ``CLOSURE_LOCAL_EDGES`` edges, a min-root
-  union-find (:func:`min_roots`) finishes it in one task;
-  :func:`closure_labels` makes that choice for it and for the label
-  flood in dedup.py.
+* **Star contraction** (:func:`star_contract_labels`) is the engine's
+  one connected-components closure, serving the near-dup clusters
+  (:func:`cc_star_contraction`, dedup.py) and entity resolution.  It
+  is distributed above the bound: its pair graph grows with the
+  corpus.  Once the edge set is at most ``CLOSURE_LOCAL_EDGES`` edges,
+  a min-root union-find (:func:`min_roots`) finishes it in one task.
 """
 
 from __future__ import annotations
 
 from collections import Counter, defaultdict
-from functools import partial, reduce
+from functools import reduce
 from operator import add
 
 import pandas as pd
@@ -407,9 +406,9 @@ ORDER BY node
 
 CC_STAR_MAX_ROUNDS = 20
 #: Edge count at or below which the closure finishes in one task
-#: (:func:`closure_labels`).  That task's Python worker holds the whole
-#: edge set, so the bound is the largest power of two whose task stays
-#: within 1 GiB: one core's share of the 8 GiB executor overhead in
+#: (:func:`star_contract_labels`).  That task's Python worker holds the
+#: whole edge set, so the bound is the largest power of two whose task
+#: stays within 1 GiB: one core's share of the 8 GiB executor overhead in
 #: DEPLOY.md's cluster shape.  ``scripts/closure_bound.py`` on
 #: ``local[4]`` (worker baseline 124 MB, one run per cell), task
 #: against rounds, worker peak:
@@ -549,115 +548,58 @@ def _edge_checksum(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def closure_labels(
-    nodes: DataFrame, edges: DataFrame, distributed, checksum: tuple = None
-) -> DataFrame:
-    """(node, label = component min) for every row of ``nodes`` under
-    the undirected edges ``edges`` (u, v), which the caller has cached
-    or checkpointed: the one place a closure picks its path.  The edges
-    are counted once (:func:`_edge_checksum`, unless the caller passes
-    their ``checksum``).  At most ``CLOSURE_LOCAL_EDGES`` of them close
-    in one union-find task (:func:`union_find_stars`); ``nodes`` stays
-    distributed, only the edges go to that task.  A larger set goes to
-    ``distributed(nodes, edges, checksum)``."""
-    checksum = checksum or _edge_checksum(edges)
-    if checksum[0] <= CLOSURE_LOCAL_EDGES:
-        return star_labels(nodes, union_find_stars(edges))
-    return distributed(nodes, edges, checksum)
-
-
-def _star_rounds(
-    nodes: DataFrame,
-    edges: DataFrame,
-    prev: tuple,
-    rounds_left: int = CC_STAR_MAX_ROUNDS,
-) -> DataFrame:
-    """One large-star/small-star round over ``edges`` (checksum
-    ``prev``).  At the checksum fixpoint, or after the last allowed
-    round, the round's output is the converged stars (node, center);
-    otherwise it goes back through :func:`closure_labels`, which
-    finishes it in one task once it fits the bound or runs the next
-    round.  ``localCheckpoint`` per round truncates the iterative
-    lineage; it is LAZY (eager=False), so the checksum action is what
-    materializes it and each round is ONE job (guide §1.2)."""
-    edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-    cur = _edge_checksum(edges)
-    if cur == prev or rounds_left <= 1:
-        return star_labels(nodes, edges)
-    rounds = partial(_star_rounds, rounds_left=rounds_left - 1)
-    return closure_labels(nodes, edges, rounds, cur)
-
-
 def star_contract_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node, label) for every row of ``nodes`` (one column ``node``),
     where label = the component min id under the undirected edge set
     ``edges`` (columns ``u``, ``v``) — nodes touching no edge label
-    themselves.  Shared by :func:`cc_star_contraction` and
-    analytics4.entity_resolution_clusters.
+    themselves.  The engine's one closure: :func:`cc_star_contraction`,
+    dedup.dedup_clusters, dedup.dedup_keep_canonical and
+    analytics4.entity_resolution_clusters all call it.
 
-    Above ``CLOSURE_LOCAL_EDGES`` edges, alternating large-star/
-    small-star rounds (:func:`_star_rounds`) contract the edge set to a
-    checksum fixpoint (edge count n, hash sum: a 1-row aggregate, not
-    an edge collect); :func:`closure_labels` checks n against the bound
-    on the input and after every round, and finishes the closure in
-    one union-find task once it fits."""
+    The edge count n of a checksum (n, hash sum: a 1-row aggregate,
+    not an edge collect) picks the path, on the input and after every
+    round.  At most ``CLOSURE_LOCAL_EDGES`` edges close in one
+    union-find task (:func:`union_find_stars`); ``nodes`` stays
+    distributed, only the edges go to that task.  Above it,
+    large-star/small-star rounds run until the edge set fits or reaches
+    the checksum fixpoint, where its edges are the converged stars
+    (node, center).  ``localCheckpoint`` per round truncates the
+    iterative lineage; it is LAZY (eager=False), so the checksum action
+    is what materializes it and each round is ONE job (guide §1.2)."""
     edges = edges.filter(F.col("u") != F.col("v")).localCheckpoint(eager=False)
-    return closure_labels(nodes, edges, _star_rounds)
+    prev = _edge_checksum(edges)
+    for _ in range(CC_STAR_MAX_ROUNDS):
+        if prev[0] <= CLOSURE_LOCAL_EDGES:
+            return star_labels(nodes, union_find_stars(edges))
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        cur = _edge_checksum(edges)
+        if cur == prev:
+            break
+        prev = cur
+    return star_labels(nodes, edges)
 
 
 def cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash-LSH near-dup pair graph
-    via alternating large-star/small-star contraction — the O(log² n)-
-    round algorithm (Kiveris et al. 2014) that replaces label flooding
-    when component DIAMETER is unbounded.
-
-    Same input pair graph, same output shape, same DuckDB oracle as
-    ``dedup_clusters`` (operators/dedup.py) — above the bound, two
-    independent distributed algorithms hash-checked against one
-    transitive-closure oracle (and against each other, with the bound
-    forced to 0, in tests/test_graphops.py).  The
-    label flood needs diameter-many rounds (fine for shallow near-dup
-    clusters); star contraction halves path lengths per round pair, so
-    a chain-shaped 10⁶-node component converges in ~20 rounds instead
-    of 10⁶ — the variant a 100 TB corpus with adversarial chain
-    duplicates requires.  Rounds run only while the edge set is above
-    ``CLOSURE_LOCAL_EDGES`` (:func:`star_contract_labels`); the LSH
-    pair graph is usually below it from the start and closes in one
+    via alternating large-star/small-star contraction (Kiveris et al.
+    2014): O(log² n) rounds whatever the component DIAMETER, since
+    star contraction halves path lengths per round pair — a
+    chain-shaped 10⁶-node component converges in ~20 rounds, where a
+    label flood would take 10⁶.  Rounds run only while the edge set is
+    above ``CLOSURE_LOCAL_EDGES`` (:func:`star_contract_labels`); the
+    LSH pair graph is usually below it from the start and closes in one
     union-find task.
-    """
-    from . import dedup as DD
 
-    # the pair graph is built once: ``nodes`` and the contraction's
-    # edges both read this checkpoint, not two runs of the LSH join
-    pairs = (
-        DD.minhash_lsh_pairs(spark, sf_dir)
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select(F.col("d1").alias("u"), F.col("d2").alias("v"))
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        pairs.select(F.col("u").alias("node"))
-        .unionAll(pairs.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = star_contract_labels(nodes, pairs)
-    return (
-        labels.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("cluster_size"),
-            F.array_join(
-                F.sort_array(F.collect_list("node")).cast("array<string>"), ","
-            ).alias("members"),
-        )
-        .orderBy("label")
-    )
+    The registered name of ``dedup_clusters`` (operators/dedup.py),
+    which builds the pair graph and calls the same closure: one query,
+    one oracle.
+    """
+    return _DD.dedup_clusters(spark, sf_dir)
 
 
 from . import dedup as _DD  # noqa: E402  (oracle reuse, no cycle)
 
-#: Same transitive-closure oracle as dedup_clusters — one oracle, two
-#: independent distributed algorithms.
+#: Same transitive-closure oracle as dedup_clusters.
 ORACLE_CC_STAR = _DD.ORACLE_CLUSTERS
 
 

@@ -61,14 +61,20 @@ def _path_keys() -> dict[str, Column]:
     """(Year, EventName, SessionKey) from the last three directories of
     each row's file path, ``<year>/<event>/<session>/<table>.csv``.
     Counting from the end needs neither ``raw_dir`` nor its spelling in
-    the file URI (which percent-encodes spaces), and no literal of the
-    ingest's own makes the generated code differ between ingests."""
+    the file URI, and no literal of the ingest's own makes the generated
+    code differ between ingests.  The URI percent-encodes a space or a
+    ``%`` in a directory name, so the names are decoded; a literal
+    ``+`` is escaped first, since URL decoding reads it as a space."""
     parts = F.split(F.input_file_name(), "/")
     return {
         "Year": F.element_at(parts, -4).try_cast("int"),
-        "EventName": F.element_at(parts, -3),
-        "SessionKey": F.element_at(parts, -2),
+        "EventName": _uri_decode(F.element_at(parts, -3)),
+        "SessionKey": _uri_decode(F.element_at(parts, -2)),
     }
+
+
+def _uri_decode(segment: Column) -> Column:
+    return F.url_decode(F.regexp_replace(segment, r"\+", "%2B"))
 
 
 def ingest_session_tree(

@@ -498,7 +498,7 @@ _QS = _entry._base_queries()
 _ORACLES = _entry.oracle_sql()
 
 #: every remaining documents-only oracle query: train-prep, decontam,
-#: the full dedup family (incl. the iterative cluster flood via
+#: the full dedup family (incl. the near-dup closure via
 #: dedup_keep_canonical), and the rest of the text analytics
 EXTENDED_DOC_QUERIES = [
     "build_vocab", "bpe_merge_candidates", "pack_sequences",
@@ -518,15 +518,15 @@ EXTENDED_DOC_QUERIES = [
     "repetition_stats", "pii_scrub_stats", "corpus_quality_gate",
     "language_id_confusion", "stop_shingle_stats", "zipf_fit",
     "inverted_index", "tfidf_cosine_pairs",
-    # the iterative cluster flood itself (dedup_keep_canonical already
+    # the near-dup closure itself (dedup_keep_canonical already
     # consumes it; this also pins the raw cluster-table output)
     "dedup_clusters",
     # char-level window census: unicode multi-byte chars exercise the
     # length()-vs-bytes edge (both engines count CODEPOINTS)
     "exact_substring_dup",
-    # star-contraction CC over whatever pair graph the corpus induces
-    # (empty graph, singleton components, chains) — same oracle as
-    # dedup_clusters, so the fuzzer differences BOTH algorithms
+    # the registered name of dedup_clusters: star-contraction CC over
+    # whatever pair graph the corpus induces (empty graph, singleton
+    # components, chains), checked under its own name and oracle
     "cc_star_contraction",
     # row-local hash sharding: manifest must hold on 1-doc lakes
     "training_shard_manifest",

@@ -69,6 +69,25 @@ def test_ingest_raw_dir_with_space(spark, tmp_path):
     assert row["Q1"] == 70.27
 
 
+def test_ingest_event_names_read_back_verbatim(spark, tmp_path):
+    # the file URI percent-encodes ' ' and '%' but leaves '+' alone;
+    # the partition keys come back as the directory names
+    raw = tmp_path / "raw"
+    for event in ("Bahrain Grand Prix", "A+B 100%"):
+        _write_session(raw, 2024, event, "Sprint Q",
+                       ["VER,01:30:45:123,01:05:123,12.345"])
+    lake = tmp_path / "lake"
+    counts = ingest_session_tree(
+        spark, str(raw), str(lake), tables=("session_results",)
+    )
+    assert counts == {"session_results": 2}
+    back = spark.read.parquet(str(lake / "session_results"))
+    assert sorted((r["EventName"], r["SessionKey"]) for r in back.collect()) == [
+        ("A+B 100%", "Sprint Q"),
+        ("Bahrain Grand Prix", "Sprint Q"),
+    ]
+
+
 def test_ingest_jobs_py4j_and_observed_counts(spark, tmp_path):
     """Per table: one header job and one write job; the row count is
     observed on the write.  A warm ingest builds its plans from
