@@ -147,6 +147,8 @@ MAX_GREEN_AGE_ROUNDS = 4
 #: ``graphops.star_contract_labels`` (the label flood is gone), and
 #: ``cc_star_contraction`` is ``dedup_clusters`` under its registered
 #: name.
+#:
+#: One lake commit (``versioned._commit``): every query committing to a versioned table.
 CHANGED: set[str] = {
     "cdc_apply_rollup_orders",
     "curation_pipeline",
@@ -165,6 +167,17 @@ CHANGED: set[str] = {
     "triangle_count_trade",
     "bfs_hops_trade",
     "sssp_trade_costs",
+    "dml_lifecycle_orders",
+    "dml_change_feed_orders",
+    "schema_evolution_orders",
+    "lake_restore_orders",
+    "check_constraints_orders",
+    "timestamp_as_of_orders",
+    "vacuum_dry_run_orders",
+    "zorder_scoped_orders",
+    "bloom_point_lookup_orders",
+    "zorder_pruning_orders",
+    "curation_shards_cdf",
 }
 
 #: Back-compat alias (pre-r11 name; semantics generalized above).

@@ -26,28 +26,28 @@ Semantics (SQL CHECK, like Delta):
   staged files are never published on violation, so a failed write
   leaves no new version and no visible garbage.
 
-Concurrency (round 11 — the window is CLOSED, judge r10 item 6): both
-sides re-check inside their optimistic commit loops, against the same
-entry list that decides their version.  A write whose commit attempt
-sees a constraint set differing from the one it validated re-validates
-its STAGED files before linking (``versioned.write_versioned``); an
+Concurrency: both sides re-check inside the lake's one commit protocol
+(``versioned._commit``), against the same entry list that decides their
+version.  A write — append, overwrite, streaming micro-batch, or a CoW
+UPDATE / MERGE / DELETE rewrite — whose commit attempt sees a
+constraint set differing from the one it validated re-validates its
+STAGED files before linking (``_staged_rows_check``); an
 ``add_constraint`` whose commit attempt sees a data commit after its
-validation re-validates the snapshot before linking (``_commit_meta``
-``revalidate``).  Whichever commits second therefore sees the first —
-there is no interleaving where a violating write and the constraint
-both commit (soaked in tests/test_concurrency_soak.py).
+validation re-validates the snapshot before linking.  Whichever commits
+second therefore sees the first — there is no interleaving where a
+violating write and the constraint both commit (soaked in
+tests/test_concurrency_soak.py; the DML side in
+tests/test_constraints.py).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .versioned import _entries, _log_path, _next_ts, read_versioned
+from .versioned import _commit, _entries, read_versioned
 
 __all__ = [
     "ConstraintViolationError",
@@ -106,63 +106,41 @@ def validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
         )
 
 
-def _commit_meta(
-    path: str,
-    action: str,
-    constraint: dict,
-    revalidate=None,
-    validated_head: int | None = None,
-) -> int:
-    """Metadata-only commit (no files, data_change=False) through the
-    same optimistic log race as every other writer.
+def _staged_rows_check(
+    df: DataFrame, path: str, files: list[str], validated: dict[str, str]
+):
+    """Commit check (``versioned._commit``) for a write that validated
+    ``df`` against the constraint set ``validated`` and staged it as
+    ``files``: whenever the set in effect in the attempt's log differs,
+    re-validate the STAGED rows (the on-disk files, not the possibly
+    recomputable ``df``) before linking.  Appends, overwrites, the
+    streaming sink and the CoW DML rewrites all commit through it."""
 
-    ``revalidate`` (set_constraint only): callable(es) re-checking the
-    constraint against the snapshot described by ``es``; invoked inside
-    the commit loop whenever a DATA commit landed after
-    ``validated_head`` — so a violating write racing the ADD is seen
-    before the constraint version links, and the serializable outcome
-    holds in both orders (the write's own loop re-checks constraints
-    symmetrically — sources/versioned.py write_versioned)."""
-    log = _log_path(path)
-    os.makedirs(log, exist_ok=True)
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    try:
-        while True:
-            es = _entries(path)
-            if revalidate is not None:
-                head = es[-1]["version"] if es else -1
-                data_moved = validated_head is None or any(
-                    e["version"] > validated_head
-                    and e.get("data_change", True)
-                    for e in es
-                )
-                if data_moved:
-                    revalidate(es)
-                    validated_head = head
-            version = (es[-1]["version"] if es else -1) + 1
-            entry = {
-                "version": version,
-                "ts": _next_ts(es),
-                "action": action,
-                "files": [],
-                "n_rows": 0,
-                "data_change": False,
-                "constraint": constraint,
-                "op": {"op": action, **constraint},
-            }
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = os.path.join(log, f"{version:08d}.json")
-            try:
-                os.link(tmp, target)
-                return version
-            except FileExistsError:
-                continue
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+    def check(es: list[dict]) -> None:
+        nonlocal validated
+        now = constraints_from_entries(es)
+        if files and now != validated:  # no staged rows: nothing to violate
+            staged = df.sparkSession.read.schema(df.schema).parquet(
+                *[os.path.join(path, f) for f in files]
+            )
+            validate_constraints(staged, now)
+            validated = now
+
+    return check
+
+
+def _commit_meta(path: str, action: str, constraint: dict, check=None) -> int:
+    """Metadata-only commit (no files, data_change=False) through the
+    lake's one commit protocol (``versioned._commit``)."""
+    entry = {
+        "action": action,
+        "files": [],
+        "n_rows": 0,
+        "data_change": False,
+        "constraint": constraint,
+        "op": {"op": action, **constraint},
+    }
+    return _commit(path, entry, check=check)
 
 
 def add_constraint(
@@ -171,23 +149,30 @@ def add_constraint(
     """``ALTER TABLE <t> ADD CONSTRAINT <name> CHECK (<expr>)``:
     validates the CURRENT snapshot (a constraint existing data already
     violates is refused — Delta semantics), then commits the
-    constraint as a metadata-only version.  Returns the version."""
+    constraint as a metadata-only version.  Returns the version.
+
+    The commit check re-validates the snapshot whenever a DATA commit
+    landed after the last validation — so a violating write racing the
+    ADD is seen before the constraint version links."""
     es0 = _entries(path)
     if name in constraints_from_entries(es0):
         raise ValueError(
             f"constraint {name!r} already exists on {path}; drop it first"
         )
     validate_constraints(read_versioned(spark, path), {name: expr})
+    validated_head = es0[-1]["version"] if es0 else -1
 
-    def _revalidate(es: list[dict]) -> None:
-        validate_constraints(read_versioned(spark, path), {name: expr})
+    def revalidate(es: list[dict]) -> None:
+        nonlocal validated_head
+        if any(
+            e["version"] > validated_head and e.get("data_change", True)
+            for e in es
+        ):
+            validate_constraints(read_versioned(spark, path), {name: expr})
+            validated_head = es[-1]["version"]
 
     return _commit_meta(
-        path,
-        "set_constraint",
-        {"name": name, "expr": expr},
-        revalidate=_revalidate,
-        validated_head=es0[-1]["version"] if es0 else -1,
+        path, "set_constraint", {"name": name, "expr": expr}, revalidate
     )
 
 

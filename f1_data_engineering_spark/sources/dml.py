@@ -24,14 +24,16 @@ Algorithm (the same shape Delta/Iceberg copy-on-write uses):
    with merge actions resolved; MERGE appends not-matched source rows
    in the same commit.
 3. **Commit a ``rewrite`` log entry** — ``files`` added plus
-   ``removed`` dropped — through the same optimistic loop as
-   ``write_versioned``, with one extra check: every removed file must
-   still be in the HEAD snapshot at commit time, otherwise a
-   concurrent writer rewrote or replaced it and blindly committing
-   would resurrect deleted rows or double-apply updates, so the
-   commit raises ``ConcurrentModificationError`` (real formats fail
-   the transaction the same way; the caller re-runs against the new
-   snapshot).
+   ``removed`` dropped — through the lake's one commit protocol
+   (``versioned._commit``), with this writer's conflict check run on
+   every attempt: every removed file must still be in the HEAD
+   snapshot, otherwise a concurrent writer rewrote or replaced it and
+   blindly committing would resurrect deleted rows or double-apply
+   updates, so the commit raises ``ConcurrentModificationError`` (real
+   formats fail the transaction the same way; the caller re-runs
+   against the new snapshot); and, like ``write_versioned``, the
+   staged rows are re-validated if a CHECK constraint landed since
+   they were validated.
 
 Old files stay on disk for time travel until ``vacuum``; readers at
 version V-1 still see the pre-DML rows.  ``read_version_delta``
@@ -60,21 +62,18 @@ commits ``read_version_delta`` refuses).
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .versioned import (
+    _commit,
     _entries,
-    _log_path,
-    _next_ts,
+    _live_files,
     _snapshot_files,
     _stage_files,
     _vacuum_tombstones,
-    read_versioned,
 )
 
 __all__ = [
@@ -146,52 +145,16 @@ def _touched(df_with_file: DataFrame, affected: Column) -> tuple[list[str], int]
     return [r["_dml_file"] for r in rows], int(obs.get["n_hit"])
 
 
-def _commit(
-    path: str,
-    entry_base: dict,
-    staged: list[str],
-    require_live: list[str],
-) -> int:
-    """Optimistic commit of a DML log entry: assign the next version,
-    link into place, retry on collision — validating on every attempt
-    that all of ``require_live`` is still in the head snapshot (a
-    concurrent writer replacing one invalidates this transaction's
-    reads).  On failure the ``staged`` sidecar/data files are removed
-    so nothing leaks into the table directory."""
-    os.makedirs(_log_path(path), exist_ok=True)
-    log = _log_path(path)
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    try:
-        while True:
-            es = _entries(path)
-            head = es[-1]["version"] if es else -1
-            live = set(_snapshot_files(path, None))
-            if not set(require_live) <= live:
-                for fn in staged:
-                    try:
-                        os.remove(os.path.join(path, fn))
-                    except FileNotFoundError:
-                        pass
-                missing = sorted(set(require_live) - live)
-                raise ConcurrentModificationError(
-                    f"files {missing[:3]}{'…' if len(missing) > 3 else ''} "
-                    f"left the snapshot of {path} mid-transaction"
-                )
-            version = head + 1
-            entry = {"version": version, "ts": _next_ts(es), **entry_base}
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = os.path.join(log, f"{version:08d}.json")
-            try:
-                os.link(tmp, target)
-                return version
-            except FileExistsError:
-                continue  # lost the race — revalidate and retry
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+def _require_live(path: str, es: list[dict], files: list[str]) -> None:
+    """Commit check: all of ``files`` is still in the snapshot ``es``
+    describes — a concurrent writer replacing one invalidated this
+    transaction's reads."""
+    missing = sorted(set(files) - set(_live_files(es)))
+    if missing:
+        raise ConcurrentModificationError(
+            f"files {missing[:3]}{'…' if len(missing) > 3 else ''} "
+            f"left the snapshot of {path} mid-transaction"
+        )
 
 
 def _stage_cdf(
@@ -213,25 +176,33 @@ def _stage_cdf(
 
 
 def _commit_rewrite(
-    df_new: DataFrame | None,
+    df_new: DataFrame,
     path: str,
     removed: list[str],
     op: dict,
     cdf: list[tuple[DataFrame, str]] | None = None,
 ) -> int:
-    """Stage ``df_new`` (None → removal-only) and commit a ``rewrite``
-    entry, plus optional change-feed sidecars.  CHECK constraints are
-    validated over the full rewritten frame before staging — updated
-    rows and merge inserts must satisfy them like any other write."""
-    if df_new is not None:
-        from .constraints import table_constraints, validate_constraints
+    """Stage ``df_new`` and commit a ``rewrite`` entry, plus optional
+    change-feed sidecars.  CHECK constraints are validated over the
+    full rewritten frame before staging — updated rows and merge
+    inserts must satisfy them like any other write — and the staged
+    files are re-validated if a constraint lands before the commit."""
+    from .constraints import (
+        _staged_rows_check,
+        table_constraints,
+        validate_constraints,
+    )
 
-        validate_constraints(df_new, table_constraints(path))
-        files, n_rows, stats = _stage_files(df_new, path)
-        schema_json = df_new.schema.json()
-    else:
-        files, n_rows, stats, schema_json = [], 0, {}, None
+    validated = table_constraints(path)
+    validate_constraints(df_new, validated)
+    files, n_rows, stats = _stage_files(df_new, path)
     cdf_files = _stage_cdf(cdf, path) if cdf else []
+    recheck = _staged_rows_check(df_new, path, files, validated)
+
+    def check(es: list[dict]) -> None:
+        _require_live(path, es, removed)
+        recheck(es)
+
     entry = {
         "action": "rewrite",
         "files": files,
@@ -239,12 +210,11 @@ def _commit_rewrite(
         "n_rows": n_rows,
         "file_stats": stats,
         "op": op,
+        "schema": df_new.schema.json(),
     }
-    if schema_json is not None:
-        entry["schema"] = schema_json
     if cdf_files:
         entry["cdf_files"] = cdf_files
-    return _commit(path, entry, files + cdf_files, removed)
+    return _commit(path, entry, files + cdf_files, check)
 
 
 def delete_where(
@@ -702,7 +672,9 @@ def delete_where_mor(
     }
     if cdf_files:
         entry["cdf_files"] = cdf_files
-    version = _commit(path, entry, files + cdf_files, targeted)
+    version = _commit(
+        path, entry, files + cdf_files, lambda es: _require_live(path, es, targeted)
+    )
     return {
         "version": version,
         "n_deleted": n_deleted,

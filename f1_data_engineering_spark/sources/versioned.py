@@ -19,9 +19,14 @@ with nothing but parquet + JSON:
   overwrite ≤ V — readers resolve the list from the log only, so
   half-written data files are invisible (same manifest-last principle
   as ``pydatasink``);
-* commits are OPTIMISTIC: the log entry is staged to a temp name and
-  ``os.link``-ed into place — if the version file already exists a
+* commits are OPTIMISTIC, and ``_commit`` is the only code that turns
+  a log entry into a version: it stages the entry to a temp name and
+  ``os.link``-s it into place — if the version file already exists a
   concurrent writer won, and the commit retries against the new head.
+  Each writer passes only its entry and its conflict check, which
+  ``_commit`` runs against the same entry list that decides the
+  version (the split Delta Lake makes between its atomic log append
+  and each writer's conflict detection).
 
 Single-table, filesystem-atomic-rename semantics — the honest scope;
 log entries carry the writer schema and per-file column min/max stats
@@ -45,6 +50,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LOG_DIR = "_log"
 
@@ -85,8 +91,6 @@ def _merge_schema(old, new):
     """Union of the table schema and an append's schema, by name, old
     columns first (additive evolution).  Raises
     :class:`SchemaEvolutionError` on a dtype conflict."""
-    from pyspark.sql.types import StructType
-
     by_name = {f.name: f for f in old.fields}
     out = list(old.fields)
     for f in new.fields:
@@ -161,6 +165,58 @@ def _next_ts(es: list[dict]) -> float:
     if prev is not None and now <= prev:
         return prev + 1e-6
     return now
+
+
+def _unstage(path: str, staged) -> None:
+    """Remove the files ``staged`` (names under ``path``); gone is fine."""
+    for fn in staged:
+        try:
+            os.remove(os.path.join(path, fn))
+        except FileNotFoundError:
+            pass
+
+
+def _commit(path: str, entry: dict, staged=(), check=None) -> int:
+    """Commit ``entry`` as the next version of the log; returns it.
+
+    The lake's one commit protocol.  Each attempt reads the log once
+    and runs ``check(es)`` against that same entry list: the check may
+    raise (the commit refuses: the ``staged`` files are removed and the
+    error propagates) or return an already-committed version (a
+    replayed streaming batch: ``staged`` is removed and that version
+    returned).  Otherwise the entry gets the next version and a
+    strictly increasing ``ts``, is written to ``_tmp_<uuid>.json`` and
+    ``os.link``-ed into place, which fails iff the version exists — a
+    concurrent writer won, so the attempt repeats, check included,
+    against the new head.  The staged entry file never outlives the
+    call."""
+    log = _log_path(path)
+    os.makedirs(log, exist_ok=True)
+    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
+    try:
+        while True:
+            es = _entries(path)
+            try:
+                done = check(es) if check is not None else None
+            except BaseException:
+                _unstage(path, staged)
+                raise
+            if done is not None:
+                _unstage(path, staged)
+                return done
+            version = (es[-1]["version"] if es else -1) + 1
+            with open(tmp, "w") as f:
+                json.dump({"version": version, "ts": _next_ts(es), **entry}, f)
+            try:
+                os.link(tmp, os.path.join(log, f"{version:08d}.json"))
+                return version
+            except FileExistsError:
+                continue  # lost the race — re-read head, re-check, retry
+    finally:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
 
 
 def _coerce_ts(timestamp) -> float:
@@ -490,105 +546,68 @@ def write_versioned(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if batch_id is not None:
-        # pre-check BEFORE staging: a replayed micro-batch returns
-        # without writing (and thus without deleting) any data files
-        for e in _entries(path):
-            if e.get("batch_id") == batch_id:
-                return e["version"]
+    from .constraints import (
+        _staged_rows_check,
+        constraints_from_entries,
+        validate_constraints,
+    )
+
+    es = _entries(path)  # the one log read before staging
+
+    def replayed(es: list[dict]) -> int | None:
+        if batch_id is not None:
+            for e in es:
+                if e.get("batch_id") == batch_id:
+                    return e["version"]
+        return None
+
+    # pre-check BEFORE staging: a replayed micro-batch returns without
+    # writing (and thus without deleting) any data files
+    done = replayed(es)
+    if done is not None:
+        return done
     # additive schema evolution: an append may introduce new columns
     # (recorded in the log; old files read them as NULL) or omit
     # existing ones (this commit's files read them as NULL) — but a
     # dtype conflict is a hard error, never a silent cast.  The entry
     # records the merged TABLE schema; overwrite resets it to df's.
-    if mode == "append" and _entries(path):
-        try:
-            current = _snapshot_schema(path, None)
-        except ValueError:  # legacy log without schemas
-            current = None
-        table_schema = (
-            _merge_schema(current, df.schema) if current is not None else df.schema
+    table_schema = df.schema
+    current = _logged_schema(es) if mode == "append" else None
+    if current is not None:  # None: new table, or legacy log without schemas
+        table_schema = _merge_schema(
+            StructType.fromJson(json.loads(current)), df.schema
         )
-    else:
-        table_schema = df.schema
-    from .constraints import constraints_from_entries, validate_constraints
-
-    validated_cs = (
-        constraints_from_entries(_entries(path)) if _entries(path) else {}
-    )
-    if validated_cs:
-        # CHECK constraints gate every row-landing path (this covers
-        # appends, overwrites, and the streaming sink's micro-batches);
-        # zero cost when none exist.  Validated BEFORE staging so a
-        # refused write leaves nothing on disk.
-        validate_constraints(df, validated_cs)
-    os.makedirs(_log_path(path), exist_ok=True)
+    # CHECK constraints gate every row-landing path (this covers
+    # appends, overwrites, and the streaming sink's micro-batches);
+    # zero cost when none exist.  Validated BEFORE staging so a refused
+    # write leaves nothing on disk; the commit check re-validates the
+    # staged files if a constraint lands before the link.
+    validated = constraints_from_entries(es)
+    validate_constraints(df, validated)
     files, n_rows, stats = _stage_files(df, path)
-    log = _log_path(path)
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    try:
-        while True:
-            # ONE log read per attempt serves the head version AND the
-            # replay re-check (commit cost must not be O(versions) × 3)
-            es = _entries(path)
-            if batch_id is not None:
-                for e in es:  # re-check: a replica may have won the race
-                    if e.get("batch_id") == batch_id:
-                        for fn in files:
-                            os.remove(os.path.join(path, fn))
-                        return e["version"]
-            cs_now = constraints_from_entries(es)
-            if cs_now != validated_cs:
-                # a constraint landed between validation and commit
-                # (judge r10 item 6): re-validate the STAGED rows (the
-                # on-disk files, not the possibly-recomputable df)
-                # before linking — on violation, unstage and refuse so
-                # neither side ever commits past the other unchecked
-                try:
-                    validate_constraints(
-                        df.sparkSession.read.schema(df.schema).parquet(
-                            *[os.path.join(path, f) for f in files]
-                        ),
-                        cs_now,
-                    )
-                except Exception:
-                    for fn in files:
-                        try:
-                            os.remove(os.path.join(path, fn))
-                        except FileNotFoundError:
-                            pass
-                    raise
-                validated_cs = cs_now
-            version = (es[-1]["version"] if es else -1) + 1
-            entry = {
-                "version": version,
-                "ts": _next_ts(es),
-                "action": mode,
-                "files": files,
-                "n_rows": n_rows,
-                "schema": table_schema.json(),
-                "file_stats": stats,
-            }
-            if batch_id is not None:
-                entry["batch_id"] = batch_id
-            if not data_change:
-                # layout-only commit (compaction / ZORDER): same rows,
-                # new files — incremental readers skip it (Delta's
-                # dataChange=false contract)
-                entry["data_change"] = False
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = os.path.join(log, f"{version:08d}.json")
-            try:
-                os.link(tmp, target)  # atomic: fails iff the version exists
-                return version
-            except FileExistsError:
-                continue  # lost the race — re-read head and retry
-    finally:
-        try:
-            os.remove(tmp)  # never leave staged commit files behind
-        except FileNotFoundError:
-            pass
+    recheck = _staged_rows_check(df, path, files, validated)
+
+    def check(es: list[dict]) -> int | None:
+        done = replayed(es)  # a replica may have won the race
+        if done is None:
+            recheck(es)
+        return done
+
+    entry = {
+        "action": mode,
+        "files": files,
+        "n_rows": n_rows,
+        "schema": table_schema.json(),
+        "file_stats": stats,
+    }
+    if batch_id is not None:
+        entry["batch_id"] = batch_id
+    if not data_change:
+        # layout-only commit (compaction / ZORDER): same rows, new
+        # files — incremental readers skip it (Delta's
+        # dataChange=false contract)
+        entry["data_change"] = False
+    return _commit(path, entry, files, check)
 
 
 def _snapshot_files(path: str, version: int | None) -> list[str]:
@@ -597,6 +616,13 @@ def _snapshot_files(path: str, version: int | None) -> list[str]:
         if version > (es[-1]["version"] if es else -1):
             raise ValueError(f"version {version} does not exist")
         es = [e for e in es if e["version"] <= version]
+    return _live_files(es)
+
+
+def _live_files(es: list[dict]) -> list[str]:
+    """Data files of the snapshot after replaying ``es`` — log
+    arithmetic only, so a commit check computes the live set from the
+    entry list it was given without reading the log again."""
     files: list[str] = []
     for e in es:
         if e["action"] in ("overwrite", "restore"):
@@ -829,17 +855,22 @@ def read_versioned_pruned(
     )
 
 
+def _logged_schema(es: list[dict]) -> str | None:
+    """The table schema (JSON) the last schema-bearing entry of ``es``
+    recorded; None for an empty log or one from before schemas were
+    recorded."""
+    return next((e["schema"] for e in reversed(es) if "schema" in e), None)
+
+
 def _snapshot_schema(path: str, version: int | None):
     """Table schema at a version, from the log (for empty pruned reads)."""
-    from pyspark.sql.types import StructType
-
     es = _entries(path)
     if version is not None:
         es = [e for e in es if e["version"] <= version]
-    for e in reversed(es):
-        if "schema" in e:
-            return StructType.fromJson(json.loads(e["schema"]))
-    raise ValueError(f"no schema recorded in the log of {path}")
+    schema = _logged_schema(es)
+    if schema is None:
+        raise ValueError(f"no schema recorded in the log of {path}")
+    return StructType.fromJson(json.loads(schema))
 
 
 def read_version_delta(
@@ -898,13 +929,10 @@ def read_version_delta(
         # zero-column frame would turn "nothing new" into an
         # AnalysisException.  Entries record their writer's schema;
         # take the latest one at or before to_version.
-        from pyspark.sql.types import StructType
-
-        for e in reversed([x for x in all_es if x["version"] <= to_version]):
-            if "schema" in e:
-                schema = StructType.fromJson(json.loads(e["schema"]))
-                return spark.createDataFrame([], schema)
-        return spark.range(0).selectExpr()  # legacy log without schemas
+        schema = _logged_schema([e for e in all_es if e["version"] <= to_version])
+        if schema is None:
+            return spark.range(0).selectExpr()  # legacy log without schemas
+        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
     return _read_with_log_schema(spark, path, files, to_version)
 
 
@@ -1200,55 +1228,39 @@ def restore_versioned(
     head = es[-1]["version"]
     if version > head or version < 0:
         raise ValueError(f"version {version} does not exist (head={head})")
+    entry = _restore_entry(path, es, version, f"restore {path} to v{version}")
+    entry["restored_version"] = version
+    entry["op"] = {"op": "restore", "restored_version": version}
+    return _commit(path, entry)
+
+
+def _restore_entry(path: str, es: list[dict], version: int, what: str) -> dict:
+    """The ``restore``-shaped log entry of RESTORE and the CLONE seed:
+    the data files, in-effect deletion vectors and schema of the
+    snapshot at ``version``, by reference.  Raises if any of those
+    files was vacuumed — the entry would commit an unreadable
+    snapshot."""
     at = [e for e in es if e["version"] <= version]
-    files = _snapshot_files(path, version)
-    dv_state = _dv_state(at)
+    entry = {"action": "restore", "files": _live_files(at), "dv_state": _dv_state(at)}
     dead = _vacuum_tombstones(path)
     missing = [
         f
-        for f in files + [f for s in dv_state for f in s["files"]]
+        for f in _restore_needs(entry)
         if f in dead or not os.path.isfile(os.path.join(path, f))
     ]
     if missing:
         raise ValueError(
-            f"cannot restore {path} to v{version}: {len(missing)} "
-            f"file(s) of that snapshot were vacuumed (e.g. {missing[0]})"
+            f"cannot {what}: {len(missing)} file(s) of that snapshot "
+            f"were vacuumed (e.g. {missing[0]})"
         )
-    schema = None
-    for e in reversed(at):
-        if "schema" in e:
-            schema = e["schema"]
-            break
-    log = _log_path(path)
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    try:
-        while True:  # same optimistic log race as write_versioned
-            cur = _entries(path)
-            new_v = cur[-1]["version"] + 1
-            entry = {
-                "version": new_v,
-                "ts": _next_ts(cur),
-                "action": "restore",
-                "files": files,
-                "dv_state": dv_state,
-                "restored_version": version,
-                "op": {"op": "restore", "restored_version": version},
-            }
-            if schema is not None:
-                entry["schema"] = schema
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = os.path.join(log, f"{new_v:08d}.json")
-            try:
-                os.link(tmp, target)  # atomic: fails iff the version exists
-                return new_v
-            except FileExistsError:
-                continue  # lost the race — re-read head and retry
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+    schema = _logged_schema(at)
+    if schema is not None:
+        entry["schema"] = schema
+    return entry
+
+
+def _restore_needs(entry: dict) -> list[str]:
+    return entry["files"] + [f for s in entry["dv_state"] for f in s["files"]]
 
 
 def clone_versioned(
@@ -1275,8 +1287,6 @@ def clone_versioned(
     vacuumed, or if ``target`` already has a log.  Returns the clone's
     version (0).
     """
-    import shutil as _sh
-
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp, not both")
@@ -1291,39 +1301,26 @@ def clone_versioned(
         raise ValueError(f"version {version} does not exist (head={head})")
     if _entries(target):
         raise ValueError(f"clone target {target} already has a table log")
-    at = [e for e in es if e["version"] <= version]
-    files = _snapshot_files(path, version)
-    dv_state = _dv_state(at)
-    dead = _vacuum_tombstones(path)
-    needed = files + [f for s in dv_state for f in s["files"]]
-    missing = [
-        f
-        for f in needed
-        if f in dead or not os.path.isfile(os.path.join(path, f))
-    ]
-    if missing:
-        raise ValueError(
-            f"cannot clone {path} at v{version}: {len(missing)} file(s) "
-            f"of that snapshot were vacuumed (e.g. {missing[0]})"
-        )
-    schema = None
-    for e in reversed(at):
-        if "schema" in e:
-            schema = e["schema"]
-            break
+    # the clone's seed entry reuses the `restore` shape: snapshot = the
+    # recorded file list, DV state = the recorded list — both already
+    # understood by every reader (and a feed read across it correctly
+    # refuses: a clone seed has no incremental representation)
+    entry = _restore_entry(path, es, version, f"clone {path} at v{version}")
+    entry["n_rows"] = None
+    entry["op"] = {"op": "clone", "source": path, "source_version": version}
     os.makedirs(target, exist_ok=True)
     linked: list[str] = []
-    for f in needed:
+    for f in _restore_needs(entry):
         src, dst = os.path.join(path, f), os.path.join(target, f)
         try:
             try:
                 os.link(src, dst)  # zero-copy; content outlives unlink
-                linked.append(dst)
+                linked.append(f)
             except FileExistsError:
                 pass  # idempotent retry after a crashed clone
             except OSError:
-                _sh.copy2(src, dst)  # cross-device: fall back to a copy
-                linked.append(dst)
+                shutil.copy2(src, dst)  # cross-device: fall back to a copy
+                linked.append(f)
         except FileNotFoundError:
             # a VACUUM unlinked this file between the up-front check
             # and the link (judge r10 item 6): fail CLEANLY with the
@@ -1331,46 +1328,19 @@ def clone_versioned(
             # partial clone so a retry at a still-live version starts
             # fresh (the target never gained a log, so it was never a
             # table)
-            for d in linked:
-                try:
-                    os.remove(d)
-                except FileNotFoundError:
-                    pass
+            _unstage(target, linked)
             raise ValueError(
                 f"cannot clone {path} at v{version}: {f} was vacuumed "
                 "mid-clone (snapshot left the source's retention window)"
             ) from None
-    # the clone's seed entry reuses the `restore` shape: snapshot = the
-    # recorded file list, DV state = the recorded list — both already
-    # understood by every reader (and a feed read across it correctly
-    # refuses: a clone seed has no incremental representation)
-    log = _log_path(target)
-    os.makedirs(log, exist_ok=True)
-    entry = {
-        "version": 0,
-        "ts": _next_ts([]),
-        "action": "restore",
-        "files": files,
-        "dv_state": dv_state,
-        "n_rows": None,
-        "op": {"op": "clone", "source": path, "source_version": version},
-    }
-    if schema is not None:
-        entry["schema"] = schema
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump(entry, fh)
-    try:
-        os.link(tmp, os.path.join(log, "00000000.json"))
-    except FileExistsError:
-        raise ValueError(
-            f"clone target {target} gained a log concurrently"
-        ) from None
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+
+    def seed_only(es: list[dict]) -> None:
+        # the linked files stay: a concurrent clone of the same source
+        # holds the same names, hardlinked
+        if es:
+            raise ValueError(f"clone target {target} gained a log concurrently")
+
+    _commit(target, entry, check=seed_only)
     from .constraints import _commit_meta, table_constraints
 
     for name, expr in table_constraints(path, version).items():
@@ -1571,46 +1541,23 @@ def rewrite_subset_layout(
         files, _, stats = _stage_files(shape(df, n_rows), path)
     finally:
         df.unpersist()
-    log = _log_path(path)
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    try:
-        while True:  # optimistic commit, validating the read set
-            cur = _entries(path)
-            live = set(_snapshot_files(path, None))
-            if not set(subset) <= live or _dv_fingerprint(cur) != read_dvs:
-                for fn in files:
-                    os.remove(os.path.join(path, fn))
-                raise ValueError(
-                    "concurrent commit replaced a file (or changed the "
-                    "deletion-vector state of a file) this layout rewrite "
-                    "read — re-run against the new head"
-                )
-            version = cur[-1]["version"] + 1
-            entry = {
-                "version": version,
-                "ts": _next_ts(cur),
-                "action": "rewrite",
-                "files": files,
-                "removed": list(subset),
-                "n_rows": n_rows,
-                "file_stats": stats,
-                "data_change": False,
-                "op": op,
-            }
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = os.path.join(log, f"{version:08d}.json")
-            try:
-                os.link(tmp, target)
-                return {
-                    "version": version,
-                    "files_out": len(files),
-                    "n_rows": n_rows,
-                }
-            except FileExistsError:
-                continue
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+
+    def read_set_unchanged(es: list[dict]) -> None:
+        if not set(subset) <= set(_live_files(es)) or _dv_fingerprint(es) != read_dvs:
+            raise ValueError(
+                "concurrent commit replaced a file (or changed the "
+                "deletion-vector state of a file) this layout rewrite "
+                "read — re-run against the new head"
+            )
+
+    entry = {
+        "action": "rewrite",
+        "files": files,
+        "removed": list(subset),
+        "n_rows": n_rows,
+        "file_stats": stats,
+        "data_change": False,
+        "op": op,
+    }
+    version = _commit(path, entry, files, read_set_unchanged)
+    return {"version": version, "files_out": len(files), "n_rows": n_rows}

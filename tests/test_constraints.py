@@ -1,8 +1,8 @@
 """CHECK constraints (sources/constraints.py): SQL semantics (FALSE
 violates, NULL satisfies), existing-data validation on ADD, refusal
 leaves no version/files behind, enforcement across append / overwrite
-/ streaming sink / UPDATE / MERGE insert, drop, and per-version
-constraint state."""
+/ streaming sink / UPDATE / MERGE insert, UPDATE / MERGE refused past a
+concurrent ADD CONSTRAINT, drop, and per-version constraint state."""
 
 from __future__ import annotations
 
@@ -104,6 +104,43 @@ def test_dml_paths_enforced(spark, lake):
     # valid DML still lands
     D.update_where(spark, lake, "k = 5", {"v": "12345"})
     assert V.read_versioned(spark, lake).filter("k = 5").first()["v"] == 12345
+
+
+@pytest.mark.parametrize("op", ["update", "merge"])
+def test_dml_refused_past_concurrent_add_constraint(spark, lake, monkeypatch, op):
+    """A constraint committed after a CoW UPDATE/MERGE staged its
+    rewrite but before the rewrite's commit: the commit re-validates
+    the staged rows and refuses, leaving no staged file behind and the
+    constraint's version as the head."""
+    real_stage = D._stage_files
+    added = []
+
+    def racing_stage(df, path, prefix="data-"):
+        out = real_stage(df, path, prefix)
+        if not added:  # the race: ADD CONSTRAINT lands after staging
+            added.append(C.add_constraint(spark, lake, "ck_nonneg", "v >= 0"))
+        return out
+
+    files = _parquets(lake)
+    monkeypatch.setattr(D, "_stage_files", racing_stage)
+    with pytest.raises(C.ConstraintViolationError, match="ck_nonneg"):
+        if op == "update":
+            D.update_where(spark, lake, "k < 3", {"v": "-1"})
+        else:
+            D.merge_into(
+                spark,
+                lake,
+                spark.createDataFrame([(5, -7)], "k long, v long"),
+                on=["k"],
+                when_matched_update={"v": "s.v"},
+                when_not_matched_insert=False,
+            )
+    assert added and V.latest_version(lake) == added[0]
+    assert _parquets(lake) == files
+    assert not [
+        f for f in os.listdir(os.path.join(lake, V.LOG_DIR)) if f.startswith("_tmp_")
+    ]
+    assert V.read_versioned(spark, lake).filter("v < 0").count() == 0
 
 
 def test_streaming_sink_enforced(spark, lake, tmp_path):

@@ -369,12 +369,12 @@ def test_mor_concurrent_modification_detected(spark, lake):
     V.write_versioned(df.coalesce(1), lake, mode="overwrite")
     with pytest.raises(D.ConcurrentModificationError):
         # DV targeting files that left the snapshot must not commit
-        D._commit(
+        V._commit(
             lake,
             {"action": "dv", "files": [], "applies_to": [snap0[0]],
              "n_rows": 1, "op": {"op": "delete_mor", "n_deleted": 1}},
-            [],
-            [snap0[0]],
+            (),
+            lambda es: D._require_live(lake, es, [snap0[0]]),
         )
 
 

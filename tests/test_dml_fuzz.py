@@ -11,9 +11,10 @@ DuckDB — the same rows+schema+values gate as the driver.  Also pins
 the two delete strategies against each other (CoW state == MoR state)
 and change-feed replay (v0 + feed == head).
 
-The two MERGE suites form a smoke tier that runs in the default profile
-on ``SMOKE_EXAMPLES`` examples each; the other suites are ``soak`` and
-run, with the full counts, only under ``SPARK_GRAFT_FULL_TESTS=1``.
+Every suite runs in the default profile as a smoke tier of
+``SMOKE_EXAMPLES`` examples, together driving every commit kind
+(rewrite, dv, overwrite compaction, constraint metadata); under
+``SPARK_GRAFT_FULL_TESTS=1`` each runs its full example count.
 """
 
 from __future__ import annotations
@@ -49,8 +50,8 @@ def _n_examples(default: int) -> int:
     return max(1, round(base * default / 8)) if base else default
 
 
-#: Smoke tier: the two MERGE suites also run in the default profile,
-#: on this many examples each; the full profile runs their soak counts.
+#: Smoke tier: every suite runs in the default profile on this many
+#: examples; the full profile runs their soak counts.
 SMOKE_EXAMPLES = 2
 
 
@@ -146,9 +147,8 @@ def _snap_pdf(spark, t):
     return V.read_versioned(spark, t).select("k", "v", "s").toPandas()
 
 
-@pytest.mark.soak
 @settings(
-    max_examples=_n_examples(8),
+    max_examples=_smoke_or(8),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
@@ -272,9 +272,8 @@ def test_update_then_merge_oracle_and_feed_replay(spark, fuzz_dir, case):
     assert head.exceptAll(state).count() == 0
 
 
-@pytest.mark.soak
 @settings(
-    max_examples=_n_examples(6),
+    max_examples=_smoke_or(6),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
@@ -567,9 +566,8 @@ def _ck_history(draw):
             "ops": ops}
 
 
-@pytest.mark.soak
 @settings(
-    max_examples=_n_examples(10),
+    max_examples=_smoke_or(10),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )

@@ -27,7 +27,7 @@ def test_every_commit_path_stamps_monotonic_ts(spark, tmp_path):
     t = str(tmp_path / "tbl")
     V.write_versioned(_df(spark, 0, 8), t, "overwrite")  # v0
     V.write_versioned(_df(spark, 8, 12, "b"), t, "append")  # v1
-    D.delete_where(spark, t, "k >= 10")  # v2 (dml _commit)
+    D.delete_where(spark, t, "k >= 10")  # v2 (dml rewrite)
     V.restore_versioned(t, version=1)  # v3
     V.write_versioned(
         _df(spark, 100, 101, "s").repartition(2), t, "append"

@@ -65,6 +65,57 @@ def test_version_collision_retries(spark, tmp_path):
     assert V.latest_version(t) == 2
 
 
+def _leftovers(t):
+    """(parquet files in the table root, staged entries in the log)."""
+    log = os.path.join(t, V.LOG_DIR)
+    return (
+        {f for f in os.listdir(t) if f.endswith(".parquet")},
+        [f for f in os.listdir(log) if f.startswith("_tmp_")],
+    )
+
+
+def test_commit_refusal_unstages_everything(spark, tmp_path):
+    """A check that raises refuses the commit: the staged data files
+    and the staged log entry are both removed, and no version lands."""
+    import pytest
+
+    t = str(tmp_path / "refuse")
+    V.write_versioned(_df(spark, 0, 3, "a"), t, "overwrite")
+    before = _leftovers(t)
+    files, n_rows, _ = V._stage_files(_df(spark, 3, 6, "b"), t)
+    assert files and _leftovers(t)[0] == before[0] | set(files)
+
+    def refuse(es):
+        raise RuntimeError("conflict")
+
+    entry = {"action": "append", "files": files, "n_rows": n_rows}
+    with pytest.raises(RuntimeError, match="conflict"):
+        V._commit(t, entry, files, refuse)
+    assert _leftovers(t) == (before[0], [])
+    assert V.latest_version(t) == 0
+
+
+def test_commit_lost_race_reruns_check(spark, tmp_path):
+    """A competing entry landing between the check and the link makes
+    the commit retry, re-running the check against the new head; the
+    entry lands at head + 2 with a strictly larger ts."""
+    t = str(tmp_path / "race")
+    V.write_versioned(_df(spark, 0, 3, "a"), t, "overwrite")
+    head = V.latest_version(t)
+    seen = []
+
+    def racing(es):
+        seen.append(es[-1]["version"])
+        if len(seen) == 1:  # a concurrent writer wins this attempt
+            V._commit(t, {"action": "append", "files": [], "n_rows": 0})
+
+    v = V._commit(t, {"action": "append", "files": [], "n_rows": 0}, (), racing)
+    assert v == head + 2 and seen == [head, head + 1]
+    hist = V.table_history(t)
+    assert hist[-1]["version"] == v and hist[-1]["ts"] > hist[-2]["ts"]
+    assert _leftovers(t)[1] == []
+
+
 def test_missing_version_raises(spark, tmp_path):
     t = str(tmp_path / "tbl4")
     V.write_versioned(_df(spark, 0, 2, "a"), t, "overwrite")
