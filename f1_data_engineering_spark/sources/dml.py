@@ -13,16 +13,19 @@ Algorithm (the same shape Delta/Iceberg copy-on-write uses):
    affects.  DELETE/UPDATE filter the scan by the predicate.  MERGE
    builds one PROBE: the inner join of the scan with the source on
    the merge keys, projected to (file, row position, applicable
-   clause, key) and cached.  It is the merge's only full-table scan
-   and it is source-sized: the cardinality guard, the touched files
-   and the per-clause counts come from one collect over it, and the
-   not-matched insert anti-joins the source against its keys.  Every
-   collect is file-metadata sized, never row sized.
+   clause) plus the source row and cached.  It is the merge's only
+   full-table scan and it is source-sized: the cardinality guard, the
+   touched files and the per-clause counts come from one file-sized
+   collect over it, the rewrite joins it back by row, and the
+   not-matched insert anti-joins the source against its keys.  Counts
+   the write can see are taken by the write itself
+   (``versioned._stage_files`` observes them): MERGE's inserts, and
+   the MoR delete's targeted files, which needs no collect at all.
 2. **Rewrite only those files.**  Untouched files carry over into the
    new snapshot by reference — zero IO.  Touched files are re-read
-   and rewritten without the deleted rows / with assignments applied /
-   with merge actions resolved; MERGE appends not-matched source rows
-   in the same commit.
+   (their scan lists only them) and rewritten without the deleted
+   rows / with assignments applied / with merge actions resolved;
+   MERGE appends not-matched source rows in the same write.
 3. **Commit a ``rewrite`` log entry** — ``files`` added plus
    ``removed`` dropped — through the lake's one commit protocol
    (``versioned._commit``), with this writer's conflict check run on
@@ -73,6 +76,7 @@ from .versioned import (
     _live_files,
     _snapshot_files,
     _stage_files,
+    _unstage,
     _vacuum_tombstones,
 )
 
@@ -97,26 +101,27 @@ def _to_cond(condition: str | Column) -> Column:
 
 
 _META = ("_dml_file", "_dml_ri")
+#: Marks MERGE's inserted rows in its staged write, which counts them.
+_INS = "_dml_ins"
 
 
 def _scan_with_file(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
-    """Snapshot scan carrying the owning file's BASENAME and row
-    position per row, with in-effect deletion vectors already applied —
-    a copy-on-write op over a table carrying MoR deletes must not
-    resurrect them (the rewrite it commits materializes those deletes
-    as a side effect)."""
-    from .versioned import _anti_join_dvs, _dv_files, _read_with_log_schema
+    """Scan of ``files`` of the current snapshot carrying the owning
+    file's BASENAME and row position per row, with in-effect deletion
+    vectors already applied — a copy-on-write op over a table carrying
+    MoR deletes must not resurrect them (the rewrite it commits
+    materializes those deletes as a side effect)."""
+    from .versioned import (
+        _anti_join_dvs,
+        _dv_files,
+        _file_tags,
+        _read_with_log_schema,
+    )
 
     df = _read_with_log_schema(spark, path, files, None).select(
-        "*",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-            "_dml_file"
-        ),
-        F.col("_metadata.row_index").alias("_dml_ri"),
+        "*", *_file_tags(*_META)
     )
-    return _anti_join_dvs(
-        spark, path, df, _dv_files(path, None), "_dml_file", "_dml_ri"
-    )
+    return _anti_join_dvs(spark, path, df, _dv_files(path, None), *_META)
 
 
 def _touched(df_with_file: DataFrame, affected: Column) -> tuple[list[str], int]:
@@ -169,7 +174,7 @@ def _stage_cdf(
     tagged = [
         df.withColumn("_change_type", F.lit(ct)) for df, ct in frames
     ]
-    files, _, _ = _stage_files(
+    files, _, _, _ = _stage_files(
         reduce(DataFrame.unionByName, tagged), path, prefix="cdf-"
     )
     return files
@@ -181,10 +186,16 @@ def _commit_rewrite(
     removed: list[str],
     op: dict,
     cdf: list[tuple[DataFrame, str]] | None = None,
-) -> int:
+    observe: tuple[Column, ...] = (),
+    drop: tuple[str, ...] = (),
+) -> tuple[int | None, dict]:
     """Stage ``df_new`` and commit a ``rewrite`` entry, plus optional
-    change-feed sidecars.  CHECK constraints are validated over the
-    full rewritten frame before staging — updated rows and merge
+    change-feed sidecars; returns (version, the entry's ``op``).
+    ``observe`` and ``drop`` pass to ``_stage_files``: the values the
+    staging write observes join ``op``.  A rewrite that removes no
+    file and stages no row commits nothing: its files are unstaged
+    and the version is None.  CHECK constraints are validated over
+    the full rewritten frame before staging — updated rows and merge
     inserts must satisfy them like any other write — and the staged
     files are re-validated if a constraint lands before the commit."""
     from .constraints import (
@@ -193,11 +204,18 @@ def _commit_rewrite(
         validate_constraints,
     )
 
+    table = df_new.drop(*drop) if drop else df_new
     validated = table_constraints(path)
-    validate_constraints(df_new, validated)
-    files, n_rows, stats = _stage_files(df_new, path)
+    validate_constraints(table, validated)
+    files, n_rows, stats, seen = _stage_files(
+        df_new, path, observe=observe, drop=drop
+    )
+    if not removed and not n_rows:
+        _unstage(path, files)
+        return None, op
+    op = {**op, **seen}
     cdf_files = _stage_cdf(cdf, path) if cdf else []
-    recheck = _staged_rows_check(df_new, path, files, validated)
+    recheck = _staged_rows_check(table, path, files, validated)
 
     def check(es: list[dict]) -> None:
         _require_live(path, es, removed)
@@ -210,11 +228,11 @@ def _commit_rewrite(
         "n_rows": n_rows,
         "file_stats": stats,
         "op": op,
-        "schema": df_new.schema.json(),
+        "schema": table.schema.json(),
     }
     if cdf_files:
         entry["cdf_files"] = cdf_files
-    return _commit(path, entry, files + cdf_files, check)
+    return _commit(path, entry, files + cdf_files, check), op
 
 
 def delete_where(
@@ -239,7 +257,7 @@ def delete_where(
             "files_rewritten": 0,
             "files_total": len(snap),
         }
-    scope = df.filter(F.col("_dml_file").isin(touched))
+    scope = _scan_with_file(spark, path, touched)
     if capture_cdf:
         # two consumers (survivor rewrite + deleted-row sidecars) —
         # materialize the touched scope once instead of rescanning
@@ -249,7 +267,7 @@ def delete_where(
         [(scope.filter(hit).drop(*_META), "delete")] if capture_cdf else None
     )
     try:
-        version = _commit_rewrite(
+        version, _ = _commit_rewrite(
             survivors, path, touched,
             {"op": "delete", "n_deleted": n_deleted}, cdf,
         )
@@ -291,7 +309,7 @@ def update_where(
             "files_rewritten": 0,
             "files_total": len(snap),
         }
-    scope = df.filter(F.col("_dml_file").isin(touched))
+    scope = _scan_with_file(spark, path, touched)
     if capture_cdf:
         # three consumers (rewrite + pre-image + post-image sidecars)
         scope = scope.cache()
@@ -310,7 +328,7 @@ def update_where(
         post = scope.filter(hit).select(*out_cols).drop(*_META)
         cdf = [(pre, "update_preimage"), (post, "update_postimage")]
     try:
-        version = _commit_rewrite(
+        version, _ = _commit_rewrite(
             rewritten, path, touched,
             {"op": "update", "n_updated": n_updated}, cdf,
         )
@@ -383,16 +401,22 @@ def merge_into(
     The table is scanned once, by the PROBE: ``target ⋈ source`` on
     the key columns (broadcast the source below the threshold, shuffle
     equi-join above), keeping matched rows only as (file, row
-    position, first applicable clause, key), cached.  From it:
+    position, first applicable clause) plus the source row, cached.
+    From it:
 
-    * one collect of ``groupBy(file, row)`` then ``groupBy(file,
-      clause)`` gives the guard (a row matched more than once), the
-      touched files and ``n_updated``/``n_deleted``;
-    * the insert is ``source ▷ distinct probe keys`` — a source row
-      whose key matches any target row is never inserted, whatever
-      the clause conditions say; ``n_inserted`` is counted on it;
-    * the rewrite is ``touched scope ⟕ source``, cached only when CDF
-      capture reads it more than once.
+    * one collect of ``groupBy(file)`` gives the guard (fewer distinct
+      row positions than probe rows: a row matched more than once),
+      the touched files and ``n_updated``/``n_deleted``;
+    * the rewrite is ``scan of the touched files ⟕ probe`` on (file,
+      row position), cached only when CDF capture reads it more than
+      once — the probe is materialized and small, so the join is
+      planned from its real size;
+    * the insert is ``source ▷ probe keys`` — a source row whose key
+      matches any target row is never inserted, whatever the clause
+      conditions say.  Rewrite and inserts are staged in ONE write,
+      which counts the inserts itself (``n_inserted``, recorded in the
+      log entry after staging); when nothing was touched and nothing
+      inserted, the staged files are removed and nothing commits.
 
     The probe is released on every path out, a raise included.
     """
@@ -429,12 +453,13 @@ def merge_into(
     if not clauses and not when_not_matched_insert:
         return {"version": _entries(path)[-1]["version"], **noop}
     df = _scan_with_file(spark, path, snap)
-    tcols = [c for c in df.columns if c not in _META]
-    types = dict(df.drop(*_META).dtypes)
+    types = {c: t for c, t in df.dtypes if c not in _META}
+    tcols = list(types)
 
-    def _clause_idx(matched: Column) -> Column:
-        """First-match-wins clause index (NULL = no clause applies) —
-        F.when chains evaluate in order, which IS the clause order."""
+    def _clause_idx() -> Column:
+        """First-match-wins clause index of a matched row (NULL = no
+        clause applies) — F.when chains evaluate in order, which IS the
+        clause order."""
         if not clauses:
             return F.lit(None).cast("int")
         expr = F
@@ -445,7 +470,7 @@ def merge_into(
                 if cond is None
                 else F.coalesce(_to_cond(cond), F.lit(False))
             )
-            expr = expr.when(matched & c, F.lit(i))
+            expr = expr.when(c, F.lit(i))
         return expr.otherwise(F.lit(None))
 
     # eqNullSafe is NOT used — NULL keys never match
@@ -455,8 +480,9 @@ def merge_into(
     del_idx = [i for i, cl in enumerate(clauses) if cl["action"] == "delete"]
 
     # THE probe: matched target rows only, as (file, row position,
-    # applicable clause, key).  It is the merge's one full-table scan;
-    # the guard, the touched files, the clause counts and the insert
+    # applicable clause) plus the matching source row.  It is the
+    # merge's one full-table scan; the guard, the touched files, the
+    # clause counts, the rewrite's source side and the insert
     # anti-join all read it.  Cached, and source-sized: one row per
     # (target row, source row) pair that matches on the keys.
     probe = (
@@ -465,8 +491,8 @@ def merge_into(
         .select(
             F.col("t._dml_file").alias("_dml_file"),
             F.col("t._dml_ri").alias("_dml_ri"),
-            _clause_idx(F.lit(True)).alias("_dml_ci"),
-            *[F.col(f"t.{k}").alias(k) for k in on],
+            _clause_idx().alias("_dml_ci"),
+            "s.*",
         )
         .cache()
     )
@@ -475,50 +501,58 @@ def merge_into(
         touched: list[str] = []
         n_updated = n_deleted = 0
         if clauses:
-            # one collect, (file × clause)-sized: max matches per target
-            # row (the guard), and per (file, clause) the rows hit
+            # one collect, file-sized: per file the probe rows, the
+            # distinct target rows among them, and the rows each clause
+            # applies to
+            hits = [f"_dml_c{i}" for i in range(len(clauses))]
             stats = (
-                probe.groupBy("_dml_file", "_dml_ri")
+                probe.groupBy("_dml_file")
                 .agg(
                     F.count(F.lit(1)).alias("n"),
-                    F.min("_dml_ci").alias("_dml_ci"),
+                    F.size(F.collect_set("_dml_ri")).alias("rows"),
+                    *[
+                        F.count_if(F.col("_dml_ci") == i).alias(h)
+                        for i, h in enumerate(hits)
+                    ],
                 )
-                .groupBy("_dml_file", "_dml_ci")
-                .agg(F.count(F.lit(1)).alias("rows"), F.max("n").alias("max_n"))
                 .collect()
             )
-            # source-cardinality guard: a target row matched by several
-            # source rows (only keys that MATCH count — the probe is an
-            # inner join, so NULL and never-matching keys are absent)
-            if any(r["max_n"] > 1 for r in stats):
+            # source-cardinality guard: fewer distinct target rows than
+            # probe rows means a target row matched several source rows
+            # (only keys that MATCH count — the probe is an inner join,
+            # so NULL and never-matching keys are absent)
+            if any(r["n"] != r["rows"] for r in stats):
                 raise ValueError(
                     "source has multiple rows matching the same target "
                     "merge key — resolve (e.g. latest-wins dedup) before "
                     "merging"
                 )
             touched = sorted(
-                {r["_dml_file"] for r in stats if r["_dml_ci"] is not None}
+                r["_dml_file"] for r in stats if any(r[h] for h in hits)
             )
-            n_updated = sum(r["rows"] for r in stats if r["_dml_ci"] in upd_idx)
-            n_deleted = sum(r["rows"] for r in stats if r["_dml_ci"] in del_idx)
+            n_updated = sum(r[hits[i]] for r in stats for i in upd_idx)
+            n_deleted = sum(r[hits[i]] for r in stats for i in del_idx)
 
-        # rewrite touched files: unmatched rows (and matched rows no
-        # clause applies to) pass through; clause-hit rows update or
-        # delete.
+        # rewrite touched files, read alone, joined to their probe rows
+        # by row (the probe's clause index and source row): unmatched
+        # rows (and matched rows no clause applies to) pass through;
+        # clause-hit rows update or delete.
         rewritten = None
         cdf: list[tuple[DataFrame, str]] = []
         if touched:
-            scope = df.filter(F.col("_dml_file").isin(touched)).alias("t")
-            is_matched = F.col(f"s.{on[0]}").isNotNull()
-            joined = scope.join(source.alias("s"), on_keys, "left").withColumn(
-                "_dml_ci", _clause_idx(is_matched)
+            scope = _scan_with_file(spark, path, touched).alias("t")
+            joined = scope.join(
+                probe.alias("s"),
+                (F.col("t._dml_file") == F.col("s._dml_file"))
+                & (F.col("t._dml_ri") == F.col("s._dml_ri")),
+                "left",
             )
             if capture_cdf:
                 # the rewrite and the sidecar projections all consume
                 # the join; touched-files-sized, never table-sized
                 joined = joined.cache()
                 cached.append(joined)
-            ci = F.col("_dml_ci")
+            ci = F.col("s._dml_ci")
             t_row = [F.col(f"t.{c}").alias(c) for c in tcols]
             out = []
             for c in tcols:
@@ -549,37 +583,41 @@ def merge_into(
                     cdf.append((upd.select(*t_row), "update_preimage"))
                     cdf.append((upd.select(*out), "update_postimage"))
 
-        inserts = None
-        n_inserted = 0
+        new_df = rewritten
+        observe: tuple[Column, ...] = ()
         if when_not_matched_insert:
             # a source row whose key matches ANY target row is in the
-            # probe, so anti-joining the probe's keys equals anti-joining
-            # the table — at source size.  NULL keys never match: insert.
-            unmatched = source.join(probe.select(*on).distinct(), on, "left_anti")
+            # probe, so anti-joining the probe's source keys equals
+            # anti-joining the table — at source size (a left-anti join
+            # needs no deduplicated build side).  NULL keys never match:
+            # insert.
+            unmatched = source.join(probe.select(*on), on, "left_anti")
             if insert_condition is not None:
                 unmatched = unmatched.filter(
                     F.coalesce(_to_cond(insert_condition), F.lit(False))
                 )
-            n_inserted = unmatched.count()
-            if n_inserted:
-                inserts = unmatched.select(
-                    *[
-                        F.col(c).cast(types[c]).alias(c)
-                        if c in unmatched.columns
-                        else F.lit(None).cast(types[c]).alias(c)
-                        for c in tcols
-                    ]
-                )
-
-        if rewritten is not None and inserts is not None:
-            new_df = rewritten.unionByName(inserts)
-        else:
-            new_df = rewritten if rewritten is not None else inserts
+            have = set(unmatched.columns)
+            inserts = unmatched.select(
+                *[
+                    F.col(c).cast(types[c]).alias(c)
+                    if c in have
+                    else F.lit(None).cast(types[c]).alias(c)
+                    for c in tcols
+                ]
+            )
+            # tagged, so the staging write counts the inserts it writes
+            tagged = inserts.withColumn(_INS, F.lit(True))
+            new_df = (
+                tagged
+                if rewritten is None
+                else rewritten.withColumn(_INS, F.lit(False)).unionByName(tagged)
+            )
+            observe = (F.count_if(F.col(_INS)).alias("n_inserted"),)
+            if capture_cdf:
+                cdf.append((inserts, "insert"))
         if new_df is None:
             return {"version": _entries(path)[-1]["version"], **noop}
-        if capture_cdf and inserts is not None:
-            cdf.append((inserts, "insert"))
-        version = _commit_rewrite(
+        version, op = _commit_rewrite(
             new_df,
             path,
             touched,
@@ -587,10 +625,14 @@ def merge_into(
                 "op": "merge",
                 "n_updated": n_updated,
                 "n_deleted": n_deleted,
-                "n_inserted": n_inserted,
+                "n_inserted": 0,
             },
             cdf or None,
+            observe,
+            (_INS,) if observe else (),
         )
+        if version is None:  # nothing touched, nothing inserted
+            return {"version": _entries(path)[-1]["version"], **noop}
     finally:
         for c in cached:
             c.unpersist()
@@ -598,7 +640,7 @@ def merge_into(
         "version": version,
         "n_updated": n_updated,
         "n_deleted": n_deleted,
-        "n_inserted": n_inserted,
+        "n_inserted": op["n_inserted"],
         "files_rewritten": len(touched),
         "files_total": len(snap),
     }
@@ -625,6 +667,14 @@ def delete_where_mor(
     small deletes + periodic compaction, CoW for bulk deletes; both
     exist here so the choice is the caller's.
 
+    One Spark job (plus one broadcast per read of DVs already in
+    effect): the DV's (file, row position) keys are staged straight
+    from the filtered snapshot scan, and that write observes the files
+    they target (the entry's ``applies_to``).  A delete that matches
+    nothing removes what it staged and commits nothing.  With
+    ``capture_cdf`` the matched rows are cached for the second,
+    change-feed write.
+
     Same NULL semantics and concurrency contract as the CoW form: the
     files the DV targets must still be live at commit time, else
     ``ConcurrentModificationError``.  Returns ``{"version",
@@ -632,37 +682,40 @@ def delete_where_mor(
     """
     cond = _to_cond(condition)
     snap = _snapshot_files(path, None)
-    df = _scan_with_file(spark, path, snap)
-    hit = F.coalesce(cond, F.lit(False))
-    # cached: the targeted-file collect, the DV staging, and (with CDF)
-    # the sidecar staging all consume the matched rows — uncached each
-    # re-scans the full snapshot.  Matched rows = deleted rows, the
-    # O(deleted) set this MoR path exists to keep small.
-    matched = df.filter(hit).cache()
+    matched = _scan_with_file(spark, path, snap).filter(
+        F.coalesce(cond, F.lit(False))
+    )
+    if capture_cdf:
+        # the DV and the change-feed sidecars both read the matched rows
+        # (= deleted rows, the O(deleted) set this MoR path exists to
+        # keep small): materialize them once instead of scanning twice
+        matched = matched.cache()
     try:
-        targeted = [
-            r["_dml_file"]
-            for r in matched.select("_dml_file").distinct().collect()
-        ]
-        if not targeted:
+        # the DV keys are staged straight from the filtered scan, and
+        # that one write observes the files they target
+        files, n_deleted, _, seen = _stage_files(
+            matched.select(*_META).toDF("file", "row_index"),
+            path,
+            prefix="dv-",
+            observe=(F.collect_set("file").alias("applies_to"),),
+        )
+        if not n_deleted:
+            _unstage(path, files)
             return {
                 "version": _entries(path)[-1]["version"],
                 "n_deleted": 0,
                 "files_targeted": 0,
                 "files_total": len(snap),
             }
-        dv_df = matched.select(
-            F.col("_dml_file").alias("file"),
-            F.col("_dml_ri").alias("row_index"),
-        )
-        files, n_deleted, _ = _stage_files(dv_df, path, prefix="dv-")
         cdf_files = (
             _stage_cdf([(matched.drop(*_META), "delete")], path)
             if capture_cdf
             else []
         )
     finally:
-        matched.unpersist()
+        if capture_cdf:
+            matched.unpersist()
+    targeted = sorted(seen["applies_to"])
     entry = {
         "action": "dv",
         "files": files,

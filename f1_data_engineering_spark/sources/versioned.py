@@ -48,9 +48,11 @@ import tempfile
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..functions.text import memo_col
 
 LOG_DIR = "_log"
 
@@ -412,14 +414,33 @@ def _file_stats(pf) -> dict:
 
 
 def _stage_files(
-    df: DataFrame, path: str, prefix: str = "data-"
-) -> tuple[list[str], int, dict]:
+    df: DataFrame,
+    path: str,
+    prefix: str = "data-",
+    observe: tuple[Column, ...] = (),
+    drop: tuple[str, ...] = (),
+) -> tuple[list[str], int, dict, dict]:
     """Write df as parquet into the table root under fresh UUID names;
-    returns (relative file names, row count, per-file column stats).
-    Files are invisible to readers until a log entry references them.
-    ``prefix`` distinguishes sidecar roles (``dv-`` deletion vectors,
-    ``cdf-`` change-feed files — sources/dml.py) from data files; the
-    role is decided by the LOG, the prefix only aids operators."""
+    returns (relative file names, row count, per-file column stats,
+    observed values).  Files are invisible to readers until a log
+    entry references them.  ``prefix`` distinguishes sidecar roles
+    (``dv-`` deletion vectors, ``cdf-`` change-feed files —
+    sources/dml.py) from data files; the role is decided by the LOG,
+    the prefix only aids operators.
+
+    ``observe``: named aggregates the staging write itself evaluates
+    over the rows it writes (an ``Observation``, no second job);
+    ``drop`` names columns only those aggregates read, left out of the
+    files.  The values are read only when the staged footers count
+    rows: over an empty result AQE's empty-relation propagation can
+    fold the observing node away, leaving nothing to read (the same
+    case ``dml._touched`` guards), so an empty write returns ``{}``."""
+    obs = None
+    if observe:
+        obs = Observation()
+        df = df.observe(obs, *observe)
+    if drop:
+        df = df.drop(*drop)
     stage = os.path.join(path, f"_stage_{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(stage)
     names = []
@@ -454,7 +475,7 @@ def _stage_files(
     for f in os.listdir(stage):
         os.remove(os.path.join(stage, f))
     os.rmdir(stage)
-    return names, n_rows, stats
+    return names, n_rows, stats, (obs.get if obs is not None and n_rows else {})
 
 
 def log_column_bounds(
@@ -584,7 +605,7 @@ def write_versioned(
     # staged files if a constraint lands before the link.
     validated = constraints_from_entries(es)
     validate_constraints(df, validated)
-    files, n_rows, stats = _stage_files(df, path)
+    files, n_rows, stats, _ = _stage_files(df, path)
     recheck = _staged_rows_check(df, path, files, validated)
 
     def check(es: list[dict]) -> int | None:
@@ -644,7 +665,9 @@ def _live_files(es: list[dict]) -> list[str]:
 
 def _dv_state(es: list[dict]) -> list[dict]:
     """The deletion-vector entries IN EFFECT after replaying ``es``:
-    ``[{"files": [...], "applies_to": [...], "version": v}, ...]``.
+    ``[{"files": [...], "applies_to": [...], "version": v, "n_rows":
+    k}, ...]`` (``n_rows``, the deleted-row count, is missing from
+    state a restore recorded before it was carried).
 
     An ``overwrite`` starts a DV-free snapshot (its data files are
     new, so carrying older DVs forward would be wasted read-side work
@@ -666,6 +689,7 @@ def _dv_state(es: list[dict]) -> list[dict]:
                     "files": list(e["files"]),
                     "applies_to": list(e.get("applies_to", ())),
                     "version": e["version"],
+                    "n_rows": e.get("n_rows"),
                 }
             )
     return state
@@ -721,6 +745,24 @@ def _dv_files(path: str, version: int | None) -> list[str]:
 _DV_SCHEMA = "file STRING, row_index BIGINT"
 
 
+@memo_col
+def _file_tags(file_col: str, ri_col: str) -> list[Column]:
+    """Each scanned row's owning file BASENAME and row position, as
+    ``file_col`` / ``ri_col`` — the keys a deletion vector records.
+    Built once per process (memo_col): the DML scan and every read
+    with deletion vectors in effect project them."""
+    return [
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(file_col),
+        F.col("_metadata.row_index").alias(ri_col),
+    ]
+
+
+@memo_col
+def _dv_match(file_col: str, ri_col: str) -> Column:
+    """The anti-join condition of a scan tagged by ``_file_tags``."""
+    return (F.col(file_col) == F.col("_dv_f")) & (F.col(ri_col) == F.col("_dv_ri"))
+
+
 def _anti_join_dvs(
     spark: SparkSession,
     path: str,
@@ -738,13 +780,9 @@ def _anti_join_dvs(
     dv = (
         spark.read.schema(_DV_SCHEMA)
         .parquet(*[os.path.join(path, f) for f in dvs])
-        .select(F.col("file").alias("_dv_f"), F.col("row_index").alias("_dv_ri"))
+        .toDF("_dv_f", "_dv_ri")
     )
-    return df.join(
-        dv,
-        (F.col(file_col) == F.col("_dv_f")) & (F.col(ri_col) == F.col("_dv_ri")),
-        "left_anti",
-    )
+    return df.join(dv, _dv_match(file_col, ri_col), "left_anti")
 
 
 def _apply_dvs(
@@ -755,11 +793,7 @@ def _apply_dvs(
     dvs = _dv_files(path, version)
     if not dvs:
         return df
-    tagged = df.select(
-        "*",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_mor_f"),
-        F.col("_metadata.row_index").alias("_mor_ri"),
-    )
+    tagged = df.select("*", *_file_tags("_mor_f", "_mor_ri"))
     return _anti_join_dvs(spark, path, tagged, dvs, "_mor_f", "_mor_ri").drop(
         "_mor_f", "_mor_ri"
     )
@@ -1367,6 +1401,37 @@ def _rollback(path: str, version: int) -> None:
             pass
 
 
+def _log_row_count(es: list[dict]) -> int | None:
+    """Live rows of the snapshot ``es`` describes, from the log alone:
+    the live files' ``::rows`` minus the ``n_rows`` of every in-effect
+    deletion vector whose target files are all live.  Those DVs never
+    overlap: each MoR delete scans through the DVs already in effect,
+    so it records only rows still live (two MoR deletes racing on one
+    file are the exception; the count then only mis-sizes a
+    compaction's file count, never its rows).  A DV whose targets all
+    left the snapshot is inert and counts nothing.  None, for a scan to
+    count, when a live file has no ``::rows``, a DV has no recorded
+    count or targets, or some of a DV's targets left the snapshot (its
+    count no longer splits by file)."""
+    stats: dict = {}
+    for e in es:
+        stats.update(e.get("file_stats") or {})
+    live = _live_files(es)
+    per_file = [stats.get(f, {}).get("::rows") for f in live]
+    if any(r is None for r in per_file):
+        return None
+    n_rows = sum(r[0] for r in per_file)
+    live_set = set(live)
+    for s in _dv_state(es):
+        targets = set(s["applies_to"])
+        hit = targets & live_set
+        if not targets or (hit and (hit != targets or s.get("n_rows") is None)):
+            return None
+        if hit:
+            n_rows -= s["n_rows"]
+    return n_rows
+
+
 def compact_versioned(
     spark: SparkSession, path: str, target_rows_per_file: int = 1_000_000
 ) -> int:
@@ -1383,20 +1448,9 @@ def compact_versioned(
     for the metadata-only planning variant this executes.
     """
     snap = read_versioned(spark, path)
-    # sizing row count from the log's per-file ::rows stats when exact
-    # (no in-effect deletion vectors, every file statted) — drops a
-    # full-snapshot count job; any uncertainty falls back to the scan
-    n_rows = None
-    if not _dv_files(path, None):
-        es = _entries(path)
-        stats: dict = {}
-        for e in es:
-            stats.update(e.get("file_stats") or {})
-        per_file = [
-            stats.get(f, {}).get("::rows") for f in _snapshot_files(path, None)
-        ]
-        if all(r is not None for r in per_file):
-            n_rows = sum(r[0] for r in per_file)
+    # the sizing row count comes from the log when it is exact there,
+    # which drops a full-snapshot count job; otherwise the scan counts
+    n_rows = _log_row_count(_entries(path))
     if n_rows is None:
         n_rows = snap.count()
     n_files = max(1, -(-n_rows // target_rows_per_file))
@@ -1538,7 +1592,7 @@ def rewrite_subset_layout(
     ).cache()
     try:
         n_rows = df.count()
-        files, _, stats = _stage_files(shape(df, n_rows), path)
+        files, _, stats, _ = _stage_files(shape(df, n_rows), path)
     finally:
         df.unpersist()
 

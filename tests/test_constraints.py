@@ -115,8 +115,8 @@ def test_dml_refused_past_concurrent_add_constraint(spark, lake, monkeypatch, op
     real_stage = D._stage_files
     added = []
 
-    def racing_stage(df, path, prefix="data-"):
-        out = real_stage(df, path, prefix)
+    def racing_stage(df, path, *args, **kwargs):
+        out = real_stage(df, path, *args, **kwargs)
         if not added:  # the race: ADD CONSTRAINT lands after staging
             added.append(C.add_constraint(spark, lake, "ck_nonneg", "v >= 0"))
         return out

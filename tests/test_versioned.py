@@ -82,7 +82,7 @@ def test_commit_refusal_unstages_everything(spark, tmp_path):
     t = str(tmp_path / "refuse")
     V.write_versioned(_df(spark, 0, 3, "a"), t, "overwrite")
     before = _leftovers(t)
-    files, n_rows, _ = V._stage_files(_df(spark, 3, 6, "b"), t)
+    files, n_rows, _, _ = V._stage_files(_df(spark, 3, 6, "b"), t)
     assert files and _leftovers(t)[0] == before[0] | set(files)
 
     def refuse(es):
