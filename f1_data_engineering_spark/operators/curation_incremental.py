@@ -53,8 +53,6 @@ survivors) in place of the md5/banding/broadcast-score stages.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,6 +71,7 @@ from .curation import (
     stage_rollup,
 )
 from .incremental_dedup import advance_dedup_index
+from .lakedml import _cached, _pin, _scratch_lake
 
 __all__ = [
     "advance_cell_index",
@@ -185,28 +184,27 @@ def curation_pipeline_incremental(
     Columns: source, n_raw, n_pii_redacted, n_quality, n_exact,
     n_neardup, n_semantic, n_clean, clean_tokens.
 
-    The scratch lake lives under ``work_dir`` (a temp dir by default,
-    removed before returning — the ≤ n_sources-row rollup is pinned
-    into a local DataFrame first, the same bounded-collect contract as
-    the iterative operators).  The two-advance split is doc_id % 3
+    The lake lives under ``work_dir`` when given (left in place), else
+    in a scratch dir (``lakedml._scratch_lake``); the ≤ n_sources-row
+    rollup is pinned into a local DataFrame before it goes.  The
+    two-advance split is doc_id % 3
     (≈ 2/3 then 1/3): both advances exercise the ≥1-new-side pair
     emission AND the planted near-dups land across the split.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="curation_incr_")
-    try:
+    # round-11: scrub at ingestion — the standing signature index
+    # and pair ledger are built over the SCRUBBED corpus, matching
+    # what _curation_stages fingerprints (pair-local properties
+    # commute with the survivor restriction either way).  Cached:
+    # both ingest waves filter it and _curation_stages consumes it
+    # twice more (scored + grams) — uncached, the scrub regexes
+    # re-run for each consumer.
+    with _scratch_lake(work_dir, "curation_incr_") as tmp, _cached(
+        pii_scrub_clean(_curation_corpus(spark, sf_dir))
+    ) as corpus:
         corpus_path = os.path.join(tmp, "corpus")
         index_path = os.path.join(tmp, "sig_index")
         pairs_path = os.path.join(tmp, "pair_ledger")
         cells_path = os.path.join(tmp, "cell_index")
-
-        # round-11: scrub at ingestion — the standing signature index
-        # and pair ledger are built over the SCRUBBED corpus, matching
-        # what _curation_stages fingerprints (pair-local properties
-        # commute with the survivor restriction either way).  Cached:
-        # both ingest waves filter it and _curation_stages consumes it
-        # twice more (scored + grams) — uncached, the scrub regexes
-        # re-run for each consumer.
-        corpus = pii_scrub_clean(_curation_corpus(spark, sf_dir)).cache()
         advances = (
             corpus.filter(F.col("doc_id") % 3 != 2),
             corpus.filter(F.col("doc_id") % 3 == 2),
@@ -240,13 +238,7 @@ def curation_pipeline_incremental(
                 cells=cells, corpus=corpus,
             )
         )
-        # pin the (≤ n_sources)-row result before the scratch lake is
-        # removed — the returned frame must stay collectable
-        rows = rollup.collect()
-        return spark.createDataFrame(rows, rollup.schema)
-    finally:
-        if work_dir is None:
-            shutil.rmtree(tmp, ignore_errors=True)
+        return _pin(spark, rollup)
 
 
 # ---------------------------------------------------------------------------
@@ -348,17 +340,17 @@ def curation_shards_cdf(
     """
     from .trainprep import _shard_col
 
-    tmp = work_dir or tempfile.mkdtemp(prefix="curation_shards_")
-    try:
+    # cached: the two ingest waves below each filter this frame —
+    # uncached the second wave re-runs the decontamination joins
+    # the stage caches don't cover (clean is derived, not cached,
+    # inside _curation_stages)
+    with _scratch_lake(work_dir, "curation_shards_") as tmp, _cached(
+        _curation_stages(spark, sf_dir)["clean"].select(
+            "doc_id", "source", "text", "n_tok"
+        )
+    ) as clean:
         clean_path = os.path.join(tmp, "clean_corpus")
         manifest_path = os.path.join(tmp, "shard_manifest")
-        # cached: the two ingest waves below each filter this frame —
-        # uncached the second wave re-runs the decontamination joins
-        # the stage caches don't cover (clean is derived, not cached,
-        # inside _curation_stages)
-        clean = _curation_stages(spark, sf_dir)["clean"].select(
-            "doc_id", "source", "text", "n_tok"
-        ).cache()
         V.write_versioned(
             clean.filter(F.col("doc_id") % 3 != 2).hint("rebalance"),
             clean_path,
@@ -419,11 +411,7 @@ def curation_shards_cdf(
                 "total_tokens",
             )
         )
-        out = inc.unionByName(scratch).orderBy("leg", "shard")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _pin(spark, inc.unionByName(scratch).orderBy("leg", "shard"))
 
 
 from .curation import ORACLE_CURATION_PIPELINE as _ORACLE_PIPE  # noqa: E402

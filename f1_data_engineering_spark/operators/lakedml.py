@@ -19,7 +19,14 @@ snapshot-read pipeline, not just an expression.  Checksums follow
 DECIMAL(38,0) sum — order/file-layout independent) over the
 non-float columns; the float column is summed via the exact
 DECIMAL(18,2) cast (2-dp-valued doubles cast exactly on both
-engines).
+engines).  ``_ck_sql`` renders the same recipe for every oracle.
+
+Scaffold: every lake query body (here, in ``lakemgmt``, ``lakeperf``
+and ``curation_incremental``) runs inside :func:`_scratch_lake`, which
+owns its directory, and builds its stage summaries lazily: a snapshot
+read resolves its file list when it is called, and only vacuum deletes
+files, so the tagged union of all stages is collected once, by one
+:func:`_pin` at the end, before the directory goes.
 """
 
 from __future__ import annotations
@@ -27,6 +34,8 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,10 +84,61 @@ def _state_summary(df: DataFrame, label_col: F.Column, label_name: str) -> DataF
     return df.groupBy(label_col.alias(label_name)).agg(*_state_aggs())
 
 
+def _ck_sql(weight: str | None = None, alias: str | None = None) -> str:
+    """DuckDB twin of the ``checksum`` aggregate: the exact sum of
+    ``_ck_hash`` as a string.  ``weight`` multiplies each row's hash (a
+    ±1 sign; NULL leaves the row out of the sum); ``alias`` qualifies
+    the columns."""
+    q = f"{alias}." if alias else ""
+    w = f"{weight} * " if weight else ""
+    cols = ",\n    ".join(
+        f"COALESCE(CAST({q}{c} AS VARCHAR), chr(0) || 'null')" for c in _CK_COLS
+    )
+    return f"""CAST(SUM({w}CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
+    {cols})), 1, 15))
+    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR)"""
+
+
+#: The oracle side of ``_state_aggs``: ``n_rows, checksum, sum_price``.
+_STATE_SQL = f"""CAST(COUNT(*) AS BIGINT) AS n_rows,
+  {_ck_sql()} AS checksum,
+  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price"""
+
+
+@contextmanager
+def _scratch_lake(work_dir: str | None, prefix: str):
+    """The directory a lake query builds its tables in: ``work_dir``
+    when the caller gives one, left in place for the caller to read,
+    else a temp dir that is removed however the body exits."""
+    if work_dir:
+        yield work_dir
+        return
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@contextmanager
+def _cached(df: DataFrame):
+    """``df`` cached for the body of the ``with``, released after it."""
+    df = df.cache()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
 def _pin(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Materialize a metadata-sized summary into a local DataFrame so
     the scratch lake can be deleted before returning."""
     return spark.createDataFrame(df.collect(), df.schema)
+
+
+def _pin_union(spark: SparkSession, outs: list[DataFrame], *order) -> DataFrame:
+    """Every stage summary of a query, tagged and collected in one pin."""
+    return _pin(spark, reduce(DataFrame.unionByName, outs).orderBy(*order))
 
 
 def merge_upsert_orders(
@@ -92,11 +152,9 @@ def merge_upsert_orders(
 
     Scale shape: the merge rewrites only files owning a matched key
     (copy-on-write; the match scan is a broadcastable semi-join), and
-    the summary is one scan of the result.  The scratch lake is
-    per-invocation and removed before returning.
+    the summary is one scan of the result.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_merge_")
-    try:
+    with _scratch_lake(work_dir, "dml_merge_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         base = orders.filter("o_orderkey % 10 < 8").repartitionByRange(
@@ -126,8 +184,6 @@ def merge_upsert_orders(
             V.read_versioned(spark, t), F.col("o_orderstatus"), "o_orderstatus"
         ).orderBy("o_orderstatus")
         return _pin(spark, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 ORACLE_MERGE_UPSERT = f"""
@@ -156,14 +212,7 @@ merged AS (
     SELECT 1 FROM base b WHERE b.o_orderkey = s.o_orderkey
   )
 )
-SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT o_orderstatus, {_STATE_SQL}
 FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
@@ -184,8 +233,7 @@ def dml_lifecycle_orders(
     are verified end-to-end because every stage's checksum covers the
     full surviving row set.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_life_")
-    try:
+    with _scratch_lake(work_dir, "dml_life_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         V.write_versioned(
@@ -208,25 +256,7 @@ def dml_lifecycle_orders(
             )
             for name, v in stages
         ]
-        from functools import reduce
-
-        out = reduce(DataFrame.unionByName, outs).orderBy("stage")
-        return _pin(spark, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _lifecycle_state_sql(rel: str, stage: str) -> str:
-    return f"""
-SELECT '{stage}' AS stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM {rel}"""
+        return _pin_union(spark, outs, "stage")
 
 
 ORACLE_DML_LIFECYCLE = f"""
@@ -249,14 +279,16 @@ after_update AS (
          THEN '0-DML:' || o_orderpriority ELSE o_orderpriority END
       AS o_orderpriority
   FROM after_delete
+),
+stages AS (
+  SELECT '01_base' AS stage, * FROM base
+  UNION ALL
+  SELECT '02_after_delete', * FROM after_delete
+  UNION ALL
+  SELECT '03_after_update', * FROM after_update
 )
-SELECT * FROM (
-{_lifecycle_state_sql("base", "01_base")}
-UNION ALL
-{_lifecycle_state_sql("after_delete", "02_after_delete")}
-UNION ALL
-{_lifecycle_state_sql("after_update", "03_after_update")}
-) ORDER BY stage
+SELECT stage, {_STATE_SQL}
+FROM stages GROUP BY stage ORDER BY stage
 """
 
 
@@ -272,8 +304,7 @@ def dml_mor_delete_orders(
     a value divergence in either the DV application or the compaction
     pipeline flips the hash.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_mor_")
-    try:
+    with _scratch_lake(work_dir, "dml_mor_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         V.write_versioned(
@@ -285,15 +316,11 @@ def dml_mor_delete_orders(
         stage1 = _state_summary(
             V.read_versioned(spark, t), F.lit("01_mor_delete"), "stage"
         )
-        pinned1 = _pin(spark, stage1)
         V.compact_versioned(spark, t, target_rows_per_file=1_000_000)
         stage2 = _state_summary(
             V.read_versioned(spark, t), F.lit("02_compacted"), "stage"
         )
-        out = pinned1.unionByName(_pin(spark, stage2)).orderBy("stage")
-        return _pin(spark, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _pin_union(spark, [stage1, stage2], "stage")
 
 
 ORACLE_DML_MOR = f"""
@@ -301,12 +328,14 @@ WITH after_delete AS (
   SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority
   FROM orders
   WHERE NOT COALESCE(o_orderstatus = 'F' AND o_orderkey % 4 = 1, FALSE)
+),
+stages AS (
+  SELECT '01_mor_delete' AS stage, * FROM after_delete
+  UNION ALL
+  SELECT '02_compacted', * FROM after_delete
 )
-SELECT * FROM (
-{_lifecycle_state_sql("after_delete", "01_mor_delete")}
-UNION ALL
-{_lifecycle_state_sql("after_delete", "02_compacted")}
-) ORDER BY stage
+SELECT stage, {_STATE_SQL}
+FROM stages GROUP BY stage ORDER BY stage
 """
 
 
@@ -323,8 +352,7 @@ def dml_change_feed_orders(
     downstream accumulator applies instead of rebuilding when its
     delta range crosses DML.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_cdf_")
-    try:
+    with _scratch_lake(work_dir, "dml_cdf_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         V.write_versioned(
@@ -352,34 +380,10 @@ def dml_change_feed_orders(
                 F.col("_commit_version").alias("commit_version"),
                 F.col("_change_type").alias("change_type"),
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(_ck_hash().cast("decimal(38,0)"))
-                .cast("string")
-                .alias("checksum"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
+            .agg(*_state_aggs())
             .orderBy("commit_version", "change_type")
         )
         return _pin(spark, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _cdf_state_sql(rel: str, version: int, change_type: str) -> str:
-    return f"""
-SELECT CAST({version} AS BIGINT) AS commit_version,
-  '{change_type}' AS change_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM {rel}"""
 
 
 ORACLE_DML_CDF = f"""
@@ -402,14 +406,18 @@ v2_post AS (
   SELECT o_orderkey, o_custkey + 1000000 AS o_custkey, o_orderstatus,
          o_totalprice, '0-DML:' || o_orderpriority AS o_orderpriority
   FROM v2_pre
+),
+feed AS (
+  SELECT 1 AS commit_version, 'delete' AS change_type, * FROM v1_deleted
+  UNION ALL
+  SELECT 2, 'update_preimage', * FROM v2_pre
+  UNION ALL
+  SELECT 2, 'update_postimage', * FROM v2_post
 )
-SELECT * FROM (
-{_cdf_state_sql("v1_deleted", 1, "delete")}
-UNION ALL
-{_cdf_state_sql("v2_pre", 2, "update_preimage")}
-UNION ALL
-{_cdf_state_sql("v2_post", 2, "update_postimage")}
-) ORDER BY commit_version, change_type
+SELECT CAST(commit_version AS BIGINT) AS commit_version, change_type,
+  {_STATE_SQL}
+FROM feed GROUP BY commit_version, change_type
+ORDER BY commit_version, change_type
 """
 
 
@@ -426,8 +434,7 @@ def schema_evolution_orders(
     oracle simultaneously checks evolution NULL-fill, DML over an
     evolved schema, and schema-stable history.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_evo_")
-    try:
+    with _scratch_lake(work_dir, "dml_evo_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         narrow = orders.filter("o_orderkey % 2 = 0").select(
@@ -452,32 +459,12 @@ def schema_evolution_orders(
                 V.read_versioned(spark, t, version=v),
                 F.col("o_orderstatus"),
                 "o_orderstatus",
-            ).withColumn("stage", F.lit(name))
+            ).select(F.lit(name).alias("stage"), "*")
             for name, v in (("01_evolved", 1), ("02_backfilled", 2))
         ]
-        from functools import reduce
-
-        out = (
-            reduce(DataFrame.unionByName, outs)
-            .select("stage", "o_orderstatus", "n_rows", "checksum", "sum_price")
-            .orderBy("stage", F.col("o_orderstatus").asc_nulls_last())
+        return _pin_union(
+            spark, outs, "stage", F.col("o_orderstatus").asc_nulls_last()
         )
-        return _pin(spark, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _evo_state_sql(rel: str, stage: str) -> str:
-    return f"""
-SELECT '{stage}' AS stage, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM {rel} GROUP BY o_orderstatus"""
 
 
 ORACLE_SCHEMA_EVOLUTION = f"""
@@ -493,12 +480,15 @@ v2 AS (
   SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority,
          COALESCE(o_orderstatus, 'E') AS o_orderstatus
   FROM v1
+),
+stages AS (
+  SELECT '01_evolved' AS stage, * FROM v1
+  UNION ALL
+  SELECT '02_backfilled', * FROM v2
 )
-SELECT * FROM (
-{_evo_state_sql("v1", "01_evolved")}
-UNION ALL
-{_evo_state_sql("v2", "02_backfilled")}
-) ORDER BY stage, o_orderstatus NULLS LAST
+SELECT stage, o_orderstatus, {_STATE_SQL}
+FROM stages GROUP BY stage, o_orderstatus
+ORDER BY stage, o_orderstatus NULLS LAST
 """
 
 
@@ -562,17 +552,13 @@ def cdc_apply_rollup_orders(
     at 100 TB the feed for a day is GBs while the table is the 100 TB;
     this is the consumer ``read_change_feed`` exists for.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_ivm_")
-    try:
+    with _scratch_lake(work_dir, "dml_ivm_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         V.write_versioned(
             orders.repartitionByRange(6, "o_orderkey"), t, mode="overwrite"
         )
-        base = _pin(
-            spark,
-            _signed_rollup(V.read_versioned(spark, t, version=0), F.lit(1)),
-        )
+        base = _signed_rollup(V.read_versioned(spark, t, version=0), F.lit(1))
         cols = [
             "o_orderkey",
             "o_custkey",
@@ -624,9 +610,8 @@ def cdc_apply_rollup_orders(
         sign = F.when(
             F.col("_change_type").isin("delete", "update_preimage"), F.lit(-1)
         ).otherwise(F.lit(1))
-        deltas = _pin(spark, _signed_rollup(feed, sign))
         maintained = (
-            base.unionByName(deltas)
+            base.unionByName(_signed_rollup(feed, sign))
             .groupBy("o_orderpriority")
             .agg(
                 F.sum("n_rows").cast("long").alias("n_rows"),
@@ -646,11 +631,9 @@ def cdc_apply_rollup_orders(
             .orderBy(F.col("o_orderpriority").asc_nulls_last())
         )
         return _pin(spark, maintained)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-ORACLE_CDC_APPLY = """
+ORACLE_CDC_APPLY = f"""
 WITH base AS (
   SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority
   FROM orders
@@ -676,14 +659,7 @@ inserted AS (
 final AS (
   SELECT * FROM after_update UNION ALL SELECT * FROM inserted
 )
-SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT o_orderpriority, {_STATE_SQL}
 FROM final GROUP BY o_orderpriority
 ORDER BY o_orderpriority NULLS LAST
 """
@@ -705,8 +681,7 @@ def lake_restore_orders(
     copied or rewritten — restore is pure log arithmetic) and commits
     a real new version (history preserved, head == 3).
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_restore_")
-    try:
+    with _scratch_lake(work_dir, "dml_restore_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         V.write_versioned(
@@ -716,45 +691,23 @@ def lake_restore_orders(
         D.update_where(
             spark, t, "o_orderkey % 4 = 0", {"o_totalprice": "o_totalprice + 5"}
         )
-        pre = _state_summary(
-            V.read_versioned(spark, t), F.lit("01_before_restore"), "stage"
-        )
-        pre = _pin(spark, pre)  # materialize BEFORE the head moves
+        # the head read resolves v2's files now, so it keeps reading
+        # the pre-restore state after the head moves
+        pre = V.read_versioned(spark, t)
         new_v = V.restore_versioned(t, 1)
         if new_v != 3 or V._snapshot_files(t, None) != V._snapshot_files(t, 1):
             raise AssertionError(
                 "restore must commit v3 referencing v1's files by name"
             )
-        # the two post-restore reads are independent jobs — overlap
-        # them (guide §2.6); output order is fixed by the orderBy
-        from concurrent.futures import ThreadPoolExecutor
-        from functools import reduce
-
-        def summarize(item) -> DataFrame:
-            stage, ver = item
-            return _pin(
-                spark,
-                _state_summary(
-                    V.read_versioned(spark, t, version=ver),
-                    F.lit(stage), "stage",
-                ),
+        outs = [
+            _state_summary(df, F.lit(stage), "stage")
+            for stage, df in (
+                ("01_before_restore", pre),
+                ("02_after_restore", V.read_versioned(spark, t)),
+                ("03_original_v0", V.read_versioned(spark, t, version=0)),
             )
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            outs = [pre] + list(pool.map(
-                summarize, (("02_after_restore", None), ("03_original_v0", 0))
-            ))
-        return _pin(spark, reduce(DataFrame.unionByName, outs).orderBy("stage"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-_RESTORE_CK = """CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR)"""
+        ]
+        return _pin_union(spark, outs, "stage")
 
 ORACLE_LAKE_RESTORE = f"""
 WITH base AS (
@@ -778,9 +731,7 @@ stages AS (
   UNION ALL
   SELECT '03_original_v0' AS stage, * FROM base
 )
-SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  {_RESTORE_CK} AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT stage, {_STATE_SQL}
 FROM stages GROUP BY stage ORDER BY stage
 """
 
@@ -803,8 +754,7 @@ def small_compaction_orders(
     by reference, only small files are rewritten, and the compaction
     committed data_change=false.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="dml_smallcpt_")
-    try:
+    with _scratch_lake(work_dir, "dml_smallcpt_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
         big = orders.filter("o_orderkey % 4 != 0").repartitionByRange(
@@ -871,16 +821,6 @@ def small_compaction_orders(
             .orderBy("leg", "o_orderstatus")
         )
         return _pin(spark, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-_SMALLCPT_CK = """CAST(SUM(w * CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR)"""
 
 ORACLE_SMALL_COMPACTION = f"""
 WITH base AS (
@@ -906,7 +846,7 @@ legs AS (
          o_totalprice, o_orderpriority FROM feed
 )
 SELECT leg, o_orderstatus, CAST(SUM(w) AS BIGINT) AS n_rows,
-  {_SMALLCPT_CK} AS checksum,
+  {_ck_sql("w")} AS checksum,
   CAST(SUM(CAST(w AS DECIMAL(18,2)) * CAST(o_totalprice AS DECIMAL(18,2)))
        AS DOUBLE) AS sum_price
 FROM legs GROUP BY leg, o_orderstatus ORDER BY leg, o_orderstatus

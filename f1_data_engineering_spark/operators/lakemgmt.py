@@ -19,15 +19,14 @@ maintenance).
 Verification shape: identical to operators/lakedml.py — checksums are
 the shared md5 60-bit row hash + exact DECIMAL sums (order/layout
 independent), stages are labelled so one hash certifies several table
-states at once.
+states at once, and each query collects its stages in one pin inside
+the shared scratch-lake scaffold.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,7 +35,7 @@ from ..sources import constraints as C
 from ..sources import dml as D
 from ..sources import versioned as V
 from ..sources.registry import load_table
-from .lakedml import _pin, _state_summary
+from .lakedml import _STATE_SQL, _pin_union, _scratch_lake, _state_summary
 from .layout import zorder_versioned_scoped
 
 _COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -45,12 +44,6 @@ _COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
 
 def _orders5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "orders").select(*_COLS)
-
-
-def _union_stages(spark: SparkSession, outs: list[DataFrame]) -> DataFrame:
-    from functools import reduce
-
-    return _pin(spark, reduce(DataFrame.unionByName, outs).orderBy("stage"))
 
 
 def _meta_row(spark: SparkSession, like: DataFrame, stage: str,
@@ -83,8 +76,7 @@ def clone_diverge_orders(
     and the clone's seed version stays time-travelable AFTER it.
     Oracle-certified states: source head, clone head, clone-at-seed.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="lake_clone_")
-    try:
+    with _scratch_lake(work_dir, "lake_clone_") as tmp:
         src = os.path.join(tmp, "src_lake")
         dst = os.path.join(tmp, "clone_lake")
         V.write_versioned(
@@ -120,37 +112,20 @@ def clone_diverge_orders(
                 "source vacuum collected nothing — the clone-survival "
                 "assertion below would be vacuous"
             )
-        # the three state reads are independent snapshot scans —
-        # overlap their jobs from a driver pool (guide §2.6); the
-        # clone-seed read (v0 = the cloned snapshot) must survive the
-        # SOURCE's vacuum — hardlinked bytes stay alive
-        from concurrent.futures import ThreadPoolExecutor
+        # the clone-seed read (v0 = the cloned snapshot) must survive
+        # the SOURCE's vacuum — hardlinked bytes stay alive
+        outs = [
+            _state_summary(
+                V.read_versioned(spark, path, version=ver), F.lit(stage), "stage"
+            )
+            for stage, path, ver in (
+                ("1_source_head", src, None),
+                ("2_clone_head", dst, None),
+                ("3_clone_seed", dst, 0),
+            )
+        ]
+        return _pin_union(spark, outs, "stage")
 
-        reads = (
-            ("1_source_head", src, None),
-            ("2_clone_head", dst, None),
-            ("3_clone_seed", dst, 0),
-        )
-
-        def summarize(item) -> DataFrame:
-            stage, path, ver = item
-            return _pin(spark, _state_summary(
-                V.read_versioned(spark, path, version=ver),
-                F.lit(stage), "stage"))
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            outs = list(pool.map(summarize, reads))
-        return _union_stages(spark, outs)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-_CK = """CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR)"""
 
 ORACLE_CLONE_DIVERGE = f"""
 WITH base AS (
@@ -172,9 +147,7 @@ stages AS (
   UNION ALL
   SELECT '3_clone_seed', * FROM seeded
 )
-SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  {_CK} AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT stage, {_STATE_SQL}
 FROM stages GROUP BY stage ORDER BY stage
 """
 
@@ -204,8 +177,7 @@ def check_constraints_orders(
     asserted in-query and surfaced in the ``2_meta`` stage row
     (n_rows = version count, checksum = constraints in effect at head).
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="lake_ck_")
-    try:
+    with _scratch_lake(work_dir, "lake_ck_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         base = _orders5(spark, sf_dir)
         V.write_versioned(
@@ -241,15 +213,12 @@ def check_constraints_orders(
         )
         if V.latest_version(t) != 4 or C.table_constraints(t):
             raise AssertionError("post-drop append must commit as v4")
-        head = _pin(spark, _state_summary(
-            V.read_versioned(spark, t), F.lit("1_head"), "stage"))
+        head = _state_summary(V.read_versioned(spark, t), F.lit("1_head"), "stage")
         meta = _meta_row(
             spark, head, "2_meta", V.latest_version(t) + 1,
             str(len(C.table_constraints(t))),
         )
-        return _union_stages(spark, [head, meta])
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _pin_union(spark, [head, meta], "stage")
 
 
 ORACLE_CHECK_CONSTRAINTS = f"""
@@ -266,9 +235,7 @@ head AS (
   UNION ALL
   SELECT o_orderkey, o_custkey, o_orderstatus, -1.0, o_orderpriority FROM sl
 )
-SELECT '1_head' AS stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  {_CK} AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT '1_head' AS stage, {_STATE_SQL}
 FROM head
 UNION ALL
 SELECT '2_meta', CAST(5 AS BIGINT), '0', CAST(0.0 AS DOUBLE)
@@ -296,8 +263,7 @@ def describe_detail_orders(
     instead: ≥1 DV sidecar, ≥1 CDF sidecar, positive live bytes, a
     commit timestamp.
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="lake_detail_")
-    try:
+    with _scratch_lake(work_dir, "lake_detail_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         base = _orders5(spark, sf_dir)
         V.write_versioned(
@@ -326,8 +292,6 @@ def describe_detail_orders(
             ("07_columns", float(len(d["columns"]))),
         ]
         return spark.createDataFrame(rows, "metric string, value double")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 ORACLE_DESCRIBE_DETAIL = """
@@ -398,8 +362,7 @@ def timestamp_as_of_orders(
     """
     import datetime
 
-    tmp = work_dir or tempfile.mkdtemp(prefix="lake_tsasof_")
-    try:
+    with _scratch_lake(work_dir, "lake_tsasof_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         V.write_versioned(
             _orders5(spark, sf_dir).repartitionByRange(6, "o_orderkey"),
@@ -427,19 +390,14 @@ def timestamp_as_of_orders(
             except ValueError:
                 pass
         outs = [
-            _pin(spark, _state_summary(
-                V.read_versioned(spark, t, timestamp=1500.0),
-                F.lit("1_ts_v0"), "stage")),
-            _pin(spark, _state_summary(
-                V.read_versioned(spark, t, timestamp=2500.0),
-                F.lit("2_ts_v1"), "stage")),
-            _pin(spark, _state_summary(
-                V.read_versioned(spark, t, timestamp=3000.0),
-                F.lit("3_ts_v2"), "stage")),
+            _state_summary(
+                V.read_versioned(spark, t, timestamp=ts), F.lit(stage), "stage"
+            )
+            for stage, ts in (
+                ("1_ts_v0", 1500.0), ("2_ts_v1", 2500.0), ("3_ts_v2", 3000.0)
+            )
         ]
-        return _union_stages(spark, outs)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _pin_union(spark, outs, "stage")
 
 
 ORACLE_TIMESTAMP_AS_OF = f"""
@@ -461,9 +419,7 @@ stages AS (
     o_orderpriority
   FROM after_delete
 )
-SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  {_CK} AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT stage, {_STATE_SQL}
 FROM stages GROUP BY stage ORDER BY stage
 """
 
@@ -490,8 +446,7 @@ def vacuum_dry_run_orders(
     The oracle certifies the head state and the 6-file arithmetic
     (``2_meta``: n_rows = dry-run count, checksum = tombstone count).
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="lake_vacdry_")
-    try:
+    with _scratch_lake(work_dir, "lake_vacdry_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         base = _orders5(spark, sf_dir)
         V.write_versioned(
@@ -534,12 +489,9 @@ def vacuum_dry_run_orders(
             raise
         except Exception:
             pass  # vacuumed snapshot is gone — any read error is correct
-        head = _pin(spark, _state_summary(
-            V.read_versioned(spark, t), F.lit("1_head"), "stage"))
+        head = _state_summary(V.read_versioned(spark, t), F.lit("1_head"), "stage")
         meta = _meta_row(spark, head, "2_meta", len(dry_parquet), str(n_tomb))
-        return _union_stages(spark, [head, meta])
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _pin_union(spark, [head, meta], "stage")
 
 
 ORACLE_VACUUM_DRY_RUN = f"""
@@ -551,9 +503,7 @@ WITH head AS (
   FROM orders
   WHERE NOT COALESCE(o_orderkey % 7 = 3, FALSE)
 )
-SELECT '1_head' AS stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  {_CK} AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT '1_head' AS stage, {_STATE_SQL}
 FROM head
 UNION ALL
 SELECT '2_meta', CAST(6 AS BIGINT), '6', CAST(0.0 AS DOUBLE)
@@ -583,8 +533,7 @@ def zorder_scoped_orders(
     and must be scanned).  The oracle certifies full row preservation
     (stage 1) and both range-read results (stages 2-3).
     """
-    tmp = work_dir or tempfile.mkdtemp(prefix="lake_zscope_")
-    try:
+    with _scratch_lake(work_dir, "lake_zscope_") as tmp:
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders").select(
             *_COLS,
@@ -633,25 +582,15 @@ def zorder_scoped_orders(
             raise AssertionError(
                 f"z-order custkey skip regression: {scanned_c}/{total_c}"
             )
-        # three independent summary jobs — overlap them (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def summarize(item) -> DataFrame:
-            df, stage = item
-            return _pin(
-                spark,
-                _state_summary(df.drop("day"), F.lit(stage), "stage"),
-            )
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            outs = list(pool.map(summarize, (
+        outs = [
+            _state_summary(df.drop("day"), F.lit(stage), "stage")
+            for df, stage in (
                 (V.read_versioned(spark, t), "1_head"),
                 (scope_df, "2_scope_keys"),
                 (cust_df, "3_custkey_slice"),
-            )))
-        return _union_stages(spark, outs)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            )
+        ]
+        return _pin_union(spark, outs, "stage")
 
 
 ORACLE_ZORDER_SCOPED = f"""
@@ -673,9 +612,7 @@ stages AS (
   SELECT '3_custkey_slice', base.* FROM base, b
   WHERE base.o_custkey BETWEEN b.minc AND b.minc + (b.maxc - b.minc) // 16
 )
-SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  {_CK} AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT stage, {_STATE_SQL}
 FROM stages GROUP BY stage ORDER BY stage
 """
 

@@ -17,8 +17,6 @@ no-pruning regression a hard failure rather than a quiet slowdown.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +24,14 @@ from pyspark.sql import functions as F
 from ..sources import bloomindex as BI
 from ..sources import versioned as V
 from ..sources.registry import load_table, table_row_count
-from .lakedml import _ck_hash, _pin, _state_summary
+from .lakedml import (
+    _STATE_SQL,
+    _ck_sql,
+    _pin_union,
+    _scratch_lake,
+    _state_aggs,
+    _state_summary,
+)
 from .layout import zorder_versioned
 
 #: Target rows per data file for the scratch lakes.  Worst case for
@@ -66,8 +71,7 @@ def bloom_point_lookup_orders(
     """
     import time as _time
 
-    tmp = work_dir or tempfile.mkdtemp(prefix="bloom_lkp_")
-    try:
+    with _scratch_lake(work_dir, "bloom_lkp_") as tmp:
         t0 = _time.time()
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders")
@@ -93,7 +97,8 @@ def bloom_point_lookup_orders(
         sentinel = (
             orders.agg(F.max("o_custkey")).first()[0] or 0
         ) + 999_983  # absent by construction
-        def probe_one(key) -> DataFrame:
+        outs = []
+        for key in probes + [sentinel]:
             df, scanned, total = BI.read_versioned_bloom_pruned(
                 spark, t, "o_custkey", key
             )
@@ -102,33 +107,10 @@ def bloom_point_lookup_orders(
                     f"bloom skip-path regression: absent key scanned "
                     f"{scanned}/{total} files"
                 )
-            return _pin(
-                spark,
-                df.agg(
-                    F.lit(key).cast("long").alias("o_custkey"),
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum(_ck_hash().cast("decimal(38,0)"))
-                    .cast("string")
-                    .alias("checksum"),
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                    .cast("double")
-                    .alias("sum_price"),
-                ),
+            outs.append(
+                df.agg(F.lit(key).cast("long").alias("o_custkey"), *_state_aggs())
             )
-
-        # the six per-key lookups are independent Spark jobs whose cost
-        # is ~all fixed scheduling + footer overhead; overlap them from
-        # a small driver pool (guide §2.6) — results are pinned frames,
-        # list order (and the final orderBy) keeps output deterministic
-        from concurrent.futures import ThreadPoolExecutor
-        from functools import reduce
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            outs = list(pool.map(probe_one, probes + [sentinel]))
-
-        out = _pin(
-            spark, reduce(DataFrame.unionByName, outs).orderBy("o_custkey")
-        )
+        out = _pin_union(spark, outs, "o_custkey")
         if phase_times is not None:
             # ~all of the registered query's wall time is harness
             # (scratch-lake seed + index build); the probe path a user
@@ -137,11 +119,9 @@ def bloom_point_lookup_orders(
             phase_times["index_build"] = round(t2 - t1, 3)
             phase_times["probe"] = round(_time.time() - t2, 3)
         return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-ORACLE_BLOOM_LOOKUP = """
+ORACLE_BLOOM_LOOKUP = f"""
 WITH probes AS (
   SELECT DISTINCT o_custkey FROM orders WHERE o_custkey IS NOT NULL
   ORDER BY o_custkey LIMIT 5
@@ -154,13 +134,8 @@ all_probes AS (
 SELECT p.o_custkey, CAST(COUNT(o.o_custkey) AS BIGINT) AS n_rows,
   -- unmatched probe rows must sum to NULL, not to the hash of an
   -- all-null-token row the COALESCEs would otherwise fabricate
-  CAST(SUM(CASE WHEN o.o_custkey IS NULL THEN NULL ELSE
-    CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o.o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o.o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o.o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o.o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0)) END) AS VARCHAR) AS checksum,
+  {_ck_sql("CASE WHEN o.o_custkey IS NULL THEN NULL ELSE 1 END", "o")}
+    AS checksum,
   CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
 FROM all_probes p LEFT JOIN orders o ON o.o_custkey = p.o_custkey
 GROUP BY p.o_custkey ORDER BY p.o_custkey
@@ -187,8 +162,7 @@ def zorder_pruning_orders(
     """
     import time as _time
 
-    tmp = work_dir or tempfile.mkdtemp(prefix="zorder_rng_")
-    try:
+    with _scratch_lake(work_dir, "zorder_rng_") as tmp:
         t0 = _time.time()
         t = os.path.join(tmp, "orders_lake")
         orders = load_table(spark, sf_dir, "orders").select(
@@ -232,35 +206,24 @@ def zorder_pruning_orders(
                 b["mind"] + (b["maxd"] - b["mind"]) // 16,
             ),
         }
-        def probe_one(item) -> DataFrame:
-            stage, (col, lo, hi) = item
+        outs = []
+        for stage, (col, lo, hi) in spans.items():
             df, scanned, total = V.read_versioned_pruned(spark, t, col, lo, hi)
             if scanned > (3 * total) // 4:
                 raise AssertionError(
                     f"z-order skip-path regression on {col}: scanned "
                     f"{scanned}/{total} files for a 1/16 range"
                 )
-            return _pin(spark, _state_summary(df, F.lit(stage), "stage"))
-
-        # the two range probes are independent jobs — overlap them
-        # (guide §2.6); the final orderBy("stage") fixes output order
-        from concurrent.futures import ThreadPoolExecutor
-        from functools import reduce
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            outs = list(pool.map(probe_one, spans.items()))
-
-        out = _pin(spark, reduce(DataFrame.unionByName, outs).orderBy("stage"))
+            outs.append(_state_summary(df, F.lit(stage), "stage"))
+        out = _pin_union(spark, outs, "stage")
         if phase_times is not None:
             phase_times["seed"] = round(t1 - t0, 3)
             phase_times["optimize_zorder"] = round(t2 - t1, 3)
             phase_times["probe"] = round(_time.time() - t2, 3)
         return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-ORACLE_ZORDER_PRUNING = """
+ORACLE_ZORDER_PRUNING = f"""
 WITH d AS (
   SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
          o_totalprice,
@@ -279,14 +242,7 @@ stages AS (
   SELECT '02_day_range' AS stage, d.* FROM d, b
   WHERE d.day BETWEEN b.mind AND b.mind + (b.maxd - b.mind) // 16
 )
-SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(SUM(CAST(CAST(('0x' || substr(md5('dml#' || concat_ws(chr(31),
-    COALESCE(CAST(o_orderkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_custkey AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderstatus AS VARCHAR), chr(0) || 'null'),
-    COALESCE(CAST(o_orderpriority AS VARCHAR), chr(0) || 'null'))), 1, 15))
-    AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS checksum,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+SELECT stage, {_STATE_SQL}
 FROM stages GROUP BY stage ORDER BY stage
 """
 

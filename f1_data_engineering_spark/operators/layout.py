@@ -455,10 +455,7 @@ def zorder_versioned_scoped(
     """
     from ..sources import versioned as V
 
-    es = V._entries(path)
-    stats: dict[str, dict] = {}
-    for e in es:
-        stats.update(e.get("file_stats") or {})
+    stats = V._logged_file_stats(V._entries(path))
     snap = V._snapshot_files(path, None)
 
     def may_intersect(f: str) -> bool:

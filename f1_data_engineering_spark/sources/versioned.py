@@ -478,6 +478,16 @@ def _stage_files(
     return names, n_rows, stats, (obs.get if obs is not None and n_rows else {})
 
 
+def _logged_file_stats(es: list[dict]) -> dict[str, dict]:
+    """Per-file stats (``::rows`` and column [min, max]) recorded by the
+    entries ``es``, keyed by data file name; a later entry's stats for
+    a name win."""
+    stats: dict[str, dict] = {}
+    for e in es:
+        stats.update(e.get("file_stats") or {})
+    return stats
+
+
 def log_column_bounds(
     path: str, cols: tuple[str, ...], version: int | None = None
 ) -> dict | None:
@@ -503,9 +513,7 @@ def log_column_bounds(
     es = _entries(path)
     if version is not None:
         es = [e for e in es if e["version"] <= version]
-    stats: dict[str, dict] = {}
-    for e in es:
-        stats.update(e.get("file_stats") or {})
+    stats = _logged_file_stats(es)
     files = _snapshot_files(path, version)
     if not files:
         return None
@@ -860,10 +868,7 @@ def read_versioned_pruned(
     decide which files can be skipped, never which rows qualify; files
     with no logged stats for the column are conservatively scanned.
     """
-    es = _entries(path)
-    stats: dict[str, dict] = {}
-    for e in es:
-        stats.update(e.get("file_stats") or {})
+    stats = _logged_file_stats(_entries(path))
     files = _snapshot_files(path, version)
     if not files:
         raise ValueError(f"no committed data in {path} at version {version}")
@@ -1126,18 +1131,17 @@ def describe_detail(path: str) -> dict:
     head = es[-1]
     live = _snapshot_files(path, None)
     live_set = set(live)
-    stats: dict[str, dict] = {}
-    for e in es:
-        stats.update(e.get("file_stats") or {})
+    stats = _logged_file_stats(es)
     rows = [stats.get(f, {}).get("::rows") for f in live]
     n_rows = sum(r[0] for r in rows if r) if any(rows) else None
     dv_state = _dv_state(es)
     dv_files = [f for s in dv_state for f in s["files"]]
-    in_effect = {s["version"] for s in dv_state}
+    # the in-effect DVs' own counts (a clone's state holds its source's
+    # DVs); one whose targets all left the snapshot deletes nothing
     mor_deleted = sum(
-        e.get("n_rows") or 0
-        for e in es
-        if e["action"] == "dv" and e["version"] in in_effect
+        s.get("n_rows") or 0
+        for s in dv_state
+        if not s.get("applies_to") or live_set.intersection(s["applies_to"])
     )
     cdf_files = [f for e in es for f in e.get("cdf_files", ())]
     live_bytes = retained_bytes = 0
@@ -1270,12 +1274,20 @@ def restore_versioned(
 
 def _restore_entry(path: str, es: list[dict], version: int, what: str) -> dict:
     """The ``restore``-shaped log entry of RESTORE and the CLONE seed:
-    the data files, in-effect deletion vectors and schema of the
-    snapshot at ``version``, by reference.  Raises if any of those
-    files was vacuumed — the entry would commit an unreadable
-    snapshot."""
+    the data files, in-effect deletion vectors, file stats and schema
+    of the snapshot at ``version``, by reference (a clone's log then
+    sizes, skips and describes its files as the source's does).
+    Raises if any of those files was vacuumed — the entry would commit
+    an unreadable snapshot."""
     at = [e for e in es if e["version"] <= version]
-    entry = {"action": "restore", "files": _live_files(at), "dv_state": _dv_state(at)}
+    files = _live_files(at)
+    stats = _logged_file_stats(at)
+    entry = {
+        "action": "restore",
+        "files": files,
+        "dv_state": _dv_state(at),
+        "file_stats": {f: stats[f] for f in files if f in stats},
+    }
     dead = _vacuum_tombstones(path)
     missing = [
         f
@@ -1413,9 +1425,7 @@ def _log_row_count(es: list[dict]) -> int | None:
     count, when a live file has no ``::rows``, a DV has no recorded
     count or targets, or some of a DV's targets left the snapshot (its
     count no longer splits by file)."""
-    stats: dict = {}
-    for e in es:
-        stats.update(e.get("file_stats") or {})
+    stats = _logged_file_stats(es)
     live = _live_files(es)
     per_file = [stats.get(f, {}).get("::rows") for f in live]
     if any(r is None for r in per_file):
@@ -1491,11 +1501,11 @@ def compact_small_files(
         small_rows = target_rows_per_file // 2
     es = _entries(path)
     snap = _snapshot_files(path, None)
-    rows_by_file: dict[str, int] = {}
-    for e in es:
-        for f, st in (e.get("file_stats") or {}).items():
-            if "::rows" in st:
-                rows_by_file[f] = st["::rows"][0]
+    rows_by_file = {
+        f: st["::rows"][0]
+        for f, st in _logged_file_stats(es).items()
+        if "::rows" in st
+    }
     unstatted = [f for f in snap if f not in rows_by_file]
     if unstatted:
         # legacy entries without ::rows — one Spark job counts rows

@@ -70,6 +70,25 @@ def test_clone_carries_mor_dvs_and_constraints(spark, lake, tmp_path):
         )
 
 
+def test_clone_describes_sizes_and_prunes_like_its_source(spark, lake, tmp_path):
+    """The clone seed carries the source's file stats, and DESCRIBE
+    DETAIL counts the in-effect DVs by their own row counts, so the
+    clone reports what it reads before and after its own MoR delete."""
+    D.delete_where_mor(spark, lake, "k < 10")
+    tgt = str(tmp_path / "dev")
+    V.clone_versioned(lake, tgt)
+    d = V.describe_detail(tgt)
+    assert (d["num_rows"], d["mor_deleted_rows"]) == (100, 10)
+    D.delete_where_mor(spark, tgt, "k >= 90")
+    d = V.describe_detail(tgt)
+    assert (d["num_rows"], d["mor_deleted_rows"]) == (100, 20)
+    assert V.read_versioned(spark, tgt).count() == 80
+    assert V._log_row_count(V._entries(tgt)) == 80
+    # four range files of 25 keys: the stats skip all but the first
+    df, scanned, total = V.read_versioned_pruned(spark, tgt, "k", 10, 20)
+    assert (scanned, total) == (1, 4) and df.count() == 11
+
+
 def test_clone_divergence_is_isolated(spark, lake, tmp_path):
     tgt = str(tmp_path / "dev")
     V.clone_versioned(lake, tgt)
